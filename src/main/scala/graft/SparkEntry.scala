@@ -19,14 +19,14 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ TextOps.queries ++ StoreQueries.queries ++
-      CatalogQueries.queries ++ Extended.queries ++ Multimodal.queries
+    Relational.queries ++ TextOps.queries ++ CatalogQueries.queries ++
+      Extended.queries ++ Multimodal.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys (non-SQL-expressible ops,
     * e.g. HLL sketches / xxhash64 signatures) get a weaker rows-only
     * check. */
   def oracleSql: Map[String, String] =
-    RelationalOracles.oracles ++ TextOps.oracles ++ StoreQueries.oracles ++
-      CatalogQueries.oracles ++ Extended.oracles ++ Multimodal.oracles
+    RelationalOracles.oracles ++ TextOps.oracles ++ CatalogQueries.oracles ++
+      Extended.oracles ++ Multimodal.oracles
 }

@@ -21,7 +21,6 @@ object Verify {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
       .getOrCreate()

@@ -232,8 +232,8 @@ class GraftTable(tableName: String, val tableDir: File, val meta: TableMeta,
 }
 
 /** V1 `sources.Filter` → per-key-dimension interval sets, for region
-  * pruning (same interval domain as [[graft.prune.KeyRanges]], which
-  * covers the Catalyst-expression face of the same capability). */
+  * pruning: the one predicate analyzer over the interval domain of
+  * [[graft.prune.KeyRanges]]. */
 object GraftFilters {
 
   def intervals(filters: Seq[sources.Filter],

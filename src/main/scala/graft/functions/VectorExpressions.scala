@@ -332,9 +332,11 @@ object VectorKernels {
     // node churn were the verify stages' dominant allocation (r13;
     // visible as 0.5-2.5 s jvmGCTime per pass). Same contract as the
     // HashSet form: count of big-side ELEMENTS (duplicates included)
-    // whose value occurs in the small side.
+    // whose value occurs in the small side. The capacity check runs in
+    // Long and the doubling is checked, so a huge `ns` throws instead of
+    // overflowing into a table too small for the insert loop to finish.
     var cap = 4
-    while (cap < ns * 2) cap <<= 1
+    while (cap < ns.toLong * 2) cap = Math.multiplyExact(cap, 2)
     val table = new Array[Long](cap)
     val mask = cap - 1
     var hasZero = false

@@ -1,21 +1,26 @@
 package graft.prune
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal}
+import org.apache.spark.sql.graftshim.ColumnExpr
+import org.apache.spark.sql.types.DataType
+import graft.catalog.GraftFilters
 import graft.codec.KeyCodec
 
-/** Per-dimension interval analysis of a Catalyst predicate, for region
-  * pruning over key-sorted storage.
+/** The interval domain of region pruning over key-sorted storage.
   *
-  * Capability port of the reference's "critical point" partition pruning
-  * (Heracles `HBaseCriticalPoint.scala` + `PartialPredicateOperations
-  * .scala` in /root/reference — per key dimension, collect comparison/IN
-  * literals, build qualifying ranges, intersect with region boundaries).
-  * Rebuilt as abstract interpretation over an interval domain: each key
-  * dimension gets a disjoint interval set; AND intersects, OR unions,
-  * anything unanalyzable widens to ⊤ (sound — never prunes a region that
-  * could match). Bounds are compared in the order-preserving encoded
-  * byte space, so one comparator covers all ten key types.
+  * Each key dimension of a predicate maps to a set of intervals over
+  * order-preserving encoded key bytes ([[KeyCodec]]), so one comparator
+  * covers all ten key types; a region survives when every constrained
+  * dimension's [min,max] overlaps one of its intervals ([[survives]]).
+  * [[GraftFilters]] builds these sets from the `sources.Filter`s a
+  * catalog scan receives (AND intersects, OR unions, anything
+  * unanalyzable widens to ⊤ — sound, it never prunes a region that
+  * could match), and [[graft.catalog.GraftDelete]] reuses the domain.
+  * This is the rebuild of the reference's "critical point" partition
+  * pruning (Heracles `HBaseCriticalPoint.scala` +
+  * `PartialPredicateOperations.scala`).
   */
 object KeyRanges {
 
@@ -172,238 +177,26 @@ object KeyRanges {
     }.toList.filterNot(_.isEmpty)
   }
 
-  /** dims: key column name (lowercase) → (dimension index, type). */
+  /** Per-dimension interval sets of a resolved Catalyst predicate,
+    * derived by the catalog's own analyzer: constant subexpressions
+    * (the analyzer's `Cast(literal)` wrappers) are folded, each conjunct
+    * is translated to the `sources.Filter` a scan would receive, and
+    * [[GraftFilters.intervals]] does the rest. Scans never call this —
+    * they receive the translated filters directly; it measures pruning
+    * analysis in isolation (`perfbench`'s `prune.analyze_us`).
+    * dims: key column name (lowercase) → (dimension index, type). */
   def analyze(pred: Expression, dims: Map[String, (Int, DataType)])
-      : Map[Int, IvSet] = pred match {
-    case And(l, r) =>
-      val (a, b) = (analyze(l, dims), analyze(r, dims))
-      (a.keySet ++ b.keySet).map { d =>
-        d -> intersectSets(a.getOrElse(d, List(full)), b.getOrElse(d, List(full)))
-      }.toMap
-    case Or(l, r) =>
-      val (a, b) = (analyze(l, dims), analyze(r, dims))
-      // only dims constrained on BOTH branches stay constrained
-      (a.keySet intersect b.keySet).map { d => d -> (a(d) ++ b(d)) }.toMap
-    case Not(g) => negAnalyze(g, dims)
-    case e => analyzeLeaf(e, dims)
-  }
-
-  /** Sound over-approximation of ¬pred: recurse structurally (negating
-    * `analyze`'s over-approximate output would be unsound); anything
-    * unrecognized widens to ⊤. Keys are non-null, which resolves the
-    * 3-valued cases (¬IsNull ≡ true, ¬IsNotNull ≡ false, <=> ≡ =). */
-  private def negAnalyze(pred: Expression,
-      dims0: Map[String, (Int, DataType)]): Map[Int, IvSet] = {
-    implicit val dims: Map[String, (Int, DataType)] = dims0
-    def excludePoint(d: Int, dt: DataType, v: Any): Map[Int, IvSet] =
-      enc(dt, v).map(b => Map(d -> List(
-        Iv(None, false, Some(b), false),
-        Iv(Some(b), false, None, false)))).getOrElse(Map.empty)
-    pred match {
-      case Not(g) => analyze(g, dims0)
-      case And(l, r) => // ¬(l∧r) = ¬l ∨ ¬r
-        val (a, b) = (negAnalyze(l, dims0), negAnalyze(r, dims0))
-        (a.keySet intersect b.keySet).map(d => d -> (a(d) ++ b(d))).toMap
-      case Or(l, r) => // ¬(l∨r) = ¬l ∧ ¬r
-        val (a, b) = (negAnalyze(l, dims0), negAnalyze(r, dims0))
-        (a.keySet ++ b.keySet).map { d =>
-          d -> intersectSets(a.getOrElse(d, List(full)),
-            b.getOrElse(d, List(full)))
-        }.toMap
-      case eq @ EqualTo(_, _) => eq match {
-        case KeyLit(d, dt, v, _) => excludePoint(d, dt, v)
-        case _ => Map.empty
-      }
-      case ens @ EqualNullSafe(_, _) => ens match {
-        case KeyLit(d, dt, v, _) => excludePoint(d, dt, v)
-        case _ => Map.empty // ¬(k <=> NULL) ≡ k IS NOT NULL ≡ true
-      }
-      // operator-level negation; analyzeLeaf handles either orientation
-      case GreaterThan(l, r) => analyzeLeaf(LessThanOrEqual(l, r), dims0)
-      case GreaterThanOrEqual(l, r) => analyzeLeaf(LessThan(l, r), dims0)
-      case LessThan(l, r) => analyzeLeaf(GreaterThanOrEqual(l, r), dims0)
-      case LessThanOrEqual(l, r) => analyzeLeaf(GreaterThan(l, r), dims0)
-      case In(KeyAttr(a), list) if list.forall {
-            case FoldableLit(_) => true; case _ => false } =>
-        // complement built directly (gaps between sorted points) —
-        // folding per-point exclusions is quadratic in the list size;
-        // unencodable values are skipped (excluding fewer points is
-        // sound)
-        dims0.get(a.name.toLowerCase).map { case (d, dt) =>
-          val pts = list.collect { case FoldableLit(v) => v }
-            .flatMap(v => enc(dt, v))
-          Map(d -> complementOfPoints(pts))
-        }.getOrElse(Map.empty)
-      case IsNull(a: Attribute) if dims0.contains(a.name.toLowerCase) =>
-        Map.empty // keys non-null → ¬IsNull always true
-      case IsNotNull(a: Attribute) if dims0.contains(a.name.toLowerCase) =>
-        Map(dims0(a.name.toLowerCase)._1 -> Nil) // provably false
-      case StartsWith(KeyAttr(a), FoldableLit(p)) =>
-        dims0.get(a.name.toLowerCase).collect { case (d, StringType) =>
-          val lo = p.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          Map(d -> (Iv(None, false, Some(lo), false) ::
-            Option(KeyCodec.successor(lo))
-              .map(h => Iv(Some(h), true, None, false)).toList))
-        }.getOrElse(Map.empty)
-      case _ => Map.empty
+      : Map[Int, IvSet] = {
+    val folded = pred.transformUp {
+      case e if e.foldable && !e.isInstanceOf[Literal] =>
+        try Literal(e.eval(), e.dataType) catch { case NonFatal(_) => e }
     }
-  }
-
-  /** Convert a literal (in its own Catalyst type) to the key column's
-    * native type, exactly; None if lossy or incompatible (→ no pruning,
-    * sound). Handles the implicit numeric widening Catalyst applies to
-    * mixed-type comparisons. */
-  private def convert(dt: DataType, v: Any): Option[Any] = (dt, v) match {
-    case (_, null) => None
-    case (LongType | TimestampType, x: Long) => Some(x)
-    case (LongType | TimestampType, x: Int) => Some(x.toLong)
-    case (LongType | TimestampType, x: Short) => Some(x.toLong)
-    case (LongType | TimestampType, x: Byte) => Some(x.toLong)
-    case (IntegerType | DateType, x: Int) => Some(x)
-    case (IntegerType | DateType, x: Long) if x.isValidInt => Some(x.toInt)
-    case (IntegerType | DateType, x: Short) => Some(x.toInt)
-    case (IntegerType | DateType, x: Byte) => Some(x.toInt)
-    case (ShortType, x: Short) => Some(x)
-    case (ShortType, x: Int) if x >= Short.MinValue && x <= Short.MaxValue =>
-      Some(x.toShort)
-    case (ByteType, x: Byte) => Some(x)
-    case (DoubleType, x: Double) => Some(x)
-    case (DoubleType, x: Float) => Some(x.toDouble)
-    case (DoubleType, x: Int) => Some(x.toDouble)
-    case (DoubleType, x: Long) => Some(x.toDouble)
-    case (DoubleType, x: java.math.BigDecimal) => Some(x.doubleValue)
-    case (DoubleType, x: org.apache.spark.sql.types.Decimal) =>
-      Some(x.toDouble)
-    case (FloatType, x: Float) => Some(x)
-    case (FloatType, x: Double) => Some(x.toFloat)
-    case (FloatType, x: Int) => Some(x.toFloat)
-    case (StringType, x) => Some(x.toString)
-    case (BooleanType, x: Boolean) => Some(x)
-    case _ => None
-  }
-
-  private def enc(dt: DataType, v: Any): Option[Array[Byte]] =
-    convert(dt, v).flatMap(cv =>
-      try Some(KeyCodec.encode(dt, cv)) catch { case _: Exception => None })
-
-  /** Attribute possibly wrapped in a widening Cast (Catalyst inserts
-    * these for mixed-type comparisons). */
-  private object KeyAttr {
-    def unapply(e: Expression): Option[Attribute] = e match {
-      case a: Attribute => Some(a)
-      case Cast(a: Attribute, _, _, _) => Some(a)
-      case _ => None
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case _ => Seq(e)
     }
-  }
-
-  /** Any foldable (constant) expression, evaluated — covers plain
-    * literals and the analyzer's Cast(Literal) wrappers. */
-  private object FoldableLit {
-    def unapply(e: Expression): Option[Any] = e match {
-      case _: Attribute => None
-      case _ if e.foldable =>
-        try Option(e.eval(null)) catch { case _: Exception => None }
-      case _ => None
-    }
-  }
-
-  private object KeyLit {
-    /** Matches cmp(attr, constant) in either orientation for a key dim;
-      * yields (dim, type, constant value, flipped). */
-    def unapply(e: Expression)(implicit dims: Map[String, (Int, DataType)])
-        : Option[(Int, DataType, Any, Boolean)] = e match {
-      case BinaryComparison(KeyAttr(a), FoldableLit(v)) =>
-        dims.get(a.name.toLowerCase).map { case (d, dt) => (d, dt, v, false) }
-      case BinaryComparison(FoldableLit(v), KeyAttr(a)) =>
-        dims.get(a.name.toLowerCase).map { case (d, dt) => (d, dt, v, true) }
-      case _ => None
-    }
-  }
-
-  private def analyzeLeaf(e: Expression,
-      dims0: Map[String, (Int, DataType)]): Map[Int, IvSet] = {
-    implicit val dims: Map[String, (Int, DataType)] = dims0
-    e match {
-      case eq @ EqualTo(_, _) => eq match {
-        case KeyLit(d, dt, v, _) =>
-          enc(dt, v).map(b =>
-            Map(d -> List(Iv(Some(b), true, Some(b), true)))).getOrElse(Map.empty)
-        case _ => Map.empty
-      }
-      case gt @ GreaterThan(_, _) => gt match {
-        case KeyLit(d, dt, v, flipped) => enc(dt, v).map { b =>
-          val iv = if (!flipped) Iv(Some(b), false, None, false)
-                   else Iv(None, false, Some(b), false)
-          Map(d -> List(iv))
-        }.getOrElse(Map.empty)
-        case _ => Map.empty
-      }
-      case ge @ GreaterThanOrEqual(_, _) => ge match {
-        case KeyLit(d, dt, v, flipped) => enc(dt, v).map { b =>
-          val iv = if (!flipped) Iv(Some(b), true, None, false)
-                   else Iv(None, false, Some(b), true)
-          Map(d -> List(iv))
-        }.getOrElse(Map.empty)
-        case _ => Map.empty
-      }
-      case lt @ LessThan(_, _) => lt match {
-        case KeyLit(d, dt, v, flipped) => enc(dt, v).map { b =>
-          val iv = if (!flipped) Iv(None, false, Some(b), false)
-                   else Iv(Some(b), false, None, false)
-          Map(d -> List(iv))
-        }.getOrElse(Map.empty)
-        case _ => Map.empty
-      }
-      case le @ LessThanOrEqual(_, _) => le match {
-        case KeyLit(d, dt, v, flipped) => enc(dt, v).map { b =>
-          val iv = if (!flipped) Iv(None, false, Some(b), true)
-                   else Iv(Some(b), true, None, false)
-          Map(d -> List(iv))
-        }.getOrElse(Map.empty)
-        case _ => Map.empty
-      }
-      case In(KeyAttr(a), list) if list.forall {
-            case FoldableLit(_) => true; case _ => false } =>
-        dims0.get(a.name.toLowerCase).map { case (d, dt) =>
-          val ivs = list.flatMap { case FoldableLit(v) =>
-            enc(dt, v).map(b => Iv(Some(b), true, Some(b), true))
-          case _ => None }.toList
-          if (ivs.length == list.length) Map(d -> ivs) else Map.empty[Int, IvSet]
-        }.getOrElse(Map.empty)
-      case InSet(KeyAttr(a), vs) if !vs.contains(null) =>
-        dims0.get(a.name.toLowerCase).map { case (d, dt) =>
-          val ivs = vs.toList.flatMap(v =>
-            enc(dt, v).map(b => Iv(Some(b), true, Some(b), true)))
-          if (ivs.length == vs.size) Map(d -> ivs) else Map.empty[Int, IvSet]
-        }.getOrElse(Map.empty)
-      // key columns are declared non-null → IS NULL proves empty
-      case IsNull(a: Attribute) if dims0.contains(a.name.toLowerCase) =>
-        Map(dims0(a.name.toLowerCase)._1 -> Nil)
-      // keys non-null → <=> v ≡ = v; <=> NULL is provably false
-      case EqualNullSafe(KeyAttr(a), Literal(null, _)) =>
-        dims0.get(a.name.toLowerCase)
-          .map { case (d, _) => Map(d -> (Nil: IvSet)) }.getOrElse(Map.empty)
-      case EqualNullSafe(Literal(null, _), KeyAttr(a)) =>
-        dims0.get(a.name.toLowerCase)
-          .map { case (d, _) => Map(d -> (Nil: IvSet)) }.getOrElse(Map.empty)
-      case ens @ EqualNullSafe(_, _) => ens match {
-        case KeyLit(d, dt, v, _) =>
-          enc(dt, v).map(b =>
-            Map(d -> List(Iv(Some(b), true, Some(b), true))))
-            .getOrElse(Map.empty)
-        case _ => Map.empty
-      }
-      // LIKE 'p%' on a string key → [utf8(p), successor(utf8(p)))
-      case StartsWith(KeyAttr(a), FoldableLit(p)) =>
-        dims0.get(a.name.toLowerCase).collect { case (d, StringType) =>
-          val lo = p.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          Map(d -> List(Iv(Some(lo), true,
-            Option(KeyCodec.successor(lo)), false)))
-        }.getOrElse(Map.empty)
-      case _ => Map.empty // unanalyzable → no constraint (sound)
-    }
+    GraftFilters.intervals(
+      conjuncts(folded).flatMap(ColumnExpr.pushedFilter), dims)
   }
 
   /** Prune: keep file iff every constrained dim's [min,max] overlaps

@@ -17,4 +17,10 @@ object ColumnExpr {
       truncate: Int): String =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .showString(numRows, truncate, vertical = false)
+
+  /** `DataSourceStrategy.translateFilter` is `protected[sql]`: the
+    * Catalyst → `sources.Filter` translation scan pushdown applies. */
+  def pushedFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false)
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 
 /** One shared local session for all suites (Test/fork := true → one JVM). */
 object TestSpark {
@@ -27,4 +28,12 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Regions the plan's `GraftScan` node reads after pruning (the
+    * `regions=N` of its explain line). */
+  def regionsScanned(df: DataFrame): Int = {
+    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    "GraftScan \\S+ regions=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toInt)
+      .getOrElse(throw new AssertionError(s"no GraftScan node in:\n$p"))
+  }
 }

@@ -77,12 +77,22 @@ class PlanShapeSpec extends AnyFunSuite {
     // not an unpartitioned Window.orderBy
   }
 
+  // ---- the catalog's 16-region orders_t fixture (keyed by o_orderkey):
+  // pruning counts read off the `GraftScan … regions=N` node, answers
+  // checked against the plain parquet filter
+
+  private lazy val orders = spark.read.parquet(s"$sf/orders.parquet")
+  private lazy val ordersT: String = {
+    CatalogQueries.pointLookup(spark, sf) // builds the table on demand
+    s"graft.sf_${math.abs(sf.hashCode)}.orders_t"
+  }
+  import TestSpark.regionsScanned
+  private def face(name: String): DataFrame =
+    graft.SparkEntry.queries(name)(spark, sf)
+
   test("catalog point query scans exactly one pruned region") {
-    CatalogQueries.pointLookup(spark, sf).collect() // builds table on demand
-    val p = plan(spark.sql(
-      s"SELECT * FROM graft.sf_${math.abs(sf.hashCode)}.orders_t " +
-        "WHERE o_orderkey = 100"))
-    assert(p.contains("regions=1"), s"expected 1-region scan:\n$p")
+    val df = spark.sql(s"SELECT * FROM $ordersT WHERE o_orderkey = 100")
+    assert(regionsScanned(df) == 1, s"expected 1-region scan:\n${plan(df)}")
   }
 
   test("catalog Q5: no fact-side shuffle, dims broadcast, stats flow") {
@@ -111,10 +121,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("catalog scans are columnar: batches feed codegen via ColumnarToRow") {
-    val t = s"graft.sf_${math.abs(sf.hashCode)}.orders_t"
-    CatalogQueries.pointLookup(spark, sf).collect() // builds table on demand
     val df = spark.sql(
-      s"SELECT o_orderstatus, sum(o_totalprice) AS s FROM $t GROUP BY 1")
+      s"SELECT o_orderstatus, sum(o_totalprice) AS s FROM $ordersT GROUP BY 1")
     df.collect()
     val p = plan(df)
     assert(p.contains("ColumnarToRow"),
@@ -124,62 +132,56 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("catalog full scan reads all regions; key IS NULL reads none") {
-    val t = s"graft.sf_${math.abs(sf.hashCode)}.orders_t"
-    CatalogQueries.pointLookup(spark, sf).collect()
-    val full = plan(spark.sql(s"SELECT * FROM $t"))
-    assert(full.contains("regions=16"), full)
-    val none = plan(spark.sql(s"SELECT * FROM $t WHERE o_orderkey IS NULL"))
-    assert(none.contains("regions=0"), none)
+    val full = spark.sql(s"SELECT * FROM $ordersT")
+    assert(regionsScanned(full) == 16, plan(full))
+    val none = spark.sql(s"SELECT * FROM $ordersT WHERE o_orderkey IS NULL")
+    assert(regionsScanned(none) == 0, plan(none))
   }
 
-  // ---- the store_* library faces (RegionStore): same plan discipline
-  // as the catalog faces — pruning counts, ordered disjoint regions,
-  // pushed residuals, partial aggregation
-
-  import org.apache.spark.sql.functions._
-  import graft.store.RegionStore
+  // ---- the store_* faces: the catalog point/range/key-agg queries
+  // under their store names, over the same fixture
 
   test("store_range_scan prunes regions; residual pushed to parquet") {
-    val dir = StoreQueries.ordersStore(spark, sf)
-    val (_, info) = RegionStore.scanWithInfo(spark, dir,
-      Some(col("o_orderkey").between(100, 200)))
-    assert(info.total == 16, s"fixture should hold 16 regions: $info")
-    assert(info.selected <= 2,
-      s"a 100-key range must touch at most 2 of 16 regions: $info")
-    val p = plan(StoreQueries.rangeScan(spark, sf))
-    // the residual still reaches parquet row-group/page pruning
-    assert(p.contains("PushedFilters") &&
-      p.contains("GreaterThanOrEqual(o_orderkey,100)"), p)
+    val df = face("store_range_scan")
+    val p = plan(df)
+    assert(regionsScanned(df) <= 2,
+      s"a 100-key range must touch at most 2 of 16 regions:\n$p")
+    // the pushed filters still reach parquet row-group/page pruning
+    assert(p.contains("GreaterThanOrEqual(o_orderkey,100)"), p)
+    assert(df.count() == orders.filter("o_orderkey BETWEEN 100 AND 200").count())
   }
 
   test("store_key_agg: OR-of-ranges pruning + partial aggregation") {
-    val dir = StoreQueries.ordersStore(spark, sf)
-    val (_, info) = RegionStore.scanWithInfo(spark, dir,
-      Some(col("o_orderkey") <= 500 || col("o_orderkey") > 1400))
+    val df = face("store_key_agg")
+    val p = plan(df)
     // both ranges prune: the middle of the keyspace is never read
-    assert(info.selected < info.total,
-      s"OR-of-ranges should skip interior regions: $info")
-    val p = plan(StoreQueries.keyAgg(spark, sf))
+    assert(regionsScanned(df) < 16,
+      s"OR-of-ranges should skip interior regions:\n$p")
     assert(p.contains("partial_"), s"no partial aggregation in:\n$p")
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
   }
 
   test("store point lookup is recognized and touches one region") {
-    val dir = StoreQueries.ordersStore(spark, sf)
-    val (_, info) = RegionStore.scanWithInfo(spark, dir,
-      Some(col("o_orderkey") === 100))
-    assert(info.pointLookup && info.selected == 1, info.toString)
+    val df = face("store_point_lookup")
+    assert(regionsScanned(df) == 1, plan(df))
+    assert(df.count() == 1)
   }
 
   test("store fixture regions are key-ordered and disjoint") {
-    val dir = StoreQueries.ordersStore(spark, sf)
-    val m = RegionStore.readManifest(spark, dir)
-    val sorted = m.regions.sortWith((a, b) =>
-      graft.codec.KeyCodec.compare(a.mins.head, b.mins.head) < 0)
+    val dir = spark.table(ordersT).queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+        r.table.asInstanceOf[graft.catalog.GraftTable].tableDir
+    }.get
+    assert(graft.catalog.TableMeta.load(dir).keyCols == Seq("o_orderkey"))
+    val regions = graft.catalog.TableMeta.loadRegions(dir)
+    assert(regions.size == 16 && regions.map(_.rows).sum == orders.count())
+    def key(h: String) = graft.codec.KeyCodec.fromHex(h)
+    val sorted = regions.sortWith((a, b) =>
+      graft.codec.KeyCodec.compare(key(a.mins.head), key(b.mins.head)) < 0)
     sorted.sliding(2).foreach {
       case Seq(a, b) =>
-        assert(graft.codec.KeyCodec.compare(a.maxs.head, b.mins.head) < 0,
-          "store regions overlap — ordering contract broken")
+        assert(graft.codec.KeyCodec.compare(key(a.maxs.head), key(b.mins.head)) < 0,
+          "fixture regions overlap — ordering contract broken")
       case _ =>
     }
   }

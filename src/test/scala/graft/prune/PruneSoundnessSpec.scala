@@ -184,4 +184,24 @@ class PruneSoundnessSpec extends AnyFunSuite {
       assert(surviving.exists(_.contains(target)))
     }
   }
+
+  test("a resolved Catalyst predicate prunes exactly like its pushed filters") {
+    import org.apache.spark.sql.catalyst.expressions._
+    val k1 = AttributeReference("k1", IntegerType)()
+    val k2 = AttributeReference("K2", IntegerType)()
+    // the analyzer's Cast(literal) wrapper is folded before translation
+    val pred = And(EqualTo(k1, Cast(Literal(3L), IntegerType)),
+      Or(LessThan(k2, Literal(-10)), Not(LessThan(k2, Literal(20)))))
+    val pushed = Seq(sources.EqualTo("k1", 3), sources.Or(
+      sources.LessThan("K2", -10), sources.Not(sources.LessThan("K2", 20))))
+    val viaCatalyst = KeyRanges.analyze(pred, dims)
+    val viaFilters = GraftFilters.intervals(pushed, dims)
+    assert(viaCatalyst.keySet == Set(0, 1))
+    def enc(i: Int) = KeyCodec.encode(IntegerType, i)
+    for (lo1 <- -30 to 30 by 3; lo2 <- -30 to 30 by 3; w <- Seq(0, 4, 40)) {
+      val (mins, maxs) = (Seq(enc(lo1), enc(lo2)), Seq(enc(lo1 + w), enc(lo2 + w)))
+      assert(KeyRanges.survives(viaCatalyst, mins, maxs) ==
+        KeyRanges.survives(viaFilters, mins, maxs), s"$lo1 $lo2 $w")
+    }
+  }
 }
