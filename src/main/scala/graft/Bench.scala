@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -67,10 +68,10 @@ object Bench {
     // footers — so the timed pass below measures steady-state query
     // latency, the same regime the DuckDB oracle timings are taken in.
     // Failures are ignored here; the timed pass reports them loudly.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (selected(name))
-        try fn(spark, sfDir).count() catch { case _: Throwable => }
+        try fn(spark, sfDir).count() catch { case NonFatal(_) => }
     }
     // a failing query reports -1 s, loudly: silent swallowing would let a
     // broken query keep "benchmarking"
@@ -94,7 +95,7 @@ object Bench {
         try {
           fn(spark, sfDir).count()
           (name, (System.nanoTime() - t0) / 1e9, l0)
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] FAILED $name: ${e.getMessage}")
           (name, -1.0, l0)
         }
@@ -140,7 +141,7 @@ object Bench {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("BENCH_LOCAL.json"), json + "\n")
         true
-      } catch { case _: Throwable => false }
+      } catch { case NonFatal(_) => false }
     }
     if (!persisted) println(json)
     val top = results.sortBy(-_._2).take(25)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Single-query profiling aid: times one registered query on the bench
   * session config (warm pass first, so catalog builds and JIT are out
@@ -95,7 +96,7 @@ object Prof {
         val m = sc.getClass.getMethod("listenerBus")
         val bus = m.invoke(sc)
         bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(50) }
+      } catch { case NonFatal(_) => Thread.sleep(50) }
       println(f"[prof] $name pass$i $dt%.3f s, ${stages.size} stages")
       val tab = stages.synchronized(stages.toSeq).sortBy(-_.wallMs)
       println(f"[prof] ${"id"}%5s ${"wall_ms"}%8s ${"task_ms"}%8s " +
@@ -123,7 +124,7 @@ object Prof {
       oos.close()
       println(s"[prof] $name serialized final-plan RDD graph: " +
         s"${bos.size()} bytes")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       println(s"[prof] $name rdd serialize probe failed: ${e.getMessage}")
     }
     println(s"[prof] $name planning phases (ms): " +

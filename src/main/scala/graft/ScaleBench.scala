@@ -5,7 +5,7 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextOps
+import graft.operators.{T, TextOps}
 
 /** Scaling-curve bench: amplifies the provided sf parquet tables by an
   * integer factor (key-shifted replicas — every value derives from the
@@ -41,7 +41,7 @@ object ScaleBench {
 
   private def stride(s: SparkSession, dir: String, table: String,
       col0: String): Long =
-    s.read.parquet(s"$dir/$table.parquet")
+    T(s, dir, table)
       .agg(max(col(col0))).head.getLong(0) + 1L
 
   /** Write the amplified table layout (skips tables already present,
@@ -76,7 +76,7 @@ object ScaleBench {
     plans.foreach { case (t, shifts) =>
       val target = s"$outDir/$t.parquet"
       if (!new File(target).exists()) {
-        val src = s.read.parquet(s"$srcDir/$t.parquet")
+        val src = T(s, srcDir, t)
         val f = if (shifts().isEmpty) 1 else factor
         amplify(s, src, f, shifts()).write.parquet(target)
         System.err.println(s"[scale] generated $t x$f")
@@ -201,7 +201,7 @@ object ScaleBench {
     * the corpus's scaling behavior. */
   private val NearDup: (SparkSession, String) => DataFrame = (s, d) =>
     TextOps.minhashVerifiedPairs(
-      s.read.parquet(s"$d/documents.parquet"), idBound = None)
+      T(s, d, "documents"), idBound = None)
 
   /** Exact substring dedup shares NearDup's constraint: byte-identical
     * replicas would make EVERY W-token window corpus-duplicated (count
@@ -211,7 +211,7 @@ object ScaleBench {
     * run merge should grow ~linearly. */
   private val SubstringDedup: (SparkSession, String) => DataFrame =
     (s, d) => TextOps.substringDedup(
-      s.read.parquet(s"$d/documents.parquet"))
+      T(s, d, "documents"))
 
   /** Winnowing fingerprint extraction, UNBOUNDED: a pure map-side pass
     * (per-document selection, no shuffle at all), so it is safe on the
@@ -219,13 +219,13 @@ object ScaleBench {
     * per-doc work — and should scale ~linearly with wall-clock well
     * under data growth (32 lanes absorb it). */
   private val WinnowFull: (SparkSession, String) => DataFrame = (s, d) =>
-    TextOps.winnowFingerprints(s.read.parquet(s"$d/documents.parquet"))
+    TextOps.winnowFingerprints(T(s, d, "documents"))
 
   /** MOSS pair detection shares NearDup's replication caveat (replicas
     * share every fingerprint → pairs blow up ×factor², an artifact), so
     * it measures on the natural sf0.01 → sf0.1 corpora. */
   private val WinnowPairs: (SparkSession, String) => DataFrame = (s, d) =>
-    TextOps.winnowPairs(s.read.parquet(s"$d/documents.parquet"))
+    TextOps.winnowPairs(T(s, d, "documents"))
 
   /** Duplication-density-preserving amplifier for the dedup/screen
     * family. Key-shifted replicas carry byte-identical texts, so every
@@ -247,7 +247,7 @@ object ScaleBench {
     new File(outDir).mkdirs()
     val target = s"$outDir/documents.parquet"
     if (!new File(target).exists()) {
-      val src = s.read.parquet(s"$srcDir/documents.parquet")
+      val src = T(s, srcDir, "documents")
       val kDoc = stride(s, srcDir, "documents", "doc_id")
       val reps = s.range(factor).select(col("id").as("_rep"))
       src.crossJoin(reps).select(

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -43,11 +44,11 @@ object Verify {
         try Files.writeString(
           Paths.get(outDir, name, "_canon.json"),
           CanonHash.sidecarJson(spark.read.parquet(s"$outDir/$name")))
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name canon sidecar failed: " +
             e.getMessage)
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
         failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         val qd = Paths.get(outDir, name)
@@ -55,7 +56,7 @@ object Verify {
           Files.createDirectories(qd)
           Files.writeString(qd.resolve("_FAILED"),
             failures(name).take(4000))
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.codec.KeyCodec
+import scala.util.control.NonFatal
 
 /** `CONVERT TO GRAFT` — onboard an existing directory of parquet files
   * as a graft table WITHOUT rewriting the sorted ones (the Delta
@@ -194,7 +195,7 @@ object GraftConvert {
       scans.map(s => (s.path,
         if (s.rows == 0) "empty"
         else if (s.sorted) "linked" else "rewritten", s.rows))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       try cat.dropTable(ident) catch { case _: Exception => () }
       throw e
     }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.{LoadData, LogicalPlan}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** The literal `LOAD DATA [LOCAL] INPATH '<path>' INTO TABLE t`
   * statement face — the exact syntax the reference accepts
@@ -457,7 +458,7 @@ case class GraftCopyIntoCommand(catalogName: String, table: String,
         todo.foreach { case (f, _) => status(f) = "loaded" }
         todo = Seq.empty
       } catch {
-        case e: Throwable
+        case NonFatal(e)
             if causes(e).exists(_.isInstanceOf[GraftCopyConflictException]) =>
           // someone else just loaded >=1 of these files; their keys are
           // in the ledger now — drop them and retry the remainder

@@ -9,6 +9,7 @@ import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import scala.util.control.NonFatal
 
 /** SQL-visible maintenance procedures for the graft catalog, on the
   * Spark-4 V2 `ProcedureCatalog` API:
@@ -834,7 +835,7 @@ object GraftProcedures {
             regions.map(_.copy(srcMaxId = -1L)))
           regions.size
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         // a failed clone must not leave a half-linked table behind
         try cat.dropTable(tgtIdent) catch { case _: Exception => () }
         throw e

@@ -24,7 +24,7 @@ object CatalogQueries {
       file: String, column: String): String =
     splitsCache.getOrElseUpdate(s"$d#$column", {
       val probs = (1 until 16).map(_ / 16.0).toArray
-      s.read.parquet(s"$d/$file.parquet")
+      T(s, d, file)
         .stat.approxQuantile(column, probs, 0.001)
         .map(_.toLong).distinct.sorted.mkString(";")
     })
@@ -47,7 +47,7 @@ object CatalogQueries {
       srcFile: String): String = {
     val ns = s"sf_${math.abs(d.hashCode)}"
     val fqn = s"graft.$ns.$table"
-    val srcCount = s.read.parquet(s"$d/$srcFile.parquet").count()
+    val srcCount = T(s, d, srcFile).count()
     val exists = s.sql(s"SHOW TABLES IN graft.$ns").collect()
       .exists(_.getString(1) == table) && usable(s, fqn, srcCount)
     if (!exists) {
@@ -61,7 +61,7 @@ object CatalogQueries {
       // don't shear the column list
       val cols = ddlCols.split(",(?![^(]*\\))").map(_.trim.split("\\s+").head)
       val v = s"${table}_src_${math.abs(d.hashCode)}"
-      s.read.parquet(s"$d/$srcFile.parquet")
+      T(s, d, srcFile)
         .select(cols.head, cols.tail: _*)
         .createOrReplaceTempView(v)
       s.sql(s"INSERT INTO $fqn SELECT * FROM $v")
@@ -70,12 +70,16 @@ object CatalogQueries {
   }
 
   /** Register the graft catalog on the session (idempotent) — the ONE
-    * place the warehouse location lives. Also used by [[IvfIndex]]. */
+    * place the warehouse location lives. Also used by [[IvfIndex]].
+    * The fixtures live under the session's own `spark.sql.warehouse.dir`
+    * (`<cwd>/spark-warehouse` by default), so two checkouts never share,
+    * and trust, each other's fixture tables. */
   private[operators] def ensureGraftCatalog(s: SparkSession): Unit =
     if (s.conf.getOption("spark.sql.catalog.graft").isEmpty) {
       s.conf.set("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse",
-        "/tmp/graft_catalog_warehouse")
+        new org.apache.hadoop.fs.Path(
+          s.conf.get("spark.sql.warehouse.dir"), "graft").toUri.getPath)
     }
 
   /** Namespace for one sf dir (created if missing). */
@@ -99,16 +103,10 @@ object CatalogQueries {
     * metadata only) and catches exactly what row-count trust cannot —
     * regenerated testdata parquet with the same cardinality. */
   private def sourceFingerprint(d: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(f)
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(s"v$FixtureVersion".getBytes("UTF-8"))
-    walk(new java.io.File(d)).foreach { f =>
-      md.update(s"${f.getPath}|${f.length}|${f.lastModified}\n"
-        .getBytes("UTF-8"))
+    T.fileIdentity(new java.io.File(d)).foreach { case (p, len, mtime) =>
+      md.update(s"$p|$len|$mtime\n".getBytes("UTF-8"))
     }
     md.digest().map("%02x".format(_)).mkString
   }
@@ -253,7 +251,7 @@ object CatalogQueries {
     * cross-source test, HBaseAdditionalQuerySuite join w/ parquet). */
   val joinParquet: Q = (s, d) => {
     val v = s"cust_cat_${math.abs(d.hashCode)}"
-    s.read.parquet(s"$d/customer.parquet").createOrReplaceTempView(v)
+    T(s, d, "customer").createOrReplaceTempView(v)
     s.sql(
       s"""SELECT c.c_mktsegment AS seg, count(*) AS cnt,
          |       round(sum(o.o_totalprice), 2) AS total
@@ -282,7 +280,7 @@ object CatalogQueries {
     val li = lineitemTable(s, d)
     val o = ordersTable(s, d)
     Seq("customer", "nation", "region").foreach { t =>
-      s.read.parquet(s"$d/$t.parquet")
+      T(s, d, t)
         .createOrReplaceTempView(s"${t}_cat_dim_${math.abs(d.hashCode)}")
     }
     val h = math.abs(d.hashCode)
@@ -309,7 +307,7 @@ object CatalogQueries {
     val li = lineitemTable(s, d)
     val o = ordersTable(s, d)
     val h = math.abs(d.hashCode)
-    s.read.parquet(s"$d/customer.parquet")
+    T(s, d, "customer")
       .createOrReplaceTempView(s"customer_cat_dim_$h")
     s.sql(
       s"""SELECT l.l_orderkey,
@@ -353,7 +351,7 @@ object CatalogQueries {
     val li = lineitemWideTable(s, d)
     val o = ordersTable(s, d)
     val h = math.abs(d.hashCode)
-    s.read.parquet(s"$d/customer.parquet")
+    T(s, d, "customer")
       .createOrReplaceTempView(s"customer_cat_dim_$h")
     // one lineitem aggregation serves both the big-order predicate and
     // the reported quantity (the IN-subquery form scans and aggregates
@@ -426,7 +424,7 @@ object CatalogQueries {
     val o = ordersTable(s, d)
     val h = math.abs(d.hashCode)
     Seq("customer", "nation").foreach { t =>
-      s.read.parquet(s"$d/$t.parquet")
+      T(s, d, t)
         .createOrReplaceTempView(s"${t}_cat_dim_$h")
     }
     s.sql(
@@ -489,7 +487,7 @@ object CatalogQueries {
     val li = lineitemWideTable(s, d)
     val o = ordersTable(s, d)
     val h = math.abs(d.hashCode)
-    s.read.parquet(s"$d/supplier.parquet")
+    T(s, d, "supplier")
       .createOrReplaceTempView(s"supplier_cat_dim_$h")
     // Both correlations folded into a SINGLE lineitem pass (the EXISTS
     // form reads the fact three times; this reads it once). Two stacked
@@ -586,7 +584,7 @@ object CatalogQueries {
     val o = ordersTable(s, d)
     val h = math.abs(d.hashCode)
     Seq("supplier", "customer", "nation").foreach { t =>
-      s.read.parquet(s"$d/$t.parquet")
+      T(s, d, t)
         .createOrReplaceTempView(s"${t}_cat_dim_$h")
     }
     s.sql(
@@ -629,7 +627,7 @@ object CatalogQueries {
       tables: String*): Int = {
     val h = math.abs(d.hashCode)
     tables.foreach { t =>
-      s.read.parquet(s"$d/$t.parquet")
+      T(s, d, t)
         .createOrReplaceTempView(s"${t}_cat_dim_$h")
     }
     h
@@ -815,7 +813,7 @@ object CatalogQueries {
       sfNamespace(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.orders_def_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val exists = trusted(s, ns, "orders_def_t", srcCount)
       if (!exists) {
         s.sql(
@@ -823,7 +821,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='4')"""
             .stripMargin)
         val v = s"def_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         s.sql(s"INSERT INTO $fqn SELECT o_orderkey, o_totalprice " +
           s"FROM $v WHERE o_orderkey % 2 = 0")
         s.sql(s"ALTER TABLE $fqn ADD COLUMN channel STRING DEFAULT 'web'")
@@ -869,7 +867,7 @@ object CatalogQueries {
       ordersTable(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.documents_t"
-      val srcCount = s.read.parquet(s"$d/documents.parquet").count()
+      val srcCount = T(s, d, "documents").count()
       val exists = trusted(s, ns, "documents_t", srcCount)
       if (!exists) {
         s.sql(
@@ -879,7 +877,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='doc_id', 'numRegions'='8')"""
             .stripMargin)
         val v = s"docs_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/documents.parquet").createOrReplaceTempView(v)
+        T(s, d, "documents").createOrReplaceTempView(v)
         s.sql(s"INSERT INTO $fqn SELECT * FROM $v")
       }
       fqn
@@ -930,7 +928,7 @@ object CatalogQueries {
       ordersTable(s, d) // ensures catalog + namespace exist
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.lineitem_h_t"
-      val srcCount = s.read.parquet(s"$d/lineitem.parquet").count()
+      val srcCount = T(s, d, "lineitem").count()
       val exists = s.sql(s"SHOW TABLES IN graft.$ns").collect()
         .exists(_.getString(1) == "lineitem_h_t") &&
         (s.table(fqn).count() == srcCount || {
@@ -943,7 +941,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='l_orderkey;l_linenumber')"""
             .stripMargin)
         val v = s"lineitem_h_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/lineitem.parquet")
+        T(s, d, "lineitem")
           .select("l_orderkey", "l_linenumber", "l_extendedprice",
             "l_discount", "l_shipdate")
           .createOrReplaceTempView(v)
@@ -986,7 +984,7 @@ object CatalogQueries {
       ordersTable(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.orders_wide_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val exists = trusted(s, ns, "orders_wide_t", srcCount)
       if (!exists) {
         s.sql(
@@ -997,7 +995,7 @@ object CatalogQueries {
              |              'numRegions'='2', 'graft.pageRowLimit'='1000')"""
             .stripMargin)
         val v = s"wide_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet")
+        T(s, d, "orders")
           .select("o_orderstatus", "o_orderkey", "o_custkey", "o_totalprice")
           .createOrReplaceTempView(v)
         s.sql(s"INSERT INTO $fqn SELECT * FROM $v")
@@ -1020,7 +1018,7 @@ object CatalogQueries {
       ordersTable(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.embeddings_t"
-      val srcCount = s.read.parquet(s"$d/embeddings.parquet").count()
+      val srcCount = T(s, d, "embeddings").count()
       val exists = trusted(s, ns, "embeddings_t", srcCount)
       if (!exists) {
         s.sql(
@@ -1029,7 +1027,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='vec_id', 'numRegions'='4')"""
             .stripMargin)
         val v = s"emb_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/embeddings.parquet").createOrReplaceTempView(v)
+        T(s, d, "embeddings").createOrReplaceTempView(v)
         s.sql(s"INSERT INTO $fqn SELECT vec_id, embedding, label FROM $v")
       }
       fqn
@@ -1074,7 +1072,7 @@ object CatalogQueries {
       ordersTable(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.media_t"
-      val srcCount = s.read.parquet(s"$d/documents.parquet").count()
+      val srcCount = T(s, d, "documents").count()
       val exists = trusted(s, ns, "media_t", srcCount)
       if (!exists) {
         s.sql(
@@ -1320,7 +1318,7 @@ object CatalogQueries {
     import org.apache.spark.sql.functions._
     val hist = s.table(documentsTable(s, d))
       .filter(pmod(col("doc_id"), lit(5)) =!= 4)
-    val inc = s.read.parquet(s"$d/documents.parquet")
+    val inc = T(s, d, "documents")
       .filter(pmod(col("doc_id"), lit(5)) === 4)
     // Re-cluster the bh-keyed band index by document BEFORE the screen
     // (TextOps.spread — gated to sub-64 MB inputs): the stored index is
@@ -1508,7 +1506,7 @@ object CatalogQueries {
       ordersTable(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.orders_cents_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val exists = trusted(s, ns, "orders_cents_t", srcCount)
       if (!exists) {
         s.sql(
@@ -1518,7 +1516,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='4')"""
             .stripMargin)
         val v = s"dec_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         s.sql(s"""INSERT INTO $fqn
           SELECT o_orderkey, o_orderstatus,
                  CAST(CAST((o_orderkey * 7919 + 421) % 100000000
@@ -1542,7 +1540,7 @@ object CatalogQueries {
       sfNamespace(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.docs_gen_t"
-      val srcCount = s.read.parquet(s"$d/documents.parquet").count()
+      val srcCount = T(s, d, "documents").count()
       val exists = trusted(s, ns, "docs_gen_t", srcCount)
       if (!exists) {
         s.sql(
@@ -1554,7 +1552,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='doc_id', 'numRegions'='4')"""
             .stripMargin)
         val v = s"gen_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/documents.parquet").createOrReplaceTempView(v)
+        T(s, d, "documents").createOrReplaceTempView(v)
         s.sql(s"INSERT INTO $fqn (doc_id, text) " +
           s"SELECT doc_id, text FROM $v")
       }
@@ -1628,7 +1626,7 @@ object CatalogQueries {
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.orders_sum_t"
       val mvFqn = s"${fqn}_mv_status"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val expectAggs = "sum:o_price=sum_o_price;count:*=cnt_star;" +
         "min:o_price=min_o_price;max:o_price=max_o_price;" +
         "hll:o_orderpriority=hll_o_orderpriority;" +
@@ -1655,7 +1653,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='4')"""
             .stripMargin)
         val v = s"mv_base_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         // o_cents: the same integer-cents value as a BIGINT — AVG over
         // it divides an exact long sum (< 2^53) by an exact count, so
         // the double result is correctly-rounded and bit-identical in
@@ -1725,7 +1723,7 @@ object CatalogQueries {
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.orders_sum_d_t"
       val mvFqn = s"${fqn}_mv_status"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val ok = trusted(s, ns, "orders_sum_d_t", srcCount) &&
         s.sql(s"SHOW TABLES IN graft.$ns").collect()
           .exists(_.getString(1) == "orders_sum_d_t_mv_status") &&
@@ -1741,7 +1739,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='4')"""
             .stripMargin)
         val v = s"mv_based_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         def batch(cond: String): Unit = s.sql(
           s"""INSERT INTO $fqn
              |SELECT o_orderkey, o_orderstatus, o_orderpriority,
@@ -1787,8 +1785,8 @@ object CatalogQueries {
       val oFqn = s"graft.$ns.orders_j_t"
       val cFqn = s"graft.$ns.customer_j_t"
       val mvFqn = s"graft.$ns.orders_j_t_mvj_cust"
-      val srcO = s.read.parquet(s"$d/orders.parquet").count()
-      val srcC = s.read.parquet(s"$d/customer.parquet").count()
+      val srcO = T(s, d, "orders").count()
+      val srcC = T(s, d, "customer").count()
       val ok = trusted(s, ns, "orders_j_t", srcO) &&
         trusted(s, ns, "customer_j_t", srcC) &&
         s.sql(s"SHOW TABLES IN graft.$ns").collect()
@@ -1812,8 +1810,8 @@ object CatalogQueries {
             .stripMargin)
         val ov = s"mvj_o_src_${math.abs(d.hashCode)}"
         val cv = s"mvj_c_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(ov)
-        s.read.parquet(s"$d/customer.parquet").createOrReplaceTempView(cv)
+        T(s, d, "orders").createOrReplaceTempView(ov)
+        T(s, d, "customer").createOrReplaceTempView(cv)
         def batchO(cond: String): Unit = s.sql(
           s"""INSERT INTO $oFqn
              |SELECT o_orderkey, o_custkey, o_orderstatus,
@@ -2037,7 +2035,7 @@ object CatalogQueries {
       ordersTable(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.orders_log_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val exists = trusted(s, ns, "orders_log_t", srcCount)
       if (!exists) {
         s.sql(
@@ -2047,7 +2045,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='log_id', 'numRegions'='8')"""
             .stripMargin)
         val v = s"log_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         // monotone-in-(date, orderkey) ingest id WITHOUT a global
         // window sort: epoch-day * 10^10 + orderkey builds fully
         // parallel and still gives every region a contiguous date span
@@ -2081,7 +2079,7 @@ object CatalogQueries {
       ordersTable(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.docs_fp_t"
-      val srcCount = s.read.parquet(s"$d/documents.parquet").count()
+      val srcCount = T(s, d, "documents").count()
       val exists = trusted(s, ns, "docs_fp_t", srcCount)
       if (!exists) {
         s.sql(
@@ -2090,7 +2088,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='doc_id', 'numRegions'='4',
              |              'graft.bloomCols'='fp')""".stripMargin)
         val v = s"fp_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/documents.parquet").createOrReplaceTempView(v)
+        T(s, d, "documents").createOrReplaceTempView(v)
         s.sql(
           s"""INSERT INTO $fqn
              |SELECT doc_id, md5(text), source, n_chars FROM $v""".stripMargin)
@@ -2110,7 +2108,7 @@ object CatalogQueries {
       sfNamespace(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.customer_conv_t"
-      val srcCount = s.read.parquet(s"$d/customer.parquet").count()
+      val srcCount = T(s, d, "customer").count()
       if (!trusted(s, ns, "customer_conv_t", srcCount)) {
         s.sql(s"DROP TABLE IF EXISTS $fqn")
         s.sql(s"CALL graft.sys.convert(table => '$ns.customer_conv_t', " +
@@ -2138,7 +2136,7 @@ object CatalogQueries {
       sfNamespace(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.orders_ow_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       if (!trusted(s, ns, "orders_ow_t", srcCount)) {
         s.sql(
           s"""CREATE TABLE $fqn (
@@ -2147,7 +2145,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='4')"""
             .stripMargin)
         val v = s"ow_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         s.sql(
           s"""INSERT INTO $fqn
              |SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
@@ -2183,7 +2181,7 @@ object CatalogQueries {
       sfNamespace(s, d)
       val ns = s"sf_${math.abs(d.hashCode)}"
       val fqn = s"graft.$ns.orders_z_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val clustered = trusted(s, ns, "orders_z_t", srcCount) &&
         s.sql(s"SHOW TBLPROPERTIES $fqn").collect()
           .exists(_.getString(0) == "graft.clusteredBy") || {
@@ -2197,7 +2195,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='8')"""
             .stripMargin)
         val v = s"z_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         s.sql(
           s"""INSERT INTO $fqn
              |SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
@@ -2238,7 +2236,7 @@ object CatalogQueries {
           .of(Array(ns), "orders_sp_t"))
           .asInstanceOf[graft.catalog.GraftTable].tableDir
       }
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val ready = trusted(s, ns, "orders_sp_t", srcCount) &&
         (graft.catalog.TableMeta.loadRegions(dir).size > 1 || {
           s.sql(s"DROP TABLE IF EXISTS $fqn"); false
@@ -2251,7 +2249,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='1')"""
             .stripMargin)
         val v = s"sp_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         s.sql(
           s"""INSERT INTO $fqn
              |SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
@@ -2294,7 +2292,7 @@ object CatalogQueries {
           .of(Array(ns), "orders_mg_t"))
           .asInstanceOf[graft.catalog.GraftTable].tableDir
       }
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val ready = trusted(s, ns, "orders_mg_t", srcCount) &&
         (graft.catalog.TableMeta.loadRegions(dir).size < 6 || {
           s.sql(s"DROP TABLE IF EXISTS $fqn"); false
@@ -2307,7 +2305,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='1')"""
             .stripMargin)
         val v = s"mg_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         (0 until 6).foreach { i =>
           s.sql(
             s"""INSERT INTO $fqn
@@ -2439,7 +2437,7 @@ object CatalogQueries {
     builtUps.getOrElseUpdate(d, FixtureLock.build(d) {
       val ns = sfNamespace(s, d)
       val fqn = s"graft.$ns.orders_ups_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       // row count alone cannot tell a finished build from one killed
       // between the base INSERT and the update INSERT (both hold
       // exactly srcCount rows after the fold) — require the update
@@ -2457,7 +2455,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='4',
              |              'graft.dedupKeys'='true')""".stripMargin)
         val v = s"ups_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         s.sql(s"""INSERT INTO $fqn
           SELECT o_orderkey, o_orderstatus, o_totalprice FROM $v""")
         s.sql(s"""INSERT INTO $fqn
@@ -2485,7 +2483,7 @@ object CatalogQueries {
     builtUpsL.getOrElseUpdate(d, FixtureLock.build(d) {
       val ns = sfNamespace(s, d)
       val fqn = s"graft.$ns.orders_upsl_t"
-      val src = s.read.parquet(s"$d/orders.parquet")
+      val src = T(s, d, "orders")
       val expected = src.count() +
         src.filter("o_orderkey % 10 = 0").count()
       val exists = s.sql(s"SHOW TABLES IN graft.$ns").collect()
@@ -2531,7 +2529,7 @@ object CatalogQueries {
     builtMrg.getOrElseUpdate(d, FixtureLock.build(d) {
       val ns = sfNamespace(s, d)
       val fqn = s"graft.$ns.orders_mrg_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val exists = trusted(s, ns, "orders_mrg_t", srcCount) &&
         (s.sql(s"SELECT count(*) FROM graft.$ns.orders_mrg_t " +
           "WHERE o_orderstatus = 'U'").head().getLong(0) > 0L || {
@@ -2545,7 +2543,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='4')"""
             .stripMargin)
         val v = s"mrg_cat_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         s.sql(s"""INSERT INTO $fqn
           SELECT o_orderkey, o_orderstatus, o_totalprice FROM $v""")
         s.sql(
@@ -2626,7 +2624,7 @@ object CatalogQueries {
     def build(retry: Boolean): (String, Long) = {
       val ns = sfNamespace(s, d)
       val fqn = s"graft.$ns.orders_cdc_t"
-      val srcCount = s.read.parquet(s"$d/orders.parquet").count()
+      val srcCount = T(s, d, "orders").count()
       val exists = trusted(s, ns, "orders_cdc_t", srcCount)
       if (!exists) {
         s.sql(
@@ -2636,7 +2634,7 @@ object CatalogQueries {
              |TBLPROPERTIES('keyCols'='o_orderkey', 'numRegions'='4')"""
             .stripMargin)
         val v = s"cdc_src_${math.abs(d.hashCode)}"
-        s.read.parquet(s"$d/orders.parquet").createOrReplaceTempView(v)
+        T(s, d, "orders").createOrReplaceTempView(v)
         s.sql(s"INSERT INTO $fqn SELECT o_orderkey, o_orderstatus, " +
           s"o_totalprice FROM $v WHERE o_orderkey % 2 = 1")
         s.sql(s"INSERT INTO $fqn SELECT o_orderkey, o_orderstatus, " +
@@ -2681,7 +2679,7 @@ object CatalogQueries {
       val (srcFqn, v1) = changesTable(s, d)
       val ns = sfNamespace(s, d)
       val fqn = s"graft.$ns.orders_clone_t"
-      val oddCount = s.read.parquet(s"$d/orders.parquet")
+      val oddCount = T(s, d, "orders")
         .where("o_orderkey % 2 = 1").count()
       if (!trusted(s, ns, "orders_clone_t", oddCount)) {
         s.sql(s"CALL graft.sys.clone(table => '$ns.orders_cdc_t', " +
@@ -2710,7 +2708,7 @@ object CatalogQueries {
     builtTag.getOrElseUpdate(d, FixtureLock.build(d) {
       val ns = sfNamespace(s, d)
       val fqn = s"graft.$ns.orders_tag_t"
-      val src = s.read.parquet(s"$d/orders.parquet")
+      val src = T(s, d, "orders")
       val total = src.count()
       val odd = src.where("o_orderkey % 2 = 1").count()
       val fresh = !trusted(s, ns, "orders_tag_t", total) || {
@@ -2764,7 +2762,7 @@ object CatalogQueries {
     builtWap.getOrElseUpdate(d, FixtureLock.build(d) {
       val ns = sfNamespace(s, d)
       val fqn = s"graft.$ns.orders_wap_t"
-      val src = s.read.parquet(s"$d/orders.parquet")
+      val src = T(s, d, "orders")
       val odd = src.where("o_orderkey % 2 = 1").count()
       val even = src.count() - odd
       val staged = trusted(s, ns, "orders_wap_t", odd) && {
@@ -2822,7 +2820,7 @@ object CatalogQueries {
       val ns = sfNamespace(s, d)
       val srcFqn = s"graft.$ns.orders_mirsrc_t"
       val tgtFqn = s"graft.$ns.orders_mirror_t"
-      val src = s.read.parquet(s"$d/orders.parquet")
+      val src = T(s, d, "orders")
       val total = src.count()
       if (!trusted(s, ns, "orders_mirror_t", total)) {
         s.sql(s"DROP TABLE IF EXISTS $srcFqn")

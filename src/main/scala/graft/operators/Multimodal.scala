@@ -31,7 +31,7 @@ object Multimodal {
     * parquet lake with a binary column. */
   def mediaTable(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    T(spark, sfDir, "documents")
       .select(
         col("doc_id").as("media_id"),
         when(col("doc_id") % 2 === 0, "image").otherwise("audio").as("kind"),

@@ -4,13 +4,67 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Table loader: every query reads the driver-generated parquet under
-  * `dir`. Filters/projections are declared on the DataFrame so Catalyst
-  * pushes them into the parquet scan (PushedFilters / ReadSchema).
+/** Source-table loader: every raw-parquet read of the driver-generated
+  * tables under `dir` goes through here. Filters/projections are
+  * declared on the DataFrame so Catalyst pushes them into the parquet
+  * scan (PushedFilters / ReadSchema).
+  *
+  * A bare `read.parquet` answers every call with a one-task
+  * schema-inference job, so each table's `StructType` is memoized and
+  * later calls pass it to `read.schema(..)`, which launches no job.
+  *  - Key: the canonical path plus the session's values of the confs
+  *    that change parquet inference ([[InferenceConfs]]), so a session
+  *    with another timestamp or binary mapping infers its own schema.
+  *  - Value: the file identity — (path, length, mtime) of every file
+  *    under the path, the walk the catalog fixtures' fingerprint uses —
+  *    with the schema. A rewritten file no longer matches; the next call
+  *    infers again and replaces the entry, so the map holds one entry
+  *    per (path, conf values).
+  *  - A miss runs Spark's own inference (`read.parquet(path).schema`),
+  *    so there is exactly one parquet-to-Spark type mapping.
+  *  - A path that is not a local file or directory is read bare: its
+  *    identity cannot be checked, and a missing file fails as before.
+  * DataFrames are never cached: each call plans a fresh relation with
+  * fresh exprIds, so a query may read one table several times.
   */
 object T {
-  def apply(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import org.apache.spark.sql.types.StructType
+
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemas = scala.collection.concurrent.TrieMap[
+    (String, Seq[String]), (Seq[(String, Long, Long)], StructType)]()
+
+  def apply(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val f = new java.io.File(path)
+    if (!f.exists()) s.read.parquet(path)
+    else {
+      val key = (f.getCanonicalPath,
+        InferenceConfs.map(k => s.conf.getOption(k).orNull))
+      val id = fileIdentity(f)
+      val schema = schemas.get(key) match {
+        case Some((`id`, known)) => known
+        case _ =>
+          val inferred = s.read.parquet(path).schema
+          schemas.put(key, (id, inferred))
+          inferred
+      }
+      s.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** (path, length, mtime) of every file under `f`, in name order. */
+  private[operators] def fileIdentity(f: java.io.File): Seq[(String, Long, Long)] =
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
+        .sortBy(_.getName).toSeq.flatMap(fileIdentity)
+    else Seq((f.getPath, f.length, f.lastModified))
 }
 
 /** Relational query surface re-expressing SURVEY.md §2 (scans, filters,

@@ -19,7 +19,7 @@ object EventStreams {
     * schema (ts normalized to a µs timestamp). The file source needs a
     * directory, so the single parquet file is staged via symlink. */
   def asStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val batch = spark.read.parquet(s"$sfDir/events.parquet")
+    val batch = graft.operators.T(spark, sfDir, "events")
     val schema = batch.schema
     val stage = java.nio.file.Paths.get(
       s"/tmp/graft_stream_src/${math.abs(sfDir.hashCode)}")

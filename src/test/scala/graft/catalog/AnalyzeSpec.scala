@@ -21,8 +21,7 @@ class AnalyzeSpec extends AnyFunSuite {
       ExplainMode.fromString("simple"))
 
   private def tableDir(ns: String, t: String): File =
-    new File(s"/tmp/graft_test_warehouse_${ProcessHandle.current().pid()}" +
-      s"/$ns/$t")
+    new File(s"${TestSpark.warehouse}/$ns/$t")
 
   /** Simulate a pre-upgrade manifest: republish every region with its
     * stats dropped (metadata-only, same protocol analyze uses). */

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.io.File
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -28,13 +27,9 @@ import graft.codec.KeyCodec
   * unique, and the race counter proving the races actually happened
   * (a race test that never raced proves nothing).
   */
-class CasCommitSpec extends AnyFunSuite {
+class CasCommitSpec extends AnyFunSuite with graft.TempDirs {
 
-  private def tmpDir(): File = {
-    val d = Files.createTempDirectory("graft-cas-commit").toFile
-    d.deleteOnExit()
-    d
-  }
+  private def tmpDir(): File = tempDir("graft-cas-commit")
 
   private def hexKey(v: Long): String =
     KeyCodec.toHex(KeyCodec.encode(LongType, v))

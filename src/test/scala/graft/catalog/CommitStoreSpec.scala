@@ -21,13 +21,9 @@ import graft.codec.KeyCodec
   * silent lost update, and (3) unknown store names are refused
   * loudly rather than running a lock that does not lock.
   */
-class CommitStoreSpec extends AnyFunSuite {
+class CommitStoreSpec extends AnyFunSuite with graft.TempDirs {
 
-  private def tmpDir(): File = {
-    val d = Files.createTempDirectory("graft-commit-store").toFile
-    d.deleteOnExit()
-    d
-  }
+  private def tmpDir(): File = tempDir("graft-commit-store")
 
   private def hexKey(v: Long): String =
     KeyCodec.toHex(KeyCodec.encode(LongType, v))

@@ -18,13 +18,9 @@ import graft.codec.KeyCodec
   * metadata from its own meta table (`HBaseRelation.scala:203-235`
   * caches what the server owns).
   */
-class ManifestLogSpec extends AnyFunSuite {
+class ManifestLogSpec extends AnyFunSuite with graft.TempDirs {
 
-  private def tmpDir(): File = {
-    val d = Files.createTempDirectory("graft-manifest-log").toFile
-    d.deleteOnExit()
-    d
-  }
+  private def tmpDir(): File = tempDir("graft-manifest-log")
 
   private def hexKey(v: Long): String =
     KeyCodec.toHex(KeyCodec.encode(LongType, v))

@@ -7,7 +7,7 @@ import graft.TestSpark
 /** Streaming semantics verified against the equivalent batch queries:
   * the windowed/sessionized/deduped streaming results on a bounded file
   * stream must equal the batch computation on the same data. */
-class EventStreamsSpec extends AnyFunSuite {
+class EventStreamsSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
   private lazy val batchEvents = {
     val df = spark.read.parquet(s"${TestSpark.sfDir}/events.parquet")
@@ -425,8 +425,7 @@ class EventStreamsSpec extends AnyFunSuite {
       """CREATE TABLE graft.stream.tail_meta_out (k INT, src_region BIGINT)
         |TBLPROPERTIES('keyCols'='k')""".stripMargin)
     spark.sql("INSERT INTO graft.stream.tail_meta VALUES (1, 'a'), (2, 'b')")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-tail-meta-ckpt").toString
+    val ckpt = tempDir("graft-tail-meta-ckpt").toString
     def start() = spark.readStream.table("graft.stream.tail_meta")
       .select(col("k"), col("_graft_region_id").as("src_region"))
       .writeStream
@@ -444,8 +443,7 @@ class EventStreamsSpec extends AnyFunSuite {
       // region ids are the REAL manifest ids (checkpointable
       // provenance), not placeholders
       val ids = graft.catalog.TableMeta.loadRegions(new java.io.File(
-        s"/tmp/graft_test_warehouse_${ProcessHandle.current().pid()}" +
-          "/stream/tail_meta")).map(_.id).toSet
+        s"${TestSpark.warehouse}/stream/tail_meta")).map(_.id).toSet
       assert(first.values.toSet.subsetOf(ids))
       spark.sql("INSERT INTO graft.stream.tail_meta VALUES (3, 'c')")
       q.processAllAvailable()
