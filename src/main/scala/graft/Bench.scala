@@ -1,66 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCpus
     // local iteration aid: run only queries whose name contains one of
     // the comma-separated substrings (the driver never sets this)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
     def selected(name: String) = only.forall(_.exists(name.contains))
-    // local iteration aid: extra session confs as "k=v;k=v" (the driver
-    // never sets this) — lets config experiments run without a rebuild
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.split("=", 2)).collect {
-        case Array(k, v) => k.trim -> v.trim
-      }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Split-size sized to the benched SF, per the scale guidance
-      // (shuffle.partitions and files.maxPartitionBytes must match the
-      // data scale): the sf0.1 tables are single ~10-60 MB parquet
-      // files, so the 128 MB default makes every scan 1 partition and
-      // serializes scan-side compute (JSON parse, array kernels) on one
-      // of 32 cores. 4 MB splits the corpus to >=8 tasks per table at
-      // sf0.1; a cluster deployment reading >=128 MB files keeps the
-      // default (this is the bench harness session, not a library
-      // default).
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // AQE coalesce floor: back to Spark's 1m DEFAULT (r13). The r12
-      // round lowered it to 64k so the CPU-dense screen verify
-      // exchanges kept all 32 cores — but after the third-wave
-      // reshapes the 64k floor measured as a net LOSS on the full
-      // board (47.8 s vs 45.5 s, structured diff: ~100 small-exchange
-      // faces each pay extra tiny tasks — task-binary deserialization
-      // per task — while only the dedup_incoming screen still gains,
-      // +0.6 s of its verify width). The default floor is also what a
-      // cluster deployment runs; keeping it removes a tuned local
-      // constant. Env-overridable for experiments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_SIZE", "1m"))
-      // The JVM-wide generated-code cache defaults to 100 entries —
-      // sized for a service re-running one query shape, not a session
-      // running 223 distinct queries: every query's stages evicted the
-      // previous ones and EVERY pass re-paid bytecode generation +
-      // janino compilation (visible as ~200-800 ms/stage of
-      // executor-side task time that repeated across sweeps). 4096
-      // entries holds the whole board. Full-board A/B at identical
-      // code: 86.1 s -> 62.4 s. Not a scale constant — it bounds
-      // compiled-class count, not data.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    )((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: one full pass over every query. This builds the
     // region store and all catalog tables (bulk load is ingest, not

@@ -261,8 +261,8 @@ object ScaleBench {
         // parquet is ONE file, and a single-split amplified corpus
         // serializes the whole map side onto one core (observed: the
         // ×10 ingest screen pinned 1 of 32 lanes for 35+ min) —
-        // pair with spark.sql.files.maxPartitionBytes (see main) so
-        // the splits actually fan out
+        // with `GraftSession`'s 4m maxPartitionBytes the splits
+        // actually fan out
         .repartition(32)
         .write.parquet(target)
       System.err.println(s"[scale] generated renamed documents x$factor")
@@ -327,27 +327,7 @@ object ScaleBench {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // amplified corpora are small files by byte count but heavy per
-      // byte (the screen family does candidate-join work per row) —
-      // the default 128m split packing reads a 66 MB ×100 corpus as
-      // ONE split and strands 31 lanes. Overridable per capture; the
-      // default stays stock so the TPC-H-family curves remain
-      // comparable with earlier rounds' captures.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "128m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-scalebench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_SCREEN_ONLY: a dedicated screen/band-family capture
     // in a fresh JVM — base = the factor-1 renamed corpus so BOTH

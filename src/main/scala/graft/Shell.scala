@@ -43,18 +43,9 @@ object Shell {
       |  SELECT * FROM graft.db.t WHERE k = 1;""".stripMargin
 
   def session(warehouse: String): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .appName("graft-shell")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse", warehouse)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    GraftSession.builder("graft-shell",
+      master = Some(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")),
+      warehouse = Some(warehouse)).getOrCreate()
 
   /** Split a chunk of text into `;`-terminated statements. Respects
     * quoted strings (with Spark's backslash escapes), backtick

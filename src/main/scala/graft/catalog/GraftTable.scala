@@ -667,9 +667,7 @@ class GraftScanBuilder(tableDir: File, meta: TableMeta,
     // unbucketed append regions, or SPJ disabled): exactly the case
     // where folding in the scan turns a full-row shuffle into a
     // partials shuffle.
-    val spjOn = try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.sql.sources.v2.bucketing.enabled", "false")
-      .toBoolean catch { case _: Exception => false }
+    val spjOn = org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled
     lazy val regionList = pinned.getOrElse(TableMeta.loadRegions(tableDir))
     if (spjOn && meta.splits.isDefined && regionList.nonEmpty &&
       regionList.forall(_.bucket >= 0)) return None

@@ -168,10 +168,6 @@ object CatalogQueries {
   private def ordersTable(s: SparkSession, d: String): String =
     built.getOrElseUpdate(d, FixtureLock.build(d) {
       sfNamespace(s, d)
-      // key-grouped scans are only honored under these (safe defaults)
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
       buildKeyedTable(s, d, "orders_t",
         """o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,
           |o_orderpriority STRING, o_totalprice DOUBLE,

@@ -31,18 +31,20 @@ import org.apache.spark.sql.functions._
   * refinement slice is ~0.06% of the data. */
 object Quantiles {
 
-  /** Test probe: total collected interior-slice rows of the most
-    * recent FUSED resolve (−1 until one runs). Lets QuantilesSpec
-    * assert the O(targets·E) slice bound holds under a dominant
-    * duplicated value at a bracket endpoint — the case the strict
-    * interior exists for. Diagnostics only, never read by queries. */
-  @volatile private[operators] var lastFusedSliceRows: Long = -1L
-
   /** Exact `quantile_disc` for every p in `ps` over `df(valueCol)`
     * (doubles; NULLs ignored). Returns (p, value) rows. */
   def exactPercentiles(df: DataFrame, valueCol: String,
       ps: Seq[Double], accuracy: Int = 10000,
-      fuseLimit: Long = 1L << 20): DataFrame = {
+      fuseLimit: Long = 1L << 20): DataFrame =
+    exactPercentilesSliced(df, valueCol, ps, accuracy, fuseLimit)._1
+
+  /** [[exactPercentiles]] plus the interior-slice rows the FUSED resolve
+    * collected (−1 when it did not run), so QuantilesSpec can assert the
+    * O(targets·E) slice bound under a dominant duplicated value at a
+    * bracket endpoint — the case the strict interior exists for. */
+  private[operators] def exactPercentilesSliced(df: DataFrame,
+      valueCol: String, ps: Seq[Double], accuracy: Int,
+      fuseLimit: Long): (DataFrame, Long) = {
     require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0),
       s"percentile targets must be in (0, 1]; got $ps")
     val spark = df.sparkSession
@@ -148,8 +150,8 @@ object Quantiles {
         .filter(col("rn").isin(ks.distinct: _*))
         .collect().map(r => r.getLong(1) -> r.getDouble(0)).toMap
       import spark.implicits._
-      return ps.indices
-        .map(i => (ps(i), byRank(ks(i)))).toDF("p", "value")
+      return (ps.indices
+        .map(i => (ps(i), byRank(ks(i)))).toDF("p", "value"), -1L)
     }
 
     val directRows = direct.map(i => (ps(i), vLo(i))) ++
@@ -164,17 +166,17 @@ object Quantiles {
         val slice = ranks.getSeq[Double](stride * i + 4).sorted
         (ps(i), slice((ks(i) - le(i) - 1).toInt))
       }
-      lastFusedSliceRows = sliced.map(i =>
+      val sliceRows = sliced.map(i =>
         ranks.getSeq[Double](stride * i + 4).size.toLong).sum
       import spark.implicits._
-      return (directRows ++ slicedRows).toDF("p", "value")
+      return ((directRows ++ slicedRows).toDF("p", "value"), sliceRows)
     }
 
     // pass 3 (large-slice branch): emit only in-bracket rows, one
     // window per tiny-fraction slice — distributed, never collected
     if (sliced.isEmpty) {
       import spark.implicits._
-      return directRows.toDF("p", "value")
+      return (directRows.toDF("p", "value"), -1L)
     }
     val arms = sliced.map { i =>
       val inLo = if (openLo(i)) lit(true) else v > vLo(i)
@@ -195,10 +197,10 @@ object Quantiles {
       .filter(col("rn") === expr(pickExpr))
       .select(element_at(lit(ps.toArray), col("i") + 1).as("p"),
         col("value"))
-    if (directRows.isEmpty) slicedDf
+    if (directRows.isEmpty) (slicedDf, -1L)
     else {
       import spark.implicits._
-      slicedDf.unionByName(directRows.toDF("p", "value"))
+      (slicedDf.unionByName(directRows.toDF("p", "value")), -1L)
     }
   }
 }

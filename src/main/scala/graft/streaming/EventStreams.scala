@@ -16,19 +16,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object EventStreams {
 
   /** Batch DataFrame → file-backed streaming DataFrame with the same
-    * schema (ts normalized to a µs timestamp). The file source needs a
-    * directory, so the single parquet file is staged via symlink. */
+    * schema (ts normalized to a µs timestamp). The file source reads a
+    * directory, so it streams `sfDir` filtered to the one events file. */
   def asStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val batch = graft.operators.T(spark, sfDir, "events")
-    val schema = batch.schema
-    val stage = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src/${math.abs(sfDir.hashCode)}")
-    java.nio.file.Files.createDirectories(stage)
-    val link = stage.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(link))
-      java.nio.file.Files.createSymbolicLink(link,
-        java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-    val df = spark.readStream.schema(schema).parquet(stage.toString)
+    val schema = graft.operators.T(spark, sfDir, "events").schema
+    val df = spark.readStream.schema(schema)
+      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
     schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))

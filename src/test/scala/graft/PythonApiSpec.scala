@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Cancels (rather than fails) when no python3+pyspark is available,
   * so the JVM suite stays runnable in minimal environments.
   */
-class PythonApiSpec extends AnyFunSuite {
+class PythonApiSpec extends AnyFunSuite with TempDirs {
 
   private def havePyspark: Boolean =
     try {
@@ -38,8 +38,7 @@ class PythonApiSpec extends AnyFunSuite {
 
   test("pyspark reaches the graft catalog end-to-end") {
     assume(havePyspark, "python3 with pyspark not available")
-    val warehouse =
-      java.nio.file.Files.createTempDirectory("graft_py_wh").toString
+    val warehouse = tempDir("graft_py_wh").toString
     assert(runPy("graft_smoke.py", warehouse).contains("GRAFT_PY_OK"))
   }
 

@@ -14,27 +14,33 @@ object TestSpark {
 
   lazy val spark: SparkSession = {
     sys.addShutdownHook(deleteRecursively(new File(warehouse)))
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // storage-partitioned joins / key-grouped scans over fixed-split
-      // graft tables (KeyGroupedPartitioning is only honored with these)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse", warehouse)
-      .getOrCreate()
+    // 8 cores whatever the machine, so plans and task counts are stable
+    val s = GraftSession.builder("graft-test", cpus = 8,
+      warehouse = Some(warehouse)).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark's default split size. Region packing merges regions only under
+    * a split target above Spark's 4 MB per-file open cost, and the
+    * session profile's 4m split is exactly that cost, so the packing
+    * tests run under this. */
+  val SparkDefaultSplit = "spark.sql.files.maxPartitionBytes" -> "128m"
+
+  /** Runs `body` with the given session confs set; afterwards each key
+    * gets its previous value back, or is unset again if it was not set
+    * (`conf.getOption` would return a registered key's default). */
+  def withConf[A](confs: (String, String)*)(body: => A): A = {
+    val c = spark.sessionState.conf
+    val saved = confs.map { case (k, _) =>
+      k -> Option.when(c.contains(k))(c.getConfString(k)) }
+    confs.foreach { case (k, v) => c.setConfString(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => c.setConfString(k, v)
+      case (k, None) => c.unsetConf(k)
+    }
+  }
 
   /** Regions the plan's `GraftScan` node reads after pruning (the
     * `regions=N` of its explain line). */

@@ -291,10 +291,8 @@ class CatalogSafetySpec extends AnyFunSuite {
     // packs — Spark's own small-file formula; force the
     // many-files-per-slot regime via minPartitionNum
     assert(plannedParts().length == 12)
-    val key = "spark.sql.files.minPartitionNum"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "2")
-    try {
+    TestSpark.withConf("spark.sql.files.minPartitionNum" -> "2",
+        TestSpark.SparkDefaultSplit) {
       val parts = plannedParts()
       assert(parts.length < 12 && parts.length >= 2,
         s"12 tiny regions should pack, got ${parts.length} partitions")
@@ -305,9 +303,6 @@ class CatalogSafetySpec extends AnyFunSuite {
         "SELECT k, v FROM graft.safety.packed ORDER BY k").collect()
       assert(got.map(r => (r.getInt(0), r.getInt(1))).toSeq ==
         (1 to 12).map(i => (i, i * 10)))
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
     spark.sql("DROP TABLE graft.safety.packed")
   }

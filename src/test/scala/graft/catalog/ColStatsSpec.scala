@@ -20,7 +20,7 @@ import graft.codec.KeyCodec
   * 3-valued evaluator over random nullable data (the key-path analogue
   * is PruneSoundnessSpec, whose rows are non-null and classical).
   */
-class ColStatsSpec extends AnyFunSuite {
+class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
 
   private val rnd = new Random(20260812)
 
@@ -333,9 +333,10 @@ class ColStatsSpec extends AnyFunSuite {
     import spark.implicits._
     // dim must come from a V1/V2 relation with a selective predicate —
     // Spark only plans dynamic pruning against a filtered build side
+    val dimDir = tempDir("graft_dim_rt").toString
     (0 to 7).map(d => (d, s"tag$d")).toDF("day", "tag")
-      .write.mode("overwrite").parquet("/tmp/graft_dim_rt")
-    spark.read.parquet("/tmp/graft_dim_rt")
+      .write.mode("overwrite").parquet(dimDir)
+    spark.read.parquet(dimDir)
       .createOrReplaceTempView("dim_rt")
     val q = spark.sql(
       """SELECT count(*) AS c FROM graft.cstats.rt t

@@ -96,12 +96,12 @@ class ConfigMatrixParitySpec extends AnyFunSuite {
     // accelerated run for contrast: fewer tasks, pruned regions.
     // (minPartitionNum=1 raises the pack target above one tiny region —
     // with the default parallelism of 8, six regions already satisfy it)
-    spark.conf.set("spark.sql.files.minPartitionNum", "1")
-    try {
+    TestSpark.withConf("spark.sql.files.minPartitionNum" -> "1",
+        TestSpark.SparkDefaultSplit) {
       val dfOn = spark.table("graft.accel.t")
       assert(scanOf(dfOn).inputPartitions.size < 6,
         "packing should coalesce 6 tiny regions")
-    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
+    }
     val skipOn = spark.table("graft.accel.t").where("day = 3")
     assert(scanOf(skipOn).inputPartitions.size == 1,
       "stats skipping should isolate the day=3 region")

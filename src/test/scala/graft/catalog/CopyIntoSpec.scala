@@ -8,7 +8,7 @@ import graft.TestSpark
 /** `COPY INTO` — idempotent per-file ingestion over the ledger commit
   * ([[TableMeta.commitCopy]]), plus the `ANALYZE TABLE ... COMPUTE
   * STATISTICS` statement face. */
-class CopyIntoSpec extends AnyFunSuite {
+class CopyIntoSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def mk(name: String): String = {
@@ -36,7 +36,7 @@ class CopyIntoSpec extends AnyFunSuite {
   test("COPY INTO loads each source file exactly once across reruns " +
       "and incremental arrivals") {
     val fqn = mk("once")
-    val src = Files.createTempDirectory("copyinto")
+    val src = tempDir("copyinto").toPath
     csv(src, "f1.csv", 0 until 10)
     csv(src, "f2.csv", 10 until 20)
 
@@ -66,7 +66,7 @@ class CopyIntoSpec extends AnyFunSuite {
 
   test("PATTERN filters the file set; hidden files are never loaded") {
     val fqn = mk("pat")
-    val src = Files.createTempDirectory("copypat")
+    val src = tempDir("copypat").toPath
     csv(src, "a.csv", 0 until 5)
     csv(src, "b.txt", 100 until 105)
     csv(src, "_meta.csv", 200 until 205)
@@ -78,7 +78,7 @@ class CopyIntoSpec extends AnyFunSuite {
 
   test("FILEFORMAT = PARQUET ingests parquet files idempotently") {
     val fqn = mk("pq")
-    val src = Files.createTempDirectory("copypq").toString
+    val src = tempDir("copypq").toString
     spark.range(0, 30).selectExpr("id AS k", "id * 3 AS v")
       .coalesce(1).write.mode("overwrite").parquet(src)
     spark.sql(s"COPY INTO $fqn FROM '$src' FILEFORMAT = PARQUET")
@@ -92,7 +92,7 @@ class CopyIntoSpec extends AnyFunSuite {
   test("rows and file identity commit atomically: a pre-recorded " +
       "ledger key makes the file invisible to COPY INTO") {
     val fqn = mk("atomic")
-    val src = Files.createTempDirectory("copyatomic")
+    val src = tempDir("copyatomic").toPath
     csv(src, "f1.csv", 0 until 10)
     csv(src, "f2.csv", 10 until 20)
     val dir = tableDir("atomic")

@@ -8,7 +8,7 @@ import graft.TestSpark
   * user-facing write path refuses a violating row BEFORE commit —
   * Delta's table-constraint contract on the graft writer. NULL
   * passes (SQL CHECK: violated only when FALSE). */
-class GraftCheckSpec extends AnyFunSuite {
+class GraftCheckSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def ns(): Unit =
@@ -131,8 +131,7 @@ class GraftCheckSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val fqn = fresh("stream",
       ", 'graft.check.qty_pos'='qty > 0'")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_check_stream_ckpt").toString
+    val ckpt = tempDir("graft_check_stream_ckpt").toString
     val in = MemoryStream[(Long, Long, String)]
     val q = in.toDF().toDF("k", "qty", "status").writeStream
       .option("checkpointLocation", ckpt)
@@ -218,7 +217,7 @@ class GraftCheckSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE graft.ck.bulk (k BIGINT, qty BIGINT, " +
       "g BIGINT GENERATED ALWAYS AS (k % 10), " +
       "CONSTRAINT qp CHECK (qty > 0)) TBLPROPERTIES('keyCols'='k')")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ck_csv")
+    val dir = tempDir("graft_ck_csv").toPath
     // short lines: qty and g backfill NULL (permissive mode); g then
     // fills from the expression in the write task; NULL qty passes
     java.nio.file.Files.write(dir.resolve("ok.csv"),

@@ -9,7 +9,7 @@ import graft.TestSpark
 
 /** `CONVERT TO GRAFT` / `CALL graft.sys.convert`: zero-copy adoption
   * of sorted parquet files as regions, sorted-rewrite of the rest. */
-class GraftConvertSpec extends AnyFunSuite {
+class GraftConvertSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def tableDir(ns: String, name: String): File = {
@@ -32,7 +32,7 @@ class GraftConvertSpec extends AnyFunSuite {
   test("sorted files hard-link as regions with exact bounds and stats; " +
       "answers and pruning match a native load") {
     val t = fresh("sorted")
-    val src = Files.createTempDirectory("convsrc").toString
+    val src = tempDir("convsrc").toString
     // two key-sorted files
     spark.range(0, 1000).selectExpr("id AS k", "id % 7 AS v",
       "CAST(id * 3 AS DOUBLE) AS m")
@@ -68,14 +68,14 @@ class GraftConvertSpec extends AnyFunSuite {
   test("unsorted files rewrite through the sorted bulk load; mixed " +
       "directories split file-by-file") {
     val t = fresh("mixed")
-    val src = Files.createTempDirectory("convmix")
+    val src = tempDir("convmix").toPath
     spark.range(0, 100).selectExpr("id AS k", "id AS v", "CAST(id AS DOUBLE) AS m")
       .orderBy(col("k")).coalesce(1)
       .write.parquet(src.resolve("a").toString)
     spark.range(100, 200).selectExpr("id AS k", "id AS v", "CAST(id AS DOUBLE) AS m")
       .orderBy(col("k").desc).coalesce(1) // descending = not key-sorted
       .write.parquet(src.resolve("b").toString)
-    val flat = Files.createTempDirectory("convflat")
+    val flat = tempDir("convflat").toPath
     Seq("a", "b").foreach { d =>
       val f = src.resolve(d).toFile.listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -96,7 +96,7 @@ class GraftConvertSpec extends AnyFunSuite {
 
   test("a null key value refuses the convert and leaves no table") {
     fresh("nullkey")
-    val src = Files.createTempDirectory("convnull").toString
+    val src = tempDir("convnull").toString
     spark.sql("SELECT CAST(NULL AS BIGINT) AS k, 1 AS v " +
       "UNION ALL SELECT 2, 3").coalesce(1)
       .write.mode("overwrite").parquet(src)
@@ -114,7 +114,7 @@ class GraftConvertSpec extends AnyFunSuite {
   test("CONVERT TO GRAFT statement face; converted tables take " +
       "further DML and maintenance") {
     fresh("stmt")
-    val src = Files.createTempDirectory("convstmt").toString
+    val src = tempDir("convstmt").toString
     spark.range(0, 50).selectExpr("id AS k", "id * 2 AS v")
       .orderBy("k").coalesce(1).write.mode("overwrite").parquet(src)
     spark.sql(s"CONVERT TO GRAFT '$src' AS graft.conv.stmt KEY (k)")

@@ -9,7 +9,7 @@ import graft.TestSpark
   * per row inside every write task — NULL/omitted fills, a conflicting
   * explicit value refuses (Delta's semantics). Generated key columns
   * and dangling references are refused at DDL time. */
-class GraftGeneratedSpec extends AnyFunSuite {
+class GraftGeneratedSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def ns(): Unit =
@@ -101,8 +101,7 @@ class GraftGeneratedSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE graft.gen.t4 (k BIGINT, v BIGINT, " +
       "b BIGINT GENERATED ALWAYS AS (v + 100)) " +
       "TBLPROPERTIES('keyCols'='k')")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_gen_stream_ckpt").toString
+    val ckpt = tempDir("graft_gen_stream_ckpt").toString
     val in = MemoryStream[(Long, Long)]
     val q = in.toDF().toDF("k", "v")
       .selectExpr("k", "v", "CAST(NULL AS BIGINT) AS b")

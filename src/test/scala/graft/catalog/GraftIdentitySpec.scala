@@ -8,7 +8,7 @@ import graft.TestSpark
   * NULL/omitted values fill with `start + step·n` for globally unique
   * `n`; explicit values pass through (the BY DEFAULT contract); the
   * ALWAYS form, key identity columns, and streaming ingest refuse. */
-class GraftIdentitySpec extends AnyFunSuite {
+class GraftIdentitySpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def ns(): Unit =
@@ -83,8 +83,7 @@ class GraftIdentitySpec extends AnyFunSuite {
     spark.sql("CREATE TABLE graft.idn.t3 (k BIGINT, id BIGINT " +
       "GENERATED BY DEFAULT AS IDENTITY, v STRING) " +
       "TBLPROPERTIES('keyCols'='k')")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_idn_ckpt").toString
+    val ckpt = tempDir("graft_idn_ckpt").toString
     val in = MemoryStream[(Long, String)]
     val e = intercept[Exception] {
       val q = in.toDF().toDF("k", "v")
@@ -99,8 +98,7 @@ class GraftIdentitySpec extends AnyFunSuite {
 
   test("32 racing reservations on one table are pairwise disjoint " +
       "(the conditional-put ladder is the only arbiter)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_idseq_race").toFile
+    val dir = tempDir("graft_idseq_race")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val fs = (1 to 32).map(_ => pool.submit(

@@ -53,6 +53,28 @@ class GroupAggPushdownSpec extends AnyFunSuite {
       s"exchange-free:\n$p")
   }
 
+  test("SPJ conf unset reads as Spark's default (on): a key group-by on " +
+      "orders_t keeps the exchange-free plan it gets with the conf true") {
+    val key = "spark.sql.sources.v2.bucketing.enabled"
+    CatalogQueries.queries("catalog_key_agg")(spark, sf).collect()
+    val q = "SELECT o_orderkey, count(*) AS n FROM graft.sf_" +
+      math.abs(sf.hashCode) + ".orders_t GROUP BY o_orderkey"
+    def finalPlan(): String = {
+      val df = spark.sql(q)
+      df.collect()
+      plan(df).replaceAll("#\\d+", "")
+    }
+    assert(!spark.sessionState.conf.contains(key), "the session sets it")
+    val unset = finalPlan()
+    TestSpark.withConf(key -> "true") { assert(finalPlan() == unset) }
+    assert(!unset.contains("GraftGroupAggScan"), unset)
+    assert(!unset.contains("Exchange"), unset)
+    // the gate is live: with SPJ off the scan folds the partials
+    TestSpark.withConf(key -> "false") {
+      assert(finalPlan().contains("GraftGroupAggScan"))
+    }
+  }
+
   test("pushed answers equal the unpushed plan (incl. int SUM widening)") {
     val on = CatalogQueries.keyGroupByPushdown(spark, sf).collect().toSet
     withPushdownOff {

@@ -16,7 +16,7 @@ import graft.TestSpark
   * fall back to the base, and incremental refresh (append-only partial
   * rows from the CDC delta) keeps both the answers and the firing
   * exact — a group spanning several partial rows re-aggregates. */
-class MviewSpec extends AnyFunSuite {
+class MviewSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def setup(): Unit = {
@@ -459,8 +459,7 @@ class MviewSpec extends AnyFunSuite {
     spark.sql(
       """CREATE TABLE graft.mv.sbase (k BIGINT, tag STRING, v BIGINT)
         |TBLPROPERTIES('keyCols'='k', 'numRegions'='4')""".stripMargin)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_mv_stream_ckpt").toString
+    val ckpt = tempDir("graft_mv_stream_ckpt").toString
     val in = MemoryStream[(Long, String, Long)]
     val q = in.toDF().toDF("k", "tag", "v").writeStream
       .option("checkpointLocation", ckpt)

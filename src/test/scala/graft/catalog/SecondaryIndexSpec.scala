@@ -20,7 +20,7 @@ import graft.TestSpark
   * HBase lineage lacks for non-rowkey predicates (a non-rowkey filter
   * scans every region there).
   */
-class SecondaryIndexSpec extends AnyFunSuite {
+class SecondaryIndexSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def setup(): Unit = {
@@ -388,8 +388,7 @@ class SecondaryIndexSpec extends AnyFunSuite {
     spark.sql(
       """CREATE TABLE graft.idx.sbase (k BIGINT, tag STRING)
         |TBLPROPERTIES('keyCols'='k', 'numRegions'='4')""".stripMargin)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_idx_stream_ckpt").toString
+    val ckpt = tempDir("graft_idx_stream_ckpt").toString
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("k", "tag").writeStream
       .option("checkpointLocation", ckpt)

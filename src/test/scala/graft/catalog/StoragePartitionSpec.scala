@@ -319,10 +319,8 @@ class StoragePartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val table = cat.loadTable(Identifier.of(Array("spj"), "pack_s"))
       .asInstanceOf[GraftTable]
     assert(TableMeta.loadRegions(table.tableDir).size == 12) // 3×4 buckets
-    val key = "spark.sql.files.minPartitionNum"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "2")
-    try {
+    TestSpark.withConf("spark.sql.files.minPartitionNum" -> "2",
+        TestSpark.SparkDefaultSplit) {
       val parts = table.newScanBuilder(
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
           java.util.Collections.emptyMap())).build()
@@ -338,9 +336,6 @@ class StoragePartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
         """SELECT o_orderkey, count(*) AS n FROM graft.spj.pack_s
           |GROUP BY o_orderkey""".stripMargin)
       assert(shuffles(finalPlan(df)) == 0)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
     spark.sql("DROP TABLE graft.spj.pack_s")
   }

@@ -20,17 +20,20 @@ class QuantilesSpec extends AnyFunSuite {
     sorted(math.ceil(p * xs.size).toLong.toInt - 1)
   }
 
+  /** Checks every target against [[definitional]]; returns the fused
+    * resolve's collected slice rows (−1 when it did not run). */
   private def check(xs: Seq[Double], accuracy: Int = 10000,
-      fuseLimit: Long = 1L << 20): Unit = {
+      fuseLimit: Long = 1L << 20): Long = {
     import spark.implicits._
-    val got = Quantiles
-      .exactPercentiles(xs.toDF("x"), "x", Ps, accuracy, fuseLimit)
-      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    val (df, sliceRows) = Quantiles
+      .exactPercentilesSliced(xs.toDF("x"), "x", Ps, accuracy, fuseLimit)
+    val got = df.collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     Ps.foreach { p =>
       assert(got(p) == definitional(xs, p),
         s"p=$p acc=$accuracy n=${xs.size}: got ${got(p)}, " +
           s"want ${definitional(xs, p)}")
     }
+    sliceRows
   }
 
   test("uniform random doubles: exact at every target") {
@@ -71,14 +74,12 @@ class QuantilesSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(23)
     val xs = Seq.fill(5000)(rnd.nextDouble()) ++ Seq.fill(45000)(2.0)
     val accuracy = 2000
-    Quantiles.lastFusedSliceRows = -1L
-    check(xs, accuracy)
+    val sliceRows = check(xs, accuracy)
     val n = xs.size
     val bound = 8L * (n / accuracy + 1) * Ps.size
-    assert(Quantiles.lastFusedSliceRows >= 0L,
-      "expected the fused branch to run")
-    assert(Quantiles.lastFusedSliceRows <= bound,
-      s"fused slice collected ${Quantiles.lastFusedSliceRows} rows, " +
+    assert(sliceRows >= 0L, "expected the fused branch to run")
+    assert(sliceRows <= bound,
+      s"fused slice collected $sliceRows rows, " +
         s"sketch bound is $bound — duplicate mass leaked into the slice")
     // same distribution through the distributed pass-3 branch
     check(xs, accuracy, fuseLimit = 0L)

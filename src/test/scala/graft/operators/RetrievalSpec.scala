@@ -9,7 +9,7 @@ import graft.TestSpark
   * independent brute-force or window formulation recomputed in-suite.
   * (Cross-engine value parity is covered by the DuckDB oracle gate.)
   */
-class RetrievalSpec extends AnyFunSuite {
+class RetrievalSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sfDir
 
@@ -44,7 +44,7 @@ class RetrievalSpec extends AnyFunSuite {
       .map { case (t, i) => (i.toLong, t, "en", "src0", t.length.toLong) }
     import spark.implicits._
     val df = rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = s"/tmp/graft_editrec_${ProcessHandle.current().pid()}"
+    val tmp = tempDir("graft_editrec").toString
     df.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val pairs = TextOps.dedupEdit(spark, tmp)
       .filter(col("da") === 0)

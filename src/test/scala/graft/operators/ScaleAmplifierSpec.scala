@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +12,7 @@ import graft.{ScaleBench, TestSpark}
   * near-dup pair set of the amplified corpus is exactly factor× the
   * base's. Checked by brute force (the pipelines' own word-hash
   * arithmetic, every pair), not through LSH. */
-class ScaleAmplifierSpec extends AnyFunSuite {
+class ScaleAmplifierSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   /** All unordered pairs with word-hash Jaccard >= 0.9, brute force. */
@@ -34,7 +32,7 @@ class ScaleAmplifierSpec extends AnyFunSuite {
   test("renamed replicas preserve pair density exactly; no " +
       "cross-replica pairs") {
     val src = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft_amp_spec").toString
+    val out = tempDir("graft_amp_spec").toString
     val factor = 3
     ScaleBench.generateRenamedDocs(spark, src, out, factor)
     val base = spark.read.parquet(s"$src/documents.parquet")

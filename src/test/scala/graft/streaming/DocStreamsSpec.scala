@@ -7,7 +7,7 @@ import graft.TestSpark
 /** The streaming ingest screen must emit exactly the batch screen's
   * matches: same historical corpus, incoming docs split across two
   * micro-batches, union of per-epoch outputs == the batch face. */
-class DocStreamsSpec extends AnyFunSuite {
+class DocStreamsSpec extends AnyFunSuite with graft.TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("streaming dedup-at-ingest equals the batch screen across " +
@@ -16,7 +16,7 @@ class DocStreamsSpec extends AnyFunSuite {
     val all = spark.read.parquet(s"$sf/documents.parquet")
     val hist = all.filter(pmod(col("doc_id"), lit(5)) =!= 4)
     val inc = all.filter(pmod(col("doc_id"), lit(5)) === 4)
-    val base = s"/tmp/graft_docstream_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_docstream").toString
     val staging = s"$base/staging"
     // two files → two micro-batches (maxFilesPerTrigger=1)
     inc.filter(col("doc_id") < 250).coalesce(1)

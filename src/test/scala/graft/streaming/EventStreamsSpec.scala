@@ -127,8 +127,7 @@ class EventStreamsSpec extends AnyFunSuite with graft.TempDirs {
         |  event_id BIGINT, ts TIMESTAMP, user_id BIGINT,
         |  event_type STRING, value DOUBLE)
         |TBLPROPERTIES('keyCols'='event_id', 'numRegions'='4')""".stripMargin)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_native_sink_ckpt").toString
+    val ckpt = tempDir("graft_native_sink_ckpt").toString
     val stream = EventStreams.asStream(spark, TestSpark.sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value")
     val q = stream.writeStream
@@ -160,8 +159,7 @@ class EventStreamsSpec extends AnyFunSuite with graft.TempDirs {
         |TBLPROPERTIES('keyCols'='vec_id')""".stripMargin)
     graft.functions.VectorOps.register(spark)
     val in = MemoryStream[(Long, Array[Float], Array[Byte])]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_vec_sink_ckpt").toString
+    val ckpt = tempDir("graft_vec_sink_ckpt").toString
     val q = in.toDF().toDF("vec_id", "emb", "payload").writeStream
       .option("checkpointLocation", ckpt)
       .outputMode("append")
@@ -198,8 +196,7 @@ class EventStreamsSpec extends AnyFunSuite with graft.TempDirs {
       """CREATE TABLE graft.stream.pipe_dst (k INT, v2 INT)
         |TBLPROPERTIES('keyCols'='k')""".stripMargin)
     spark.sql("INSERT INTO graft.stream.pipe_src VALUES (1, 10), (2, 20)")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_pipe_ckpt").toString
+    val ckpt = tempDir("graft_pipe_ckpt").toString
     val q = spark.readStream.table("graft.stream.pipe_src")
       .selectExpr("k", "v * 2 AS v2")
       .writeStream

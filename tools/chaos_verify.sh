@@ -24,6 +24,8 @@ SF=${SF:-/root/testdata/sf0.01}
 ADDOPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 CP="$(dirname "$0")/../target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 WH=/tmp/graft_chaos_wh
+# the private warehouse reaches both mains through the one session override
+CONF="spark.sql.catalog.graft=graft.catalog.GraftCatalog;spark.sql.catalog.graft.warehouse=$WH"
 LOG=/tmp/graft_chaos_logs
 mkdir -p $LOG
 RC=0
@@ -31,9 +33,7 @@ RC=0
 run_verify() { # out, logfile
   local args=("$SF" "$1")
   [ "$FILTER" != "all" ] && args+=("$FILTER")
-  SPARK_GRAFT_CPUS=4 java -Xmx8g $ADDOPENS \
-    -Dspark.sql.catalog.graft=graft.catalog.GraftCatalog \
-    -Dspark.sql.catalog.graft.warehouse=$WH \
+  SPARK_GRAFT_CPUS=4 SPARK_GRAFT_CONF="$CONF" java -Xmx8g $ADDOPENS \
     -cp "$CP" graft.Verify "${args[@]}" > "$2" 2>&1
 }
 
@@ -71,7 +71,7 @@ for i in $(seq 1 $ITER); do
       [ "$FILTER" != "all" ] && BENCH_ONLY="$FILTER"
       SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=8 \
         ${BENCH_ONLY:+SPARK_GRAFT_ONLY="$BENCH_ONLY"} \
-        SPARK_GRAFT_CONF="spark.sql.catalog.graft=graft.catalog.GraftCatalog;spark.sql.catalog.graft.warehouse=$WH" \
+        SPARK_GRAFT_CONF="$CONF" \
         java -Xmx8g $ADDOPENS -cp "$CP" graft.Bench > $LOG/mb$i.log 2>&1 & PB=$!
       wait $PA; wait $PB; RB=$?
       check /tmp/graft_chaos_a $LOG/mc$i.log; RA=$?
