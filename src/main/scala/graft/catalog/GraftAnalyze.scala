@@ -46,9 +46,9 @@ object GraftAnalyze {
     if (todo.isEmpty) return (0, statFields.size)
 
     // distributed stat computation: per file, read ONLY the missing
-    // columns (RowReader projects; a column absent from an old file —
-    // e.g. ALTER-added — reads as null and counts into `nulls`, which
-    // is exactly its true stat)
+    // columns (the region reader projects; a column absent from an old
+    // file — e.g. ALTER-added — reads as its existence default or null,
+    // which is exactly its true stat)
     val dirPath = table.tableDir.getPath
     val fieldJson = statFields.map(f => f.name -> StructType(Seq(f)).json)
       .toMap
@@ -63,18 +63,14 @@ object GraftAnalyze {
         val sub = StructType(jsons.map(j =>
           DataType.fromJson(j).asInstanceOf[StructType].fields.head))
         val trackers = sub.fields.map(ColStats.tracker)
-        val rd = new ParquetRowIO.RowReader(
+        val rd = new ParquetColumnarIO.ColumnarReader(
           new File(dirPath, file).getPath, sub, Nil)
-        try {
-          var row = rd.next()
-          while (row != null) {
-            var i = 0
-            while (i < trackers.length) {
-              if (row.isNullAt(i)) trackers(i).nulls += 1
-              else trackers(i).observe(row, i)
-              i += 1
-            }
-            row = rd.next()
+        try rd.rows().foreach { row =>
+          var i = 0
+          while (i < trackers.length) {
+            if (row.isNullAt(i)) trackers(i).nulls += 1
+            else trackers(i).observe(row, i)
+            i += 1
           }
         } finally rd.close()
         file -> trackers.map(t => t.name -> t.stat).toMap

@@ -417,9 +417,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         // CURRENT_DEFAULT in the field metadata) and the EXISTENCE
         // default — rows in region files written before the column
         // existed read the default, not NULL (Spark's parquet readers
-        // honor EXISTS_DEFAULT for absent columns since 3.4; the graft
-        // row fallback implements the same contract in
-        // ParquetRowIO.RowReader). Constant defaults only: an
+        // honor EXISTS_DEFAULT for absent columns since 3.4, and the
+        // graft region reader is Spark's). Constant defaults only: an
         // existence default must be a literal the readers can
         // materialize with no evaluation context — that is the same
         // restriction Spark's own sources enforce.

@@ -132,9 +132,8 @@ object GraftCluster {
         if (any) Iterator.single(w.commit()) else { w.abort(); Iterator.empty }
       }.collect()
     val newRegions = GraftCommits.withBlockHosts(t.tableDir,
-      GraftCommits.toRegions(GraftCommits.commits(
-        messages.map(_.asInstanceOf[
-          org.apache.spark.sql.connector.write.WriterCommitMessage]))))
+      GraftCommits.commits(messages.map(_.asInstanceOf[
+        org.apache.spark.sql.connector.write.WriterCommitMessage])))
 
     // Some(previousRetired) on success (their files age out now, like
     // compaction's cycle), None when the snapshot changed under us

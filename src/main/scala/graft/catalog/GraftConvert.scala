@@ -40,11 +40,13 @@ object GraftConvert {
     case _ => false
   }
 
-  /** One source file's scan result, computed executor-side. */
-  private final case class FileScan(path: String, rows: Long,
-      sorted: Boolean, nullKeys: Boolean,
-      mins: Seq[String], maxs: Seq[String],
-      stats: Map[String, ColStat])
+  /** One source file's scan result, computed executor-side: its
+    * manifest entry as [[RegionStats]] derives it, under the source
+    * path. */
+  private final case class FileScan(path: String, sorted: Boolean,
+      nullKeys: Boolean, region: RegionMeta) {
+    def rows: Long = region.rows
+  }
 
   /** Returns (file, status "linked"|"rewritten", rows) per source
     * file, in file order. */
@@ -72,7 +74,8 @@ object GraftConvert {
     }
 
     // requested row layout for the scan: keys first, then the stat-
-    // tracked non-key columns — a column-pruned read of each file
+    // tracked non-key columns — a column-pruned read of each file, whose
+    // RegionStats tracks exactly those non-key columns
     val keyFields = keys.map(k =>
       schema.fields.find(_.name.equalsIgnoreCase(k)).get)
     val statFields = schema.fields.toSeq
@@ -88,47 +91,20 @@ object GraftConvert {
       .parallelize(files.map(_.toString), parallelism)
       .map { path =>
         val req = DataType.fromJson(reqJson).asInstanceOf[StructType]
-        val keyTypes = (0 until nKeys).map(req.fields(_).dataType).toArray
-        val trackers = (nKeys until req.fields.length)
-          .map(i => ColStats.tracker(req.fields(i))).toArray
-        val mins = Array.fill[Array[Byte]](nKeys)(null)
-        val maxs = Array.fill[Array[Byte]](nKeys)(null)
+        val keyIdx = (0 until nKeys).toArray
+        val keyTypes = keyIdx.map(req.fields(_).dataType)
+        val stats = new RegionStats(req, keyIdx)
         var prev: Array[Array[Byte]] = null
-        var rows = 0L
         var sorted = true
-        var nullKeys = false
-        val rd = new ParquetRowIO.RowReader(path, req, Nil)
-        try {
-          var row = rd.next()
-          while (row != null && !nullKeys) {
-            val encs = new Array[Array[Byte]](nKeys)
-            var d = 0
-            while (d < nKeys && !nullKeys) {
-              if (row.isNullAt(d)) nullKeys = true
-              else {
-                val v = keyTypes(d) match {
-                  case org.apache.spark.sql.types.BooleanType => row.getBoolean(d)
-                  case org.apache.spark.sql.types.ByteType => row.getByte(d)
-                  case org.apache.spark.sql.types.ShortType => row.getShort(d)
-                  case org.apache.spark.sql.types.IntegerType |
-                      org.apache.spark.sql.types.DateType => row.getInt(d)
-                  case org.apache.spark.sql.types.LongType |
-                      org.apache.spark.sql.types.TimestampType => row.getLong(d)
-                  case org.apache.spark.sql.types.FloatType => row.getFloat(d)
-                  case org.apache.spark.sql.types.DoubleType => row.getDouble(d)
-                  case org.apache.spark.sql.types.StringType =>
-                    row.getUTF8String(d).toString
-                  case other => throw new IllegalStateException(other.toString)
-                }
-                encs(d) = KeyCodec.encode(keyTypes(d), v)
-                if (mins(d) == null || KeyCodec.compare(encs(d), mins(d)) < 0)
-                  mins(d) = encs(d)
-                if (maxs(d) == null || KeyCodec.compare(encs(d), maxs(d)) > 0)
-                  maxs(d) = encs(d)
-              }
-              d += 1
-            }
-            if (!nullKeys) {
+        val rd = new ParquetColumnarIO.ColumnarReader(path, req, Nil)
+        val nullKeys = try {
+          val rows = rd.rows()
+          var nullKey = false
+          while (rows.hasNext && !nullKey) {
+            val row = rows.next()
+            if (keyIdx.exists(row.isNullAt)) nullKey = true
+            else {
+              val encs = RegionWriter.encodeKeys(row, keyIdx, keyTypes)
               if (prev != null && sorted) {
                 var c = 0
                 var cmp = 0
@@ -138,22 +114,12 @@ object GraftConvert {
                 if (cmp > 0) sorted = false
               }
               prev = encs
-              var t = 0
-              while (t < trackers.length) {
-                val i = nKeys + t
-                if (row.isNullAt(i)) trackers(t).nulls += 1
-                else trackers(t).observe(row, i)
-                t += 1
-              }
-              rows += 1
+              stats.add(row, encs)
             }
-            row = rd.next()
           }
+          nullKey
         } finally rd.close()
-        FileScan(path, rows, sorted, nullKeys,
-          mins.map(b => if (b == null) "" else KeyCodec.toHex(b)).toSeq,
-          maxs.map(b => if (b == null) "" else KeyCodec.toHex(b)).toSeq,
-          trackers.map(t => t.name -> t.stat).toMap)
+        FileScan(path, sorted, nullKeys, stats.toMeta(path, -1))
       }.collect().toSeq
 
     val badKeys = scans.filter(_.nullKeys)
@@ -185,7 +151,7 @@ object GraftConvert {
           val in = fs.open(srcPath)
           try java.nio.file.Files.copy(in, to) finally in.close()
         }
-        RegionMeta(name, s.rows, s.mins, s.maxs, stats = s.stats)
+        s.region.copy(file = name)
       }
       if (regions.nonEmpty) TableMeta.appendRegions(tgt.tableDir, regions)
       // the stragglers take the normal range-shuffled sorted write

@@ -3,7 +3,6 @@ package graft.catalog
 import java.io.File
 
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.DataType
 import graft.codec.KeyCodec
 import graft.prune.KeyRanges.{Iv, IvSet}
 
@@ -268,77 +267,28 @@ object GraftDelete {
 
   /** Rewrite one boundary region without the rows whose leading key
     * falls in `ivs`; None if every row matched (region vanishes). The
-    * new file keeps the region's sort (filtering preserves order), its
-    * bucket, and recomputed key bounds + column stats. */
+    * new file keeps the region's sort (filtering preserves order) and
+    * its bucket; it is a [[RegionWriter]] file. */
   private def rewriteRegion(tableDir: File, meta: TableMeta,
       r: RegionMeta, ivs: IvSet): Option[RegionMeta] = {
-    val schema = meta.schema
-    val keyIdx = meta.keyCols.map(schema.fieldIndex).toArray
+    val keyIdx = RegionWriter.keyIdx(meta)
     val keyTypes = meta.keyTypes.toArray
-    val fileName =
-      s"delete-rw-${r.id}-${java.util.UUID.randomUUID()}.parquet"
-    val reader = new ParquetRowIO.RowReader(
-      new File(tableDir, r.file).getPath, schema, Nil)
-    val writer = new ParquetRowIO.RowWriter(
-      new File(tableDir, fileName).getPath, schema,
-      meta.properties.get(TableMeta.PageRowLimitProp)
-        .map(_.toInt).getOrElse(0),
-      TableMeta.bloomCols(meta.properties))
-    val statCols = schema.fields.indices
-      .filterNot(keyIdx.contains(_))
-      .filter(i => ColStats.trackable(schema.fields(i).dataType)).toArray
-    val trackers = statCols.map(i => ColStats.tracker(schema.fields(i)))
-    val mins = Array.fill[Array[Byte]](keyIdx.length)(null)
-    val maxs = Array.fill[Array[Byte]](keyIdx.length)(null)
-    var rows = 0L
-    def keyEnc(row: org.apache.spark.sql.catalyst.InternalRow, d: Int)
-        : Array[Byte] = {
-      import org.apache.spark.sql.types._
-      val v: Any = keyTypes(d) match {
-        case BooleanType => row.getBoolean(keyIdx(d))
-        case ByteType => row.getByte(keyIdx(d))
-        case ShortType => row.getShort(keyIdx(d))
-        case IntegerType | DateType => row.getInt(keyIdx(d))
-        case LongType | TimestampType => row.getLong(keyIdx(d))
-        case FloatType => row.getFloat(keyIdx(d))
-        case DoubleType => row.getDouble(keyIdx(d))
-        case StringType => row.getUTF8String(keyIdx(d)).toString
-        case other => throw new IllegalStateException(other.toString)
-      }
-      KeyCodec.encode(keyTypes(d), v)
-    }
+    val reader = new ParquetColumnarIO.ColumnarReader(
+      new File(tableDir, r.file).getPath, meta.schema, Nil)
+    val writer = RegionWriter(tableDir,
+      s"delete-rw-${r.id}-${java.util.UUID.randomUUID()}.parquet",
+      meta, r.bucket)
+    var kept: Option[RegionMeta] = None
     try {
-      var row = reader.next()
-      while (row != null) {
-        val e0 = keyEnc(row, 0)
-        val matches = ivs.exists(_.overlaps(e0, e0)) // point membership
-        if (!matches) {
-          var d = 0
-          while (d < keyIdx.length) {
-            val e = if (d == 0) e0 else keyEnc(row, d)
-            if (mins(d) == null || KeyCodec.compare(e, mins(d)) < 0)
-              mins(d) = e
-            if (maxs(d) == null || KeyCodec.compare(e, maxs(d)) > 0)
-              maxs(d) = e
-            d += 1
-          }
-          var c = 0
-          while (c < statCols.length) {
-            if (row.isNullAt(statCols(c))) trackers(c).nulls += 1
-            else trackers(c).observe(row, statCols(c))
-            c += 1
-          }
-          writer.write(row)
-          rows += 1
-        }
-        row = reader.next()
+      reader.rows().foreach { row =>
+        val encs = RegionWriter.encodeKeys(row, keyIdx, keyTypes)
+        // point membership of the leading key
+        if (!ivs.exists(_.overlaps(encs(0), encs(0)))) writer.write(row, encs)
       }
-    } finally { reader.close(); writer.close() }
-    if (rows == 0) { new File(tableDir, fileName).delete(); None }
-    else Some(RegionMeta(fileName, rows,
-      mins.map(KeyCodec.toHex).toSeq, maxs.map(KeyCodec.toHex).toSeq,
-      r.bucket,
-      stats = statCols.zip(trackers)
-        .map { case (i, t) => schema.fields(i).name -> t.stat }.toMap))
+    } finally {
+      reader.close()
+      kept = writer.close()
+    }
+    kept
   }
 }

@@ -132,38 +132,14 @@ object GraftMerge {
   }
 
   /** K-way merge one group of key-sorted region files into one sorted
-    * file; on `fold`, equal-full-key rows keep the newest source
-    * region's row (ties within a region: the later row). Tracks key
-    * bounds + column stats like [[GraftSplit]]. Runs on an executor. */
+    * [[RegionWriter]] file; on `fold`, equal-full-key rows keep the
+    * newest source region's row (ties within a region: the later row).
+    * Runs on an executor. */
   private def mergeGroup(dirPath: String, meta: TableMeta,
       group: Seq[RegionMeta], fold: Boolean): RegionMeta = {
-    import org.apache.spark.sql.types._
     val tableDir = new File(dirPath)
-    val schema = meta.schema
-    val keyIdx = meta.keyCols.map(schema.fieldIndex).toArray
+    val keyIdx = RegionWriter.keyIdx(meta)
     val keyTypes = meta.keyTypes.toArray
-    val pageLimit = meta.properties.get(TableMeta.PageRowLimitProp)
-      .map(_.toInt).getOrElse(0)
-    val blooms = TableMeta.bloomCols(meta.properties)
-    val statCols = schema.fields.indices
-      .filterNot(keyIdx.contains(_))
-      .filter(i => ColStats.trackable(schema.fields(i).dataType)).toArray
-
-    def encKey(row: InternalRow): Array[Array[Byte]] =
-      Array.tabulate(keyIdx.length) { d =>
-        val v: Any = keyTypes(d) match {
-          case BooleanType => row.getBoolean(keyIdx(d))
-          case ByteType => row.getByte(keyIdx(d))
-          case ShortType => row.getShort(keyIdx(d))
-          case IntegerType | DateType => row.getInt(keyIdx(d))
-          case LongType | TimestampType => row.getLong(keyIdx(d))
-          case FloatType => row.getFloat(keyIdx(d))
-          case DoubleType => row.getDouble(keyIdx(d))
-          case StringType => row.getUTF8String(keyIdx(d)).toString
-          case other => throw new IllegalStateException(other.toString)
-        }
-        KeyCodec.encode(keyTypes(d), v)
-      }
     def cmpKeys(a: Array[Array[Byte]], b: Array[Array[Byte]]): Int = {
       var d = 0
       while (d < a.length) {
@@ -175,43 +151,23 @@ object GraftMerge {
     }
 
     val srcIds = group.map(_.id).toArray
-    val readers = group.map(r => new ParquetRowIO.RowReader(
-      new File(tableDir, r.file).getPath, schema, Nil)).toArray
+    val readers = group.map(r => new ParquetColumnarIO.ColumnarReader(
+      new File(tableDir, r.file).getPath, meta.schema, Nil)).toArray
+    val rows = readers.map(_.rows())
+    // a head is a view into its reader's batch: valid until that
+    // reader advances
     val heads = new Array[InternalRow](readers.length)
     val headKeys = new Array[Array[Array[Byte]]](readers.length)
-    def advance(i: Int): Unit = {
-      heads(i) = readers(i).next()
-      headKeys(i) = if (heads(i) == null) null else encKey(heads(i))
-    }
+    def advance(i: Int): Unit =
+      if (rows(i).hasNext) {
+        heads(i) = rows(i).next()
+        headKeys(i) = RegionWriter.encodeKeys(heads(i), keyIdx, keyTypes)
+      } else { heads(i) = null; headKeys(i) = null }
 
-    val fileName =
-      s"merge-${group.head.id}-${java.util.UUID.randomUUID()}.parquet"
-    val writer = new ParquetRowIO.RowWriter(
-      new File(tableDir, fileName).getPath, schema, pageLimit, blooms)
-    val trackers = statCols.map(i => ColStats.tracker(schema.fields(i)))
-    val mins = Array.fill[Array[Byte]](keyIdx.length)(null)
-    val maxs = Array.fill[Array[Byte]](keyIdx.length)(null)
-    var rows = 0L
-
-    def flush(row: InternalRow, key: Array[Array[Byte]]): Unit = {
-      var d = 0
-      while (d < keyIdx.length) {
-        if (mins(d) == null || KeyCodec.compare(key(d), mins(d)) < 0)
-          mins(d) = key(d)
-        if (maxs(d) == null || KeyCodec.compare(key(d), maxs(d)) > 0)
-          maxs(d) = key(d)
-        d += 1
-      }
-      var c = 0
-      while (c < statCols.length) {
-        if (row.isNullAt(statCols(c))) trackers(c).nulls += 1
-        else trackers(c).observe(row, statCols(c))
-        c += 1
-      }
-      writer.write(row)
-      rows += 1
-    }
-
+    val writer = RegionWriter(tableDir,
+      s"merge-${group.head.id}-${java.util.UUID.randomUUID()}.parquet",
+      meta, group.head.bucket)
+    var merged: Option[RegionMeta] = None
     try {
       readers.indices.foreach(advance)
       // pending row for the fold: same-key emissions arrive in
@@ -231,24 +187,22 @@ object GraftMerge {
           i += 1
         }
         val row = heads(pick); val key = headKeys(pick)
-        if (!fold) flush(row, key)
+        if (!fold) writer.write(row, key)
         else {
           if (pendRow != null && cmpKeys(pendKey, key) != 0)
-            flush(pendRow, pendKey)
-          pendRow = row; pendKey = key // later same-key emission replaces
+            writer.write(pendRow, pendKey)
+          // a later same-key emission replaces it; it outlives
+          // advance(pick), so it is a copy
+          pendRow = row.copy(); pendKey = key
         }
         advance(pick)
         if (heads(pick) == null) live -= 1
       }
-      if (fold && pendRow != null) flush(pendRow, pendKey)
+      if (fold && pendRow != null) writer.write(pendRow, pendKey)
     } finally {
       readers.foreach(_.close())
-      writer.close()
+      merged = writer.close()
     }
-    RegionMeta(fileName, rows,
-      mins.map(KeyCodec.toHex).toSeq, maxs.map(KeyCodec.toHex).toSeq,
-      group.head.bucket,
-      stats = statCols.zip(trackers)
-        .map { case (i, t) => schema.fields(i).name -> t.stat }.toMap)
+    merged.get
   }
 }

@@ -125,7 +125,7 @@ class GraftReplaceWrite(tableDir: File, meta: TableMeta,
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val newRegions = GraftCommits.withBlockHosts(tableDir,
-        GraftCommits.toRegions(GraftCommits.commits(messages)))
+        GraftCommits.commits(messages))
       // the regions the (runtime-filtered) scan actually read — the
       // rewrite's output is exactly their replacement
       val replaced = op.scan.selectedRegions.map(_.file).toSet

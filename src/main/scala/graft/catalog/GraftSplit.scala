@@ -164,103 +164,48 @@ object GraftSplit {
     (split.size, split.map(_._2.size).sum)
   }
 
-  /** Re-cut one region file into key-contiguous parts of roughly
-    * rows/k rows each (k = ceil(bytes/target)), boundaries only where
-    * the leading key changes. Sequential copy preserves the region
-    * sort; per-part key bounds and column stats are tracked exactly
-    * like [[GraftDelete]]'s boundary rewrite. Runs on an executor. */
+  /** Rows per part when a region of `rows` rows and `bytes` bytes is
+    * re-cut into k = ceil(bytes/target) parts (at least 2). Long
+    * throughout: a 3 GiB region split with `target_bytes => 1` has
+    * k = 3·2^30 parts, past Int. */
+  private[catalog] def rowsPerPart(rows: Long, bytes: Long,
+      targetBytes: Long): Long = {
+    def ceilDiv(a: Long, b: Long): Long = a / b + (if (a % b == 0) 0 else 1)
+    math.max(1L, ceilDiv(rows, math.max(2L, ceilDiv(bytes, targetBytes))))
+  }
+
+  /** Re-cut one region file into key-contiguous parts of
+    * [[rowsPerPart]] rows each, boundaries only where the leading key
+    * changes. Sequential copy preserves the region sort; each part is a
+    * [[RegionWriter]]. Runs on an executor. */
   private def splitRegion(dirPath: String, meta: TableMeta,
       r: RegionMeta, targetBytes: Long): Seq[RegionMeta] = {
-    import org.apache.spark.sql.types._
     val tableDir = new File(dirPath)
-    val schema = meta.schema
-    val keyIdx = meta.keyCols.map(schema.fieldIndex).toArray
+    val keyIdx = RegionWriter.keyIdx(meta)
     val keyTypes = meta.keyTypes.toArray
-    val len = new File(tableDir, r.file).length()
-    val k = math.max(2L, (len + targetBytes - 1) / targetBytes).toInt
-    val rowsPer = math.max(1L, (r.rows + k - 1) / k)
-    val pageLimit = meta.properties.get(TableMeta.PageRowLimitProp)
-      .map(_.toInt).getOrElse(0)
-    val blooms = TableMeta.bloomCols(meta.properties)
-    val statCols = schema.fields.indices
-      .filterNot(keyIdx.contains(_))
-      .filter(i => ColStats.trackable(schema.fields(i).dataType)).toArray
-
-    def keyEnc(row: org.apache.spark.sql.catalyst.InternalRow, d: Int)
-        : Array[Byte] = {
-      val v: Any = keyTypes(d) match {
-        case BooleanType => row.getBoolean(keyIdx(d))
-        case ByteType => row.getByte(keyIdx(d))
-        case ShortType => row.getShort(keyIdx(d))
-        case IntegerType | DateType => row.getInt(keyIdx(d))
-        case LongType | TimestampType => row.getLong(keyIdx(d))
-        case FloatType => row.getFloat(keyIdx(d))
-        case DoubleType => row.getDouble(keyIdx(d))
-        case StringType => row.getUTF8String(keyIdx(d)).toString
-        case other => throw new IllegalStateException(other.toString)
-      }
-      KeyCodec.encode(keyTypes(d), v)
-    }
-
+    val rowsPer = rowsPerPart(r.rows,
+      new File(tableDir, r.file).length(), targetBytes)
     val out = scala.collection.mutable.ArrayBuffer.empty[RegionMeta]
-    var writer: ParquetRowIO.RowWriter = null
-    var fileName: String = null
-    var trackers: Array[ColStats.Tracker] = null
-    var mins: Array[Array[Byte]] = null
-    var maxs: Array[Array[Byte]] = null
-    var rowsInPart = 0L
+    def openPart(): RegionWriter = RegionWriter(tableDir,
+      s"split-${r.id}-${out.size}-${java.util.UUID.randomUUID()}.parquet",
+      meta, r.bucket)
 
-    def openPart(): Unit = {
-      fileName = s"split-${r.id}-${out.size}-" +
-        s"${java.util.UUID.randomUUID()}.parquet"
-      writer = new ParquetRowIO.RowWriter(
-        new File(tableDir, fileName).getPath, schema, pageLimit, blooms)
-      trackers = statCols.map(i => ColStats.tracker(schema.fields(i)))
-      mins = Array.fill[Array[Byte]](keyIdx.length)(null)
-      maxs = Array.fill[Array[Byte]](keyIdx.length)(null)
-      rowsInPart = 0L
-    }
-    def closePart(): Unit = {
-      writer.close()
-      if (rowsInPart == 0L) new File(tableDir, fileName).delete()
-      else out += RegionMeta(fileName, rowsInPart,
-        mins.map(KeyCodec.toHex).toSeq, maxs.map(KeyCodec.toHex).toSeq,
-        r.bucket,
-        stats = statCols.zip(trackers)
-          .map { case (i, t) => schema.fields(i).name -> t.stat }.toMap)
-    }
-
-    val reader = new ParquetRowIO.RowReader(
-      new File(tableDir, r.file).getPath, schema, Nil)
+    val reader = new ParquetColumnarIO.ColumnarReader(
+      new File(tableDir, r.file).getPath, meta.schema, Nil)
+    var part = openPart()
     try {
-      openPart()
       var prevLead: Array[Byte] = null
-      var row = reader.next()
-      while (row != null) {
-        val e0 = keyEnc(row, 0)
-        if (rowsInPart >= rowsPer && prevLead != null &&
-          KeyCodec.compare(e0, prevLead) != 0) {
-          closePart(); openPart()
+      reader.rows().foreach { row =>
+        val encs = RegionWriter.encodeKeys(row, keyIdx, keyTypes)
+        if (part.rows >= rowsPer && prevLead != null &&
+          KeyCodec.compare(encs(0), prevLead) != 0) {
+          out ++= part.close()
+          part = openPart()
         }
-        var d = 0
-        while (d < keyIdx.length) {
-          val e = if (d == 0) e0 else keyEnc(row, d)
-          if (mins(d) == null || KeyCodec.compare(e, mins(d)) < 0) mins(d) = e
-          if (maxs(d) == null || KeyCodec.compare(e, maxs(d)) > 0) maxs(d) = e
-          d += 1
-        }
-        var c = 0
-        while (c < statCols.length) {
-          if (row.isNullAt(statCols(c))) trackers(c).nulls += 1
-          else trackers(c).observe(row, statCols(c))
-          c += 1
-        }
-        writer.write(row)
-        rowsInPart += 1
-        prevLead = e0
-        row = reader.next()
+        part.write(row, encs)
+        prevLead = encs(0)
       }
-      closePart()
+      out ++= part.close()
     } finally reader.close()
     out.toSeq
   }

@@ -1815,63 +1815,33 @@ final case class GraftReaderFactory(requiredJson: String,
       GraftMetaCols.names(f.name))), map)
   }
 
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val (dataSchema, posMap) = split(required)
-    val hasMeta = posMap.exists(_ < 0)
-    val (files, ids) = filesOf(partition)
-    new PartitionReader[InternalRow] {
-      private var idx = 0
-      private var cur: GraftPartitionReader = _
-      private var row: InternalRow = _
-      private var regionId = 0L
-      private var fileName: org.apache.spark.unsafe.types.UTF8String = _
-      override def next(): Boolean = {
-        while (true) {
-          if (cur == null) {
-            if (idx >= files.length) return false
-            cur = new GraftPartitionReader(files(idx), dataSchema,
-              dataFilters)
-            regionId = if (idx < ids.length) ids(idx) else 0L
-            fileName = org.apache.spark.unsafe.types.UTF8String
-              .fromString(new File(files(idx)).getName)
-            idx += 1
-          }
-          if (cur.next()) {
-            row = if (!hasMeta) cur.get() else project(cur.get())
-            return true
-          }
-          cur.close(); cur = null
-        }
-        false
-      }
-      private def project(data: InternalRow): InternalRow = {
-        val out = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(posMap.length)
-        var p = 0
-        while (p < posMap.length) {
-          posMap(p) match {
-            case -1 => out.update(p, regionId)
-            case -2 => out.update(p, fileName)
-            case i => out.update(p, data.get(i, dataSchema(i).dataType))
-          }
-          p += 1
-        }
-        out
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit = if (cur != null) cur.close()
-    }
-  }
-
   /** Region scans are columnar: Spark's vectorized parquet decoder
     * fills `ColumnarBatch`es that flow into whole-stage codegen through
     * one `ColumnarToRow` boundary — the plan every stock parquet table
-    * gets, now reachable from graft storage too. The row reader above
-    * remains as the universal fallback. A packed partition chains its
-    * files through one reader. */
+    * gets. A packed partition chains its files through one reader. */
   override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  /** Never called by Spark (every partition reads columnar, above); the
+    * interface requires it, so it flattens the columnar reader. */
+  override def createReader(partition: InputPartition)
+      : PartitionReader[InternalRow] = {
+    val batches = createColumnarReader(partition)
+    new PartitionReader[InternalRow] {
+      private var rows: java.util.Iterator[InternalRow] =
+        java.util.Collections.emptyIterator()
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (!rows.hasNext) {
+          if (!batches.next()) return false
+          rows = batches.get().rowIterator()
+        }
+        row = rows.next()
+        true
+      }
+      override def get(): InternalRow = row
+      override def close(): Unit = batches.close()
+    }
+  }
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -1935,14 +1905,4 @@ final case class GraftReaderFactory(requiredJson: String,
       override def close(): Unit = if (cur != null) cur.close()
     }
   }
-}
-
-final class GraftPartitionReader(file: String, required: StructType,
-    filters: Array[sources.Filter]) extends PartitionReader[InternalRow] {
-  private val reader = new ParquetRowIO.RowReader(file, required,
-    filters.toSeq)
-  private var current: InternalRow = _
-  override def next(): Boolean = { current = reader.next(); current != null }
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

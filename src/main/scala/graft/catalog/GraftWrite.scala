@@ -149,14 +149,9 @@ class GraftWrite(tableDir: File, meta: TableMeta, queryId: String,
   }
 }
 
-final case class RegionCommit(file: String, rows: Long,
-    mins: Seq[String], maxs: Seq[String], bucket: Int = -1,
-    stats: Map[String, ColStat] = Map.empty)
-    extends WriterCommitMessage
-
 /** One task may emit several region files (one per fixed region bucket
   * it received rows for, when the table declares `regionSplits`). */
-final case class RegionCommits(files: Seq[RegionCommit])
+final case class RegionCommits(files: Seq[RegionMeta])
     extends WriterCommitMessage
 
 /** Commit-message plumbing shared by the batch and streaming writes. */
@@ -171,8 +166,7 @@ private[catalog] object GraftCommits {
     GraftWriterFactory(tableDir.getPath, meta.schema.json,
       meta.keyCols.toArray,
       meta.splits.map(_.points.map(KeyCodec.toHex)).getOrElse(Array.empty),
-      meta.properties.get(TableMeta.PageRowLimitProp)
-        .map(_.toInt).getOrElse(0),
+      RegionWriter.pageRowLimit(meta),
       TableMeta.bloomCols(meta.properties).toArray,
       if (enforceChecks) GraftChecks.bound(meta) else Nil,
       if (enforceChecks) GraftGenerated.bound(meta) else Nil,
@@ -188,15 +182,11 @@ private[catalog] object GraftCommits {
         }
       } else Nil)
 
-  def commits(messages: Array[WriterCommitMessage]): Seq[RegionCommit] =
+  def commits(messages: Array[WriterCommitMessage]): Seq[RegionMeta] =
     messages.toSeq.flatMap {
       case RegionCommits(files) => files
       case other => throw new IllegalStateException(other.toString)
     }.filter(_.rows > 0)
-
-  def toRegions(cs: Seq[RegionCommit]): Seq[RegionMeta] =
-    cs.map(r => RegionMeta(r.file, r.rows, r.mins, r.maxs, r.bucket,
-      stats = r.stats))
 
   /** Locality hints for freshly committed regions (the reference's
     * `getPreferredLocations` source, `HBaseSQLReaderRDD:115-119`): on a
@@ -240,7 +230,7 @@ class GraftBatchWrite(tableDir: File, meta: TableMeta) extends BatchWrite {
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     TableMeta.appendRegions(tableDir, GraftCommits.withBlockHosts(tableDir,
-      GraftCommits.toRegions(GraftCommits.commits(messages))))
+      GraftCommits.commits(messages)))
     // HBase-style auto split: only when the table declares a max
     // region size ('graft.maxRegionBytes'); a no-op metadata check
     // otherwise
@@ -261,7 +251,7 @@ class GraftTruncateBatchWrite(tableDir: File, meta: TableMeta)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     TableMeta.overwriteRegions(tableDir,
       GraftCommits.withBlockHosts(tableDir,
-        GraftCommits.toRegions(GraftCommits.commits(messages))))
+        GraftCommits.commits(messages)))
     GraftSplit.maybeAutoSplit(
       org.apache.spark.sql.SparkSession.active, tableDir, meta)
   }
@@ -278,7 +268,7 @@ class GraftBranchBatchWrite(tableDir: File, meta: TableMeta,
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     TableMeta.appendBranch(tableDir, branch,
       GraftCommits.withBlockHosts(tableDir,
-        GraftCommits.toRegions(GraftCommits.commits(messages))),
+        GraftCommits.commits(messages)),
       autoCreate = true)
 }
 
@@ -290,7 +280,7 @@ class GraftCopyBatchWrite(tableDir: File, meta: TableMeta,
     fileKeys: Seq[String]) extends GraftBatchWrite(tableDir, meta) {
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val regions = GraftCommits.withBlockHosts(tableDir,
-      GraftCommits.toRegions(GraftCommits.commits(messages)))
+      GraftCommits.commits(messages))
     if (!TableMeta.commitCopy(tableDir, regions, fileKeys)) {
       GraftCommits.deleteFiles(tableDir, messages)
       throw new GraftCopyConflictException(
@@ -339,7 +329,7 @@ class GraftStreamingWrite(tableDir: File, meta: TableMeta, queryId: String)
     val commits = GraftCommits.commits(messages)
     val committed = TableMeta.commitEpoch(tableDir,
       GraftCommits.withBlockHosts(tableDir,
-        GraftCommits.toRegions(commits)), queryId, epochId)
+        commits), queryId, epochId)
     if (!committed) // duplicate replay: drop the rewritten files
       commits.foreach(r => new File(tableDir, r.file).delete())
   }
@@ -417,44 +407,14 @@ final class GraftDataWriter(dir: String, schemaJson: String,
   private val keyIdx = keyCols.map(schema.fieldIndex)
   private val keyTypes = keyIdx.map(schema.fields(_).dataType)
   private val splits: Array[Array[Byte]] = splitsHex.map(KeyCodec.fromHex)
-  // non-key columns whose min/max/null-count ride the manifest for
-  // driver-side region skipping (ColStats); collected inline — the
-  // writer walks every row for key encoding anyway
-  private val statCols: Array[Int] = schema.fields.indices
-    .filterNot(keyIdx.contains(_))
-    .filter(i => ColStats.trackable(schema.fields(i).dataType)).toArray
 
-  private final class FileState(val bucket: Int) {
-    val fileName =
-      f"part-$partitionId%05d-$taskId-${UUID.randomUUID()}.parquet"
-    val writer = new ParquetRowIO.RowWriter(
-      new File(dir, fileName).getPath, schema, pageRowLimit,
-      bloomCols.toSeq)
-    var rows = 0L
-    val mins = Array.fill[Array[Byte]](keyCols.length)(null)
-    val maxs = Array.fill[Array[Byte]](keyCols.length)(null)
-    val trackers: Array[ColStats.Tracker] =
-      statCols.map(i => ColStats.tracker(schema.fields(i)))
-    def toCommit: RegionCommit = RegionCommit(fileName, rows,
-      mins.map(b => if (b == null) "" else KeyCodec.toHex(b)).toSeq,
-      maxs.map(b => if (b == null) "" else KeyCodec.toHex(b)).toSeq, bucket,
-      trackers.map(t => t.name -> t.stat).toMap)
-  }
+  private var current: RegionWriter = _
+  private var closed = List.empty[RegionMeta]
+  private var opened = List.empty[String]
 
-  private var current: FileState = _
-  private var closed = List.empty[FileState]
-
-  /** Internal value of key dimension d, for the codec. */
-  private def keyValue(row: InternalRow, d: Int): Any = keyTypes(d) match {
-    case BooleanType => row.getBoolean(keyIdx(d))
-    case ByteType => row.getByte(keyIdx(d))
-    case ShortType => row.getShort(keyIdx(d))
-    case IntegerType | DateType => row.getInt(keyIdx(d))
-    case LongType | TimestampType => row.getLong(keyIdx(d))
-    case FloatType => row.getFloat(keyIdx(d))
-    case DoubleType => row.getDouble(keyIdx(d))
-    case StringType => row.getUTF8String(keyIdx(d)).toString
-    case other => throw new IllegalStateException(other.toString)
+  private def closeCurrent(): Unit = if (current != null) {
+    closed = current.close().toList ::: closed
+    current = null
   }
 
   private def bucketOf(encFirstKey: Array[Byte]): Int = {
@@ -494,45 +454,28 @@ final class GraftDataWriter(dir: String, schemaJson: String,
       if (row.isNullAt(keyIdx(d)))
         throw new IllegalArgumentException(
           s"null value in key column ${keyCols(d)}")
-      encs(d) = KeyCodec.encode(keyTypes(d), keyValue(row, d))
+      encs(d) = KeyCodec.encodeAt(row, keyIdx(d), keyTypes(d))
       d += 1
     }
     val bucket = if (splits.isEmpty) -1 else bucketOf(encs(0))
     if (current == null || bucket != current.bucket) {
-      if (current != null) { current.writer.close(); closed ::= current }
-      current = new FileState(bucket)
+      closeCurrent()
+      current = new RegionWriter(dir,
+        f"part-$partitionId%05d-$taskId-${UUID.randomUUID()}.parquet",
+        schema, keyIdx, pageRowLimit, bloomCols.toSeq, bucket)
+      opened ::= current.fileName
     }
-    d = 0
-    while (d < keyIdx.length) {
-      if (current.mins(d) == null ||
-        KeyCodec.compare(encs(d), current.mins(d)) < 0)
-        current.mins(d) = encs(d)
-      if (current.maxs(d) == null ||
-        KeyCodec.compare(encs(d), current.maxs(d)) > 0)
-        current.maxs(d) = encs(d)
-      d += 1
-    }
-    var c = 0
-    while (c < statCols.length) {
-      val i = statCols(c)
-      if (row.isNullAt(i)) current.trackers(c).nulls += 1
-      else current.trackers(c).observe(row, i)
-      c += 1
-    }
-    current.writer.write(row)
-    current.rows += 1
+    current.write(row, encs)
   }
 
   override def commit(): WriterCommitMessage = {
-    if (current != null) { current.writer.close(); closed ::= current }
-    current = null
-    RegionCommits(closed.reverse.map(_.toCommit))
+    closeCurrent()
+    RegionCommits(closed.reverse)
   }
 
   override def abort(): Unit = {
-    if (current != null) { current.writer.close(); closed ::= current }
-    current = null
-    closed.foreach(f => new File(dir, f.fileName).delete())
+    closeCurrent()
+    opened.foreach(f => new File(dir, f).delete())
   }
 
   override def close(): Unit = ()

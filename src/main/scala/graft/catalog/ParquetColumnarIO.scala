@@ -12,25 +12,28 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** Columnar (vectorized) reader for graft region files.
+/** The one reader of graft region files: every scan, and every
+  * maintenance rewrite (split, merge, the DELETE boundary rewrite,
+  * ANALYZE, CONVERT's scan), decodes through it, so a file a scan can
+  * read, a rewrite can read.
   *
   * The reference's scan decodes HBase `Result`s row-at-a-time
   * (/root/reference `HBaseSQLReaderRDD.createIterator:178-210`); the
   * Spark-native bar is higher — Spark's own parquet source decodes
   * whole column pages into `ColumnarBatch`es that feed whole-stage
   * codegen through a single `ColumnarToRow` boundary. Region files are
-  * plain parquet (written by [[ParquetRowIO.RowWriter]] or Spark's
-  * writer in the bulk-load path, always modern-calendar MICROS
-  * timestamps), so we reuse Spark's `VectorizedParquetRecordReader`
-  * directly: ~10× fewer per-value virtual calls than the row-oriented
-  * Group API, plus free dictionary-aware decoding and lazy
-  * materialization.
+  * plain parquet (written by [[ParquetRowIO.RowWriter]], always
+  * modern-calendar MICROS timestamps), so we reuse Spark's
+  * `VectorizedParquetRecordReader` directly: dictionary-aware decoding,
+  * lazy materialization, and Spark's contract for columns absent from
+  * an older file (ALTER TABLE ADD COLUMN): null, or the column's
+  * EXISTS_DEFAULT. Row-at-a-time consumers iterate `rows()`.
   *
   * Pushed filters become parquet `FilterPredicate`s for row-group and
   * page (column-index) skipping only — the vectorized reader never
   * filters record-at-a-time, and Spark re-applies every pushed filter
   * above the scan, so skipping stays best-effort and exactness never
-  * depends on it (same contract as the row path).
+  * depends on it.
   */
 object ParquetColumnarIO {
 
@@ -54,8 +57,8 @@ object ParquetColumnarIO {
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, ReadSupportClass)
     conf.set(RowRequestedSchemaKey, required.json)
     // read-time semantics captured from the live session conf on the
-    // driver (GraftReaderFactory) so the columnar path resolves names
-    // and zones exactly like the row fallback and plain parquet scans
+    // driver (GraftReaderFactory) so region scans resolve names and
+    // zones exactly like plain parquet scans
     conf.set("spark.sql.session.timeZone", sessionZone)
     conf.setBoolean("spark.sql.caseSensitive", caseSensitive)
     // ParquetToSparkSchemaConverter(conf) reads these with no default —
@@ -69,8 +72,8 @@ object ParquetColumnarIO {
     private val path = new Path(file)
     private val length = path.getFileSystem(conf).getFileStatus(path).getLen
     // pushed predicate rebuilt per file against the columns the file
-    // actually has (ALTER-added columns are absent from older regions) —
-    // same soundness contract as the row path (ParquetRowIO.toFileFilter).
+    // actually has (ALTER-added columns are absent from older regions;
+    // see ParquetRowIO.toFileFilter).
     // The extra footer read only happens when there is a filter to build.
     if (filters.nonEmpty) {
       val footer = {
@@ -101,5 +104,19 @@ object ParquetColumnarIO {
     def batch(): ColumnarBatch =
       reader.getCurrentValue.asInstanceOf[ColumnarBatch]
     def close(): Unit = reader.close()
+
+    /** The file's rows in file order, batch by batch. A row is a view
+      * into the current batch: it is valid only until the next
+      * `hasNext` or `next` call on the iterator; `copy()` keeps it. */
+    def rows(): Iterator[InternalRow] = new Iterator[InternalRow] {
+      private var it: java.util.Iterator[InternalRow] =
+        java.util.Collections.emptyIterator()
+      override def hasNext: Boolean = {
+        while (!it.hasNext && nextBatch()) it = batch().rowIterator()
+        it.hasNext
+      }
+      override def next(): InternalRow =
+        if (hasNext) it.next() else throw new NoSuchElementException
+    }
   }
 }

@@ -4,30 +4,25 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Row-oriented parquet IO for the graft catalog's region files, over
-  * the reference's ten storable types (SURVEY §1.2), using the public
-  * parquet-mr Group API.
-  *
-  * The reference's scan is likewise row-oriented (HBase `Result` →
-  * `InternalRow`, /root/reference `HBaseRelation.buildRow:982-999`);
-  * column pruning maps to a parquet projection schema and the
-  * FilterList pushdown maps to parquet `FilterPredicate`s evaluated
-  * against row-group statistics and records — storage-side filtering
-  * without a server process.
+/** Parquet IO for the graft catalog's region files, over the
+  * reference's ten storable types (SURVEY §1.2): the Catalyst-to-parquet
+  * schema mapping, the row writer every region file goes through (the
+  * public parquet-mr Group API), and the conversion of pushed filters
+  * to parquet `FilterPredicate`s — the storage-side face of the
+  * reference's FilterList pushdown, evaluated against row-group and
+  * page statistics. Region files are read by
+  * [[ParquetColumnarIO.ColumnarReader]].
   */
 object ParquetRowIO {
 
@@ -141,6 +136,17 @@ object ParquetRowIO {
       case _ => 0
     }
 
+    /** A fresh copy of the string's bytes. Parquet keeps written values
+      * (dictionary, statistics), and a row may be a view into a
+      * reader's reused buffer, whose `getBytes` can return that buffer
+      * itself. For an `UnsafeRow` this is the copy `getBytes` makes. */
+    private def ownBytes(s: org.apache.spark.unsafe.types.UTF8String)
+        : Array[Byte] = {
+      val out = new Array[Byte](s.numBytes)
+      s.writeToMemory(out, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
+      out
+    }
+
     /** Write one Catalyst internal row (dates = days, timestamps = µs). */
     def write(row: InternalRow): Unit = {
       val g = factory.newGroup()
@@ -155,7 +161,7 @@ object ParquetRowIO {
           case FloatType => g.add(i, row.getFloat(i))
           case DoubleType => g.add(i, row.getDouble(i))
           case StringType =>
-            g.add(i, Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
+            g.add(i, Binary.fromConstantByteArray(ownBytes(row.getUTF8String(i))))
           case BinaryType =>
             g.add(i, Binary.fromConstantByteArray(row.getBinary(i)))
           case dt: DecimalType =>
@@ -188,7 +194,7 @@ object ParquetRowIO {
                 case FloatType => eg.add(0, arr.getFloat(j))
                 case DoubleType => eg.add(0, arr.getDouble(j))
                 case StringType => eg.add(0,
-                  Binary.fromConstantByteArray(arr.getUTF8String(j).getBytes))
+                  Binary.fromConstantByteArray(ownBytes(arr.getUTF8String(j))))
                 case other => throw new IllegalStateException(other.toString)
               }
               j += 1
@@ -201,130 +207,6 @@ object ParquetRowIO {
     }
 
     def close(): Unit = writer.close()
-  }
-
-  // ------------------------------------------------------------- reader
-
-  /** Reader producing InternalRows in `requested` field order; fields
-    * absent from the file (added later via ALTER TABLE ADD COLUMN) read
-    * as null. The pushed filter is rebuilt per file against the fields
-    * the file actually has: parquet-mr's record-level filter REJECTS
-    * predicates on columns missing from the file schema
-    * (SchemaCompatibilityValidator), and dropping those atoms is sound
-    * because Spark re-applies every filter above the scan. */
-  final class RowReader(file: String, requested: StructType,
-      filters: Seq[sources.Filter]) {
-    private val conf = new Configuration()
-    private val hPath = new Path(file)
-    private val fileSchema: MessageType = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hPath, conf)
-      val r = ParquetFileReader.open(in)
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    }
-    private val filter: Option[FilterPredicate] =
-      toFileFilter(filters, requested, fileSchema)
-    private val present: Array[Boolean] =
-      requested.fields.map(f => fileSchema.containsField(f.name))
-    private val projection: MessageType = {
-      val b = Types.buildMessage()
-      requested.fields.iterator.zipWithIndex
-        .filter { case (_, i) => present(i) }
-        .foreach { case (f, _) =>
-          b.addField(fileSchema.getType(Seq(f.name): _*)) }
-      b.named("graft_schema")
-    }
-    // requested index -> projection index (-1 when absent from the file)
-    private val projIdx: Array[Int] = {
-      var p = -1
-      requested.fields.indices.map { i =>
-        if (present(i)) { p += 1; p } else -1
-      }.toArray
-    }
-    // Existence defaults for columns ABSENT from this file (added by
-    // ALTER TABLE ADD COLUMN … DEFAULT after the file was written):
-    // same contract as Spark's own parquet readers — a missing column
-    // reads its EXISTS_DEFAULT literal; a present-but-null value stays
-    // null. Internal (catalyst) values, resolved once per file.
-    private val existsDefault: Array[Any] =
-      org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-        .existenceDefaultValues(requested)
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projection.toString)
-    private val reader: ParquetReader[Group] = {
-      val b = ParquetReader.builder(new GroupReadSupport(), hPath).withConf(conf)
-      filter.foreach(f => b.withFilter(FilterCompat.get(f)))
-      b.build()
-    }
-    private val types = requested.fields.map(_.dataType)
-
-    /** Next row or null at end of file. */
-    def next(): InternalRow = {
-      val g = reader.read()
-      if (g == null) return null
-      val row = new GenericInternalRow(types.length)
-      var i = 0
-      while (i < types.length) {
-        val p = projIdx(i)
-        if (p < 0) {
-          if (existsDefault(i) == null) row.setNullAt(i)
-          else row.update(i, existsDefault(i))
-        } else if (g.getFieldRepetitionCount(p) == 0) row.setNullAt(i)
-        else types(i) match {
-          case BooleanType => row.setBoolean(i, g.getBoolean(p, 0))
-          case ByteType => row.setByte(i, g.getInteger(p, 0).toByte)
-          case ShortType => row.setShort(i, g.getInteger(p, 0).toShort)
-          case IntegerType | DateType => row.setInt(i, g.getInteger(p, 0))
-          case LongType | TimestampType => row.setLong(i, g.getLong(p, 0))
-          case FloatType => row.setFloat(i, g.getFloat(p, 0))
-          case DoubleType => row.setDouble(i, g.getDouble(p, 0))
-          case StringType =>
-            row.update(i, UTF8String.fromBytes(g.getBinary(p, 0).getBytes))
-          case BinaryType => row.update(i, g.getBinary(p, 0).getBytes)
-          case dt: DecimalType =>
-            val dec =
-              if (dt.precision <= 9)
-                org.apache.spark.sql.types.Decimal(
-                  g.getInteger(p, 0).toLong, dt.precision, dt.scale)
-              else if (dt.precision <= 18)
-                org.apache.spark.sql.types.Decimal(
-                  g.getLong(p, 0), dt.precision, dt.scale)
-              else org.apache.spark.sql.types.Decimal(
-                BigDecimal(new java.math.BigDecimal(
-                  new java.math.BigInteger(g.getBinary(p, 0).getBytes),
-                  dt.scale)), dt.precision, dt.scale)
-            row.setDecimal(i, dec, dt.precision)
-          case ArrayType(et, _) =>
-            val lg = g.getGroup(p, 0)
-            val n = lg.getFieldRepetitionCount(0)
-            val out = new Array[Any](n)
-            var j = 0
-            while (j < n) {
-              val eg = lg.getGroup(0, j)
-              out(j) = if (eg.getFieldRepetitionCount(0) == 0) null
-              else et match {
-                case BooleanType => eg.getBoolean(0, 0)
-                case ByteType => eg.getInteger(0, 0).toByte
-                case ShortType => eg.getInteger(0, 0).toShort
-                case IntegerType | DateType => eg.getInteger(0, 0)
-                case LongType | TimestampType => eg.getLong(0, 0)
-                case FloatType => eg.getFloat(0, 0)
-                case DoubleType => eg.getDouble(0, 0)
-                case StringType =>
-                  UTF8String.fromBytes(eg.getBinary(0, 0).getBytes)
-                case other => throw new IllegalStateException(other.toString)
-              }
-              j += 1
-            }
-            row.update(i,
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(out))
-          case other => throw new IllegalStateException(other.toString)
-        }
-        i += 1
-      }
-      row
-    }
-
-    def close(): Unit = reader.close()
   }
 
   // ----------------------------------- V1 Filter -> parquet FilterPredicate
@@ -346,7 +228,7 @@ object ParquetRowIO {
     * missing from the file schema (SchemaCompatibilityValidator), and a
     * column added by ALTER TABLE is absent from pre-ALTER region files —
     * dropping those atoms is sound because Spark re-applies every pushed
-    * filter above the scan. Shared by the row and columnar readers. */
+    * filter above the scan. */
   def toFileFilter(filters: Seq[sources.Filter], requested: StructType,
       fileSchema: MessageType): Option[FilterPredicate] =
     toParquetFilter(filters,

@@ -1,6 +1,7 @@
 package graft.codec
 
 import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** Order-preserving binary key codec.
@@ -36,19 +37,43 @@ object KeyCodec {
     case DateType => encodeInt(v.asInstanceOf[Int]) // days since epoch
     case LongType => encodeLong(v.asInstanceOf[Long])
     case TimestampType => encodeLong(v.asInstanceOf[Long]) // µs since epoch
-    case FloatType =>
-      val bits = java.lang.Float.floatToIntBits(v.asInstanceOf[Float])
-      encodeIntRaw(bits ^ (if (bits < 0) 0xFFFFFFFF else 0x80000000))
-    case DoubleType =>
-      val bits = java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])
-      encodeLongRaw(bits ^ (if (bits < 0) -1L else Long.MinValue))
-    case StringType =>
-      val s = v.toString
-      require(!s.contains('\u0000'),
-        "NUL not allowed in string key columns (delimiter)")
-      s.getBytes(StandardCharsets.UTF_8)
+    case FloatType => encodeFloat(v.asInstanceOf[Float])
+    case DoubleType => encodeDouble(v.asInstanceOf[Double])
+    case StringType => encodeString(v.toString)
     case other =>
       throw new IllegalArgumentException(s"Unsupported key type: $other")
+  }
+
+  /** Encode the key column at `ordinal` of a Catalyst row (internal
+    * values: days for dates, µs for timestamps). The one row-to-key
+    * path every region writer uses; reads the value unboxed. */
+  def encodeAt(row: InternalRow, ordinal: Int, dt: DataType): Array[Byte] =
+    dt match {
+      case BooleanType =>
+        Array(if (row.getBoolean(ordinal)) 1.toByte else 0.toByte)
+      case ByteType => Array((row.getByte(ordinal) ^ 0x80).toByte)
+      case ShortType => encodeShort(row.getShort(ordinal))
+      case IntegerType | DateType => encodeInt(row.getInt(ordinal))
+      case LongType | TimestampType => encodeLong(row.getLong(ordinal))
+      case FloatType => encodeFloat(row.getFloat(ordinal))
+      case DoubleType => encodeDouble(row.getDouble(ordinal))
+      case StringType => encodeString(row.getUTF8String(ordinal).toString)
+      case other =>
+        throw new IllegalArgumentException(s"Unsupported key type: $other")
+    }
+
+  private def encodeFloat(v: Float): Array[Byte] = {
+    val bits = java.lang.Float.floatToIntBits(v)
+    encodeIntRaw(bits ^ (if (bits < 0) 0xFFFFFFFF else 0x80000000))
+  }
+  private def encodeDouble(v: Double): Array[Byte] = {
+    val bits = java.lang.Double.doubleToLongBits(v)
+    encodeLongRaw(bits ^ (if (bits < 0) -1L else Long.MinValue))
+  }
+  private def encodeString(s: String): Array[Byte] = {
+    require(!s.contains('\u0000'),
+      "NUL not allowed in string key columns (delimiter)")
+    s.getBytes(StandardCharsets.UTF_8)
   }
 
   def decode(dt: DataType, b: Array[Byte], off: Int, len: Int): Any = dt match {

@@ -798,8 +798,8 @@ object CatalogQueries {
   /** ADD COLUMN … DEFAULT fixture: batch 1 (even orderkeys) lands
     * BEFORE the columns exist, so its region files do not contain
     * them — reads must materialize the EXISTENCE default (Spark's
-    * EXISTS_DEFAULT contract, wired through both the columnar and the
-    * row fallback readers); batch 2 (odd) lands after the ALTER with
+    * EXISTS_DEFAULT contract, honored by the region reader); batch 2
+    * (odd) lands after the ALTER with
     * explicit values. The aggregate below exercises exactly those two
     * mechanisms and the DuckDB oracle recomputes both from the raw
     * parquet — a NULL-instead-of-default read hash-mismatches. */

@@ -48,46 +48,4 @@ class ColumnarPerfProbe extends AnyFunSuite {
       f"catalog scan $graftSec%.3fs vs stock parquet $stockSec%.3fs — " +
         "columnar reader regressed to row-at-a-time decode?")
   }
-
-  test("columnar reader decodes faster than the row reader (direct)") {
-    // decode-only comparison, no Spark job: the same region files read
-    // through both readers. The end-to-end probe above is dominated by
-    // the fixed job-scheduling floor at this SF; this one isolates the
-    // per-value decode cost the vectorized reader exists to remove.
-    CatalogQueries.tpchQ5(spark, sf).collect()
-    val ns = s"sf_${math.abs(sf.hashCode)}"
-    val cat = spark.sessionState.catalogManager.catalog("graft")
-      .asInstanceOf[GraftCatalog]
-    val table = cat.loadTable(org.apache.spark.sql.connector.catalog
-      .Identifier.of(Array(ns), "lineitem_t")).asInstanceOf[GraftTable]
-    val schema = table.meta.schema
-    val files = TableMeta.loadRegions(table.tableDir)
-      .map(r => new java.io.File(table.tableDir, r.file).getPath)
-
-    def rowPass(): Long = {
-      var n = 0L
-      files.foreach { f =>
-        val r = new ParquetRowIO.RowReader(f, schema, Nil)
-        try { while (r.next() != null) n += 1 } finally r.close()
-      }
-      n
-    }
-    def colPass(): Long = {
-      var n = 0L
-      files.foreach { f =>
-        val r = new ParquetColumnarIO.ColumnarReader(f, schema, Nil)
-        try { while (r.nextBatch()) n += r.batch().numRows() }
-        finally r.close()
-      }
-      n
-    }
-    assert(rowPass() == colPass()) // same data through both
-    val rowSec = timeMedian(5)(rowPass())
-    val colSec = timeMedian(5)(colPass())
-    info(f"row=$rowSec%.3fs columnar=$colSec%.3fs " +
-      f"speedup=${rowSec / colSec}%.1fx over ${files.size} region files")
-    assert(colSec < rowSec,
-      f"vectorized decode ($colSec%.3fs) not faster than row decode " +
-        f"($rowSec%.3fs)")
-  }
 }

@@ -94,33 +94,78 @@ class GraftDefaultSpec extends AnyFunSuite {
       .collect().head.isNullAt(0))
   }
 
-  test("the row-fallback reader fills existence defaults for columns " +
-      "absent from the file (same contract as the columnar path)") {
+  test("the region reader's rows() fill existence defaults for columns " +
+      "absent from the file (the scan's contract)") {
     ns()
     spark.sql("DROP TABLE IF EXISTS graft.dflt.t6")
     spark.sql("CREATE TABLE graft.dflt.t6 (k BIGINT) " +
       "TBLPROPERTIES('keyCols'='k')")
     spark.sql("INSERT INTO graft.dflt.t6 VALUES (1), (2)") // file w/o v
     spark.sql("ALTER TABLE graft.dflt.t6 ADD COLUMN v BIGINT DEFAULT 5")
-    // read the pre-ALTER region file directly through the row reader
-    // with the post-ALTER requested schema (carries EXISTS_DEFAULT)
+    // read the pre-ALTER region file directly through the region
+    // reader with the post-ALTER requested schema (carries
+    // EXISTS_DEFAULT)
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val dir = new java.io.File(s"$wh/dflt/t6")
     val regionFile = Option(dir.listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(_.getName.endsWith(".parquet")).head
     val requested = spark.table("graft.dflt.t6").schema
-    val r = new ParquetRowIO.RowReader(regionFile.getPath, requested, Nil)
+    val r = new ParquetColumnarIO.ColumnarReader(regionFile.getPath,
+      requested, Nil)
     val vIdx = requested.fieldIndex("v")
-    var row = r.next()
     var n = 0
-    while (row != null) {
+    try r.rows().foreach { row =>
       assert(!row.isNullAt(vIdx) && row.getLong(vIdx) == 5L,
         s"existence default not filled: $row")
       n += 1
-      row = r.next()
-    }
+    } finally r.close()
     assert(n == 2)
+  }
+
+  test("existence defaults are written out by merge and the DELETE " +
+      "boundary rewrite") {
+    ns()
+    spark.sql("DROP TABLE IF EXISTS graft.dflt.t7")
+    spark.sql("CREATE TABLE graft.dflt.t7 (k BIGINT) " +
+      "TBLPROPERTIES('keyCols'='k', 'numRegions'='1')")
+    // two pre-ALTER regions: the merge input and the DELETE straddler
+    spark.sql("INSERT INTO graft.dflt.t7 SELECT id FROM range(0, 50)")
+    spark.sql("INSERT INTO graft.dflt.t7 SELECT id FROM range(50, 100)")
+    spark.sql("ALTER TABLE graft.dflt.t7 ADD COLUMN v BIGINT DEFAULT 5")
+    val cat = spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[GraftCatalog]
+    val dir = cat.loadTable(org.apache.spark.sql.connector.catalog
+      .Identifier.of(Array("dflt"), "t7")).asInstanceOf[GraftTable].tableDir
+    def newFiles(before: Seq[RegionMeta]): Seq[String] = {
+      val old = before.map(_.file).toSet
+      TableMeta.loadRegions(dir).map(_.file).filterNot(old)
+    }
+    // a stock parquet read of the rewritten file: `v` is physically 5
+    def assertWritten(file: String, rows: Long): Unit = {
+      val df = spark.read.parquet(new java.io.File(dir, file).getPath)
+      assert(df.columns.contains("v"), s"$file has no column v")
+      assert(df.count() == rows)
+      assert(df.where("v IS NULL OR v <> 5").count() == 0L,
+        s"$file lost the existence default")
+    }
+
+    val beforeMerge = TableMeta.loadRegions(dir)
+    assert(beforeMerge.size == 2)
+    spark.sql("CALL graft.sys.merge(table => 'dflt.t7', " +
+      "target_bytes => 104857600L)")
+    val merged = newFiles(beforeMerge)
+    assert(merged.size == 1 && merged.head.startsWith("merge-"))
+    assertWritten(merged.head, 100L)
+
+    val beforeDelete = TableMeta.loadRegions(dir)
+    spark.sql("DELETE FROM graft.dflt.t7 WHERE k < 10")
+    val rewritten = newFiles(beforeDelete)
+    assert(rewritten.size == 1 && rewritten.head.startsWith("delete-rw-"))
+    assertWritten(rewritten.head, 90L)
+    assert(spark.sql("SELECT count(*), sum(v) FROM graft.dflt.t7").head()
+      == org.apache.spark.sql.Row(90L, 450L))
+    spark.sql("DROP TABLE graft.dflt.t7")
   }
 
   test("ADD COLUMN with a non-constant DEFAULT is refused (an " +

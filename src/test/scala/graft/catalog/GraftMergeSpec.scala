@@ -69,18 +69,15 @@ class GraftMergeSpec extends AnyFunSuite {
     assert(spark.table("graft.mrg.overlap").count() == 1000L)
     // the merged file is genuinely key-sorted: a raw sequential read
     // of the region file yields ascending keys
-    val reader = new ParquetRowIO.RowReader(
+    val reader = new ParquetColumnarIO.ColumnarReader(
       new java.io.File(dir, after.head.file).getPath,
       spark.table("graft.mrg.overlap").schema, Nil)
     var prev = Long.MinValue
-    var row = reader.next()
-    while (row != null) {
+    try reader.rows().foreach { row =>
       val k = row.getLong(0)
       assert(k > prev, s"merge broke the region sort at key $k")
       prev = k
-      row = reader.next()
-    }
-    reader.close()
+    } finally reader.close()
     spark.sql("DROP TABLE graft.mrg.overlap")
   }
 

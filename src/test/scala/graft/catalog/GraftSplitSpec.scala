@@ -266,4 +266,21 @@ class GraftSplitSpec extends AnyFunSuite {
     assert(grouped == Seq((0, 1000L), (1, 1000L)))
     spark.sql("DROP TABLE graft.spl.bucketed")
   }
+
+  test("part size arithmetic stays in Long past 2^31 parts") {
+    val GiB = 1L << 30
+    // ordinary cut: 4 parts of a 4000-row region
+    assert(GraftSplit.rowsPerPart(4000L, 4 * GiB, GiB) == 1000L)
+    // at least 2 parts, even just over the target
+    assert(GraftSplit.rowsPerPart(4000L, GiB + 1, GiB) == 2000L)
+    assert(GraftSplit.rowsPerPart(1L, 10L, 1L) == 1L)
+    // a 3 GiB region with target_bytes => 1: k = 3·2^30 parts, which
+    // an Int wraps negative; 10^10 rows make 4 rows per part
+    assert(GraftSplit.rowsPerPart(10000000000L, 3 * GiB, 1L) == 4L)
+    // 4 GiB + 4 bytes: an Int k wraps to 4, i.e. 250-row parts
+    assert(GraftSplit.rowsPerPart(1000L, 4 * GiB + 4, 1L) == 1L)
+    // no overflow at the extremes
+    assert(GraftSplit.rowsPerPart(Long.MaxValue, Long.MaxValue,
+      Long.MaxValue) == Long.MaxValue / 2 + 1)
+  }
 }
