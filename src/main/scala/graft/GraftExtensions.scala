@@ -39,6 +39,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // view → re-aggregation over the mview's stored partials
     ext.injectPreCBORule(session =>
       new graft.catalog.GraftMviewRewrite(session))
+    // a scan pruned to at most one small region → read on the driver,
+    // no Spark job (a planner strategy: it needs the pushed-down scan)
+    ext.injectPlannerStrategy(_ => graft.catalog.GraftLocalRead)
     // stored graft views expand in the resolution fixed point (views
     // over views converge across iterations; cycles die at the
     // analyzer's iteration cap)

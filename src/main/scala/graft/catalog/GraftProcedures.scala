@@ -2261,13 +2261,14 @@ object GraftProcedures {
           // sparkPlan (pre-AQE-wrapping): V2 pushdown has already run
           // in the optimizer, and the adaptive wrapper would hide the
           // scan node from collect until execution
+          // a scan pruned to one small region plans as a local read
           val parts = df.queryExecution.sparkPlan.collect {
             case b: org.apache.spark.sql.execution.datasources.v2
                 .BatchScanExec => b.inputPartitions
+            case l: GraftLocalScanExec => l.partition.toSeq
           }.flatten
           val (files, rows) = parts.map {
-            case p: GraftInputPartition => (p.files, p.rows)
-            case p: GraftKeyedInputPartition => (p.files, p.rows)
+            case p: RegionPartition => (p.files, p.rows)
             case other => throw new IllegalStateException(
               s"unexpected partition ${other.getClass.getName}")
           }.unzip

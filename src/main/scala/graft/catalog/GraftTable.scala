@@ -443,7 +443,9 @@ object GraftFilters {
   * only read MORE data, never change an answer — the config-matrix
   * parity suite asserts exactly that over the whole catalog query set.
   * Defaults are all-on; the switches exist for that proof and as the
-  * operator's escape hatch when chasing a suspected skipping bug. */
+  * operator's escape hatch when chasing a suspected skipping bug.
+  * [[LocalRead]] changes where a small scan runs, not what it reads:
+  * off, a one-region read is one Spark job with one task again. */
 object GraftAccel {
   /** region-level non-key min/max/null skipping + runtime re-prune */
   val StatsSkip = "spark.graft.accel.statsSkip"
@@ -461,10 +463,13 @@ object GraftAccel {
   /** transparent materialized-view rewrite of re-aggregable GROUP BYs
     * ([[GraftMviewRewrite]]) */
   val MviewRewrite = "spark.graft.accel.mviewRewrite"
+  /** a scan pruned to at most one small region is read on the driver,
+    * with no Spark job ([[GraftLocalRead]]) */
+  val LocalRead = "spark.graft.accel.localRead"
 
   val All: Seq[String] =
     Seq(StatsSkip, ParquetFilters, AggPushdown, Packing, LimitPushdown,
-      IndexRewrite, MviewRewrite)
+      IndexRewrite, MviewRewrite, LocalRead)
 
   def on(key: String): Boolean = {
     val raw = try org.apache.spark.sql.internal.SQLConf.get
@@ -954,9 +959,8 @@ final case class GraftGroupAggReaderFactory(inputJson: String,
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val input = DataType.fromJson(inputJson).asInstanceOf[StructType]
-    val (files, _) = partition match {
-      case p: GraftInputPartition => (p.files, p.ids)
-      case p: GraftKeyedInputPartition => (p.files, p.ids)
+    val files = partition match {
+      case p: RegionPartition => p.files
       case other => throw new IllegalStateException(other.toString)
     }
     // value extraction from the columnar batch, copying buffer-backed
@@ -1129,7 +1133,7 @@ final case class GraftGroupAggReaderFactory(inputJson: String,
 
 class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
     filters: Array[sources.Filter], filterHint: Option[String] = None,
-    groupMode: Boolean = false,
+    val groupMode: Boolean = false,
     pinned: Option[Seq[RegionMeta]] = None,
     limitPush: Option[GraftScan.LimitPush] = None)
     extends Scan with Batch with SupportsReportStatistics
@@ -1182,6 +1186,7 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
   override def filter(runtime: Array[sources.Filter]): Unit = {
     runtimeFilters = runtime
     selectedRegionsCache = null // re-prune with the tighter set
+    regionBytesCache = null
     packedGroupsCache = null
   }
 
@@ -1203,6 +1208,20 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
           (!statsOn || colPred.survives(r.stats))
       }
       selectedRegionsCache = c
+    }
+    c
+  }
+
+  /** File bytes of each selected region, one stat per file per scan:
+    * packing weights and `estimateStatistics` both read them.
+    * Invalidated together with the pruned-region cache. */
+  @volatile private var regionBytesCache: Map[String, Long] = _
+  private def regionBytes: Map[String, Long] = {
+    var c = regionBytesCache
+    if (c == null) {
+      c = selectedRegions.map(r =>
+        r.file -> new File(tableDir, r.file).length()).toMap
+      regionBytesCache = c
     }
     c
   }
@@ -1353,11 +1372,11 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
         val minParts = conf.filesMinPartitionNum
           .getOrElse(math.max(1, org.apache.spark.sql.SparkSession.active
             .sparkContext.defaultParallelism))
-        val weights: Map[String, Long] = regions.map(r =>
-          r.file -> (new File(tableDir, r.file).length() + openCost)).toMap
-        val weight = (r: RegionMeta) => weights(r.file)
+        val bytes = regionBytes
+        val weight = (r: RegionMeta) => bytes(r.file) + openCost
         val target = math.min(conf.filesMaxPartitionBytes,
-          math.max(openCost, weights.values.sum / math.max(1, minParts)))
+          math.max(openCost,
+            regions.map(weight).sum / math.max(1, minParts)))
         if (keyGrouped)
           regions.groupBy(_.bucket).toSeq.sortBy(_._1)
             .flatMap { case (_, rs) => GraftPacking.pack(rs, weight, target) }
@@ -1403,8 +1422,7 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong = OptionalLong.of(
-      selectedRegions.map(r => new File(tableDir, r.file).length())
-        .sum.max(1L))
+      selectedRegions.map(r => regionBytes(r.file)).sum.max(1L))
     override def numRows(): OptionalLong =
       OptionalLong.of(selectedRegions.map(_.rows).sum)
     /** Table-level column stats aggregated from the manifest (key
@@ -1613,12 +1631,18 @@ object GraftPacking {
   }
 }
 
-/** One read task over one-or-more region files (small regions pack).
-  * `ids(i)` = stable region id of `files(i)`, for the metadata
-  * columns. */
+/** One read task over one-or-more region files (small regions pack):
+  * `rows` = their manifest row counts summed, `ids(i)` = stable region
+  * id of `files(i)`, for the metadata columns. */
+sealed trait RegionPartition extends InputPartition {
+  def files: Array[String]
+  def rows: Long
+  def ids: Array[Long]
+}
+
 final case class GraftInputPartition(files: Array[String], rows: Long,
     locations: Array[String] = Array.empty,
-    ids: Array[Long] = Array.empty) extends InputPartition {
+    ids: Array[Long] = Array.empty) extends RegionPartition {
   override def preferredLocations(): Array[String] = locations
 }
 
@@ -1628,7 +1652,7 @@ final case class GraftInputPartition(files: Array[String], rows: Long,
 final case class GraftKeyedInputPartition(files: Array[String], rows: Long,
     bucket: Int, locations: Array[String] = Array.empty,
     ids: Array[Long] = Array.empty)
-    extends InputPartition with HasPartitionKey {
+    extends RegionPartition with HasPartitionKey {
   override def preferredLocations(): Array[String] = locations
   override def partitionKey(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -1794,8 +1818,7 @@ final case class GraftReaderFactory(requiredJson: String,
   private def filesOf(partition: InputPartition)
       : (Array[String], Array[Long]) =
     partition match {
-      case p: GraftInputPartition => (p.files, p.ids)
-      case p: GraftKeyedInputPartition => (p.files, p.ids)
+      case p: RegionPartition => (p.files, p.ids)
       case other => throw new IllegalStateException(other.toString)
     }
 

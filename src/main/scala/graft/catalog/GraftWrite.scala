@@ -197,7 +197,7 @@ private[catalog] object GraftCommits {
     * "schedule anywhere". */
   def withBlockHosts(tableDir: File, regions: Seq[RegionMeta])
       : Seq[RegionMeta] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = ParquetColumnarIO.hadoopConf()
     val base = new org.apache.hadoop.fs.Path(tableDir.getPath)
     val fs = base.getFileSystem(conf)
     if (fs.getScheme != "hdfs") return regions

@@ -5,7 +5,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
 import org.apache.spark.sql.sources
@@ -34,8 +36,26 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * filters record-at-a-time, and Spark re-applies every pushed filter
   * above the scan, so skipping stays best-effort and exactness never
   * depends on it.
+  *
+  * Opening a region costs one open and one footer read: the footer
+  * read once builds the file's filter and is handed, with the open
+  * stream, to the vectorized reader (the path Spark's own parquet
+  * source takes). Every reader and writer takes a copy of one parsed
+  * Hadoop `Configuration` ([[hadoopConf]]) instead of re-parsing
+  * Hadoop's XML defaults.
   */
 object ParquetColumnarIO {
+
+  /** Hadoop's defaults, parsed once per JVM. `new Configuration()`
+    * re-parses every registered `*-default.xml` (8–31 ms measured per
+    * region open); a copy of a parsed one costs about 0.1 ms. Holds
+    * exactly what `new Configuration()` holds, and is never modified:
+    * every user mutates its own copy. */
+  private[catalog] lazy val baseConf: Configuration = new Configuration()
+
+  /** A private, mutable copy of [[baseConf]]. */
+  private[catalog] def hadoopConf(): Configuration =
+    new Configuration(baseConf)
 
   /** Spark's conf key carrying the Catalyst read schema into
     * `ParquetReadSupport` (string literal to avoid compile-time access
@@ -53,7 +73,7 @@ object ParquetColumnarIO {
       filters: Seq[sources.Filter], sessionZone: String = "UTC",
       caseSensitive: Boolean = false) {
 
-    private val conf = new Configuration()
+    private[catalog] val conf = hadoopConf()
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, ReadSupportClass)
     conf.set(RowRequestedSchemaKey, required.json)
     // read-time semantics captured from the live session conf on the
@@ -70,21 +90,10 @@ object ParquetColumnarIO {
     conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
 
     private val path = new Path(file)
-    private val length = path.getFileSystem(conf).getFileStatus(path).getLen
-    // pushed predicate rebuilt per file against the columns the file
-    // actually has (ALTER-added columns are absent from older regions;
-    // see ParquetRowIO.toFileFilter).
-    // The extra footer read only happens when there is a filter to build.
-    if (filters.nonEmpty) {
-      val footer = {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(path, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getFileMetaData.getSchema finally r.close()
-      }
-      ParquetRowIO.toFileFilter(filters, required, footer)
-        .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
-    }
+    // one open, one footer read; the stream and the footer go on to the
+    // vectorized reader, which owns (and closes) the stream from then on
+    private val in = HadoopInputFile.fromPath(path, conf)
+    private val stream = in.newStream()
     // graft region files are written whole by modern writers: no legacy
     // calendar rebase (CORRECTED = read stored values as-is), no INT96
     private val reader = new VectorizedParquetRecordReader(
@@ -92,13 +101,27 @@ object ParquetColumnarIO {
       /* useOffHeap = */ false, Capacity)
     private var initialized = false
     try {
+      val footer = ParquetFileReader.readFooter(in,
+        HadoopReadOptions.builder(conf, path).build(), stream)
+      // pushed predicate rebuilt per file against the columns the file
+      // actually has (ALTER-added columns are absent from older
+      // regions; see ParquetRowIO.toFileFilter); set before the reader
+      // takes its read options from the conf
+      if (filters.nonEmpty)
+        ParquetRowIO.toFileFilter(filters, required,
+          footer.getFileMetaData.getSchema)
+          .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
       reader.initialize(
-        new FileSplit(path, 0, length, Array.empty[String]),
-        new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        new FileSplit(path, 0, in.getLength, Array.empty[String]),
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+        Option(in), Option(stream), Option(footer))
       reader.initBatch(new StructType(), InternalRow.empty)
       reader.enableReturningBatches()
       initialized = true
-    } finally if (!initialized) reader.close()
+    } finally if (!initialized) {
+      reader.close()
+      stream.close()
+    }
 
     def nextBatch(): Boolean = reader.nextKeyValue()
     def batch(): ColumnarBatch =

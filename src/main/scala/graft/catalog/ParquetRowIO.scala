@@ -1,6 +1,5 @@
 package graft.catalog
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -105,7 +104,7 @@ object ParquetRowIO {
 
   final class RowWriter(file: String, schema: StructType,
       pageRowLimit: Int = 0, bloomCols: Seq[String] = Nil) {
-    private val conf = new Configuration()
+    private val conf = ParquetColumnarIO.hadoopConf()
     private val messageType = toParquetSchema(schema)
     GroupWriteSupport.setSchema(messageType, conf)
     private val factory = new SimpleGroupFactory(messageType)

@@ -4,7 +4,9 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.{Outcome, TestSuite, TestSuiteMixin}
 
 /** One shared local session for all suites (Test/fork := true → one JVM). */
@@ -48,6 +50,34 @@ object TestSpark {
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     "GraftScan \\S+ regions=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toInt)
       .getOrElse(throw new AssertionError(s"no GraftScan node in:\n$p"))
+  }
+
+  /** Spark jobs submitted by `body` on this thread, counted under a job
+    * group through `statusTracker`. */
+  def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    // listenerBus is private[spark]: drain it so the status store has
+    // seen every job `body` started
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** Every `GraftScan` of a physical plan, in plan order, whether a
+    * task reads it (`BatchScanExec`) or the driver does
+    * (`GraftLocalScanExec`); adaptive plans are searched through their
+    * current plan and query stages. */
+  def graftScans(p: SparkPlan): Seq[graft.catalog.GraftScan] = p match {
+    case b: BatchScanExec => b.scan match {
+      case g: graft.catalog.GraftScan => Seq(g)
+      case _ => Nil
+    }
+    case l: graft.catalog.GraftLocalScanExec => Seq(l.scan)
+    case a: AdaptiveSparkPlanExec => graftScans(a.executedPlan)
+    case q: QueryStageExec => graftScans(q.plan)
+    case other => other.children.flatMap(graftScans)
   }
 
   /** Deletes `f` and everything under it; a symlink is removed, never

@@ -14,12 +14,15 @@ import graft.TestSpark
 class BloomSkipSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def scanOutputRows(df: org.apache.spark.sql.DataFrame): Long = {
-    df.collect()
-    df.queryExecution.executedPlan.collectLeaves().collect {
-      case b: BatchScanExec => b
-    }.map(_.metrics("numOutputRows").value).sum
-  }
+  /** Rows the task-side scan emits after row-group skipping; the local
+    * read is off, since it would read a pruned region on the driver. */
+  private def scanOutputRows(df: org.apache.spark.sql.DataFrame): Long =
+    TestSpark.withConf(GraftAccel.LocalRead -> "false") {
+      df.collect()
+      df.queryExecution.executedPlan.collectLeaves().collect {
+        case b: BatchScanExec => b
+      }.map(_.metrics("numOutputRows").value).sum
+    }
 
   test("bloom on a scattered uuid-ish column skips absent point lookups") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.bloom")

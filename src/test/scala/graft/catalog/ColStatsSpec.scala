@@ -233,8 +233,8 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
         |      BETWEEN DATE'2024-01-21' AND DATE'2024-01-25'""".stripMargin)
     assert(q.collect().toSeq == expect.collect().toSeq)
     q.collect()
-    val parts = findScan(q.queryExecution.executedPlan)
-      .get.inputRDD.getNumPartitions
+    val parts = TestSpark.graftScans(q.queryExecution.executedPlan).head
+      .planInputPartitions().length
     // 5 of 80 days → 1 region (plus at most one boundary straddle)
     assert(parts <= 2, s"expected <=2 surviving regions, got $parts")
 
@@ -249,8 +249,8 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
       "SELECT count(*) AS c FROM graft.cstats.logt WHERE tag = 'zzz'")
     assert(none.head().getLong(0) == 0L)
     none.collect()
-    val noneParts = findScan(none.queryExecution.executedPlan)
-      .get.inputRDD.getNumPartitions
+    val noneParts = TestSpark.graftScans(none.queryExecution.executedPlan)
+      .head.planInputPartitions().length
     assert(noneParts == 0, s"expected 0 surviving regions, got $noneParts")
     spark.sql("DROP TABLE graft.cstats.logt")
   }
@@ -269,8 +269,8 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
         |FROM range(400)""".stripMargin)
     val df = spark.table("graft.cstats.cbo")
     df.collect()
-    val scan = findScan(df.queryExecution.executedPlan).get.scan
-    val stats = scan.asInstanceOf[GraftScan].estimateStatistics()
+    val scan = TestSpark.graftScans(df.queryExecution.executedPlan).head
+    val stats = scan.estimateStatistics()
     assert(stats.numRows().getAsLong == 400L)
     val cs = stats.columnStats()
     import scala.jdk.CollectionConverters._
@@ -383,8 +383,8 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
       "SELECT count(*) AS c FROM graft.cstats.cmp WHERE day = 7")
     assert(q.head().getLong(0) == 500L)
     q.collect()
-    val parts = findScan(q.queryExecution.executedPlan)
-      .get.inputRDD.getNumPartitions
+    val parts = TestSpark.graftScans(q.queryExecution.executedPlan).head
+      .planInputPartitions().length
     assert(parts < regions.size,
       s"expected stat skip after compaction: $parts of ${regions.size}")
     spark.sql("DROP TABLE graft.cstats.cmp")
@@ -438,8 +438,8 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
         |WHERE bal BETWEEN -600.00 AND -500.50""".stripMargin)
     assert(q.head().getLong(0) == 200L)
     q.collect()
-    val parts = findScan(q.queryExecution.executedPlan)
-      .get.inputRDD.getNumPartitions
+    val parts = TestSpark.graftScans(q.queryExecution.executedPlan).head
+      .planInputPartitions().length
     assert(parts <= 2, s"negative-decimal skip: got $parts of 4")
     // manifest-answered min/max decode the sign correctly
     val mm = spark.sql(
@@ -464,8 +464,8 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
         |WHERE price BETWEEN 30.00 AND 34.99""".stripMargin)
     assert(q.head().getLong(0) == 500L)
     q.collect()
-    val parts = findScan(q.queryExecution.executedPlan)
-      .get.inputRDD.getNumPartitions
+    val parts = TestSpark.graftScans(q.queryExecution.executedPlan).head
+      .planInputPartitions().length
     assert(parts <= 2, s"expected decimal stat skip to <=2 regions, got $parts")
     // a literal with more scale than the column cannot round-trip the
     // unscaled compare — it must widen to "unknown", never prune wrong
@@ -590,8 +590,7 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
         |SELECT id, CAST(id / 500 AS INT) FROM range(2000)""".stripMargin)
     val q = spark.sql("SELECT count(*) FROM graft.cstats.met WHERE day = 3")
     q.collect()
-    val scan = findScan(q.queryExecution.executedPlan).get.scan
-      .asInstanceOf[GraftScan]
+    val scan = TestSpark.graftScans(q.queryExecution.executedPlan).head
     val m = scan.reportDriverMetrics().map(t => t.name -> t.value).toMap
     assert(m("regionsTotal") >= 4)
     assert(m("regionsScanned") < m("regionsTotal"))

@@ -11,11 +11,12 @@ import graft.operators.CatalogQueries
   * × customfilter × codegen matrix (`HBaseAdditionalQuerySuite.scala:
   * 172-260`). Graft's analogue: every [[GraftAccel]] switch (stats
   * skipping, parquet-side predicates incl. blooms and page skip,
-  * manifest-answered aggregates, region packing) is a pure
-  * acceleration — this suite runs the ENTIRE catalog query set with
-  * all of them off and asserts answer-identity with the accelerated
-  * run, plus spot-checks that the switches genuinely disengage their
-  * machinery (a toggle that changes nothing proves nothing). */
+  * manifest-answered aggregates, region packing, the driver-side
+  * local read) is a pure acceleration — this suite runs the ENTIRE
+  * catalog query set with all of them off and asserts answer-identity
+  * with the accelerated run, plus spot-checks that the switches
+  * genuinely disengage their machinery (a toggle that changes nothing
+  * proves nothing). */
 class ConfigMatrixParitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -63,6 +64,18 @@ class ConfigMatrixParitySpec extends AnyFunSuite {
     find(df.queryExecution.executedPlan).get
   }
 
+  /** Read partitions the table's scan plans, whichever node reads it. */
+  private def partsOf(df: org.apache.spark.sql.DataFrame): Int = {
+    df.collect()
+    TestSpark.graftScans(df.queryExecution.executedPlan).head
+      .planInputPartitions().length
+  }
+
+  private def readsLocally(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.collectFirst {
+      case l: GraftLocalScanExec => l
+    }.nonEmpty
+
   test("toggles genuinely disengage (agg pushdown, packing, stats skip)") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.accel")
     spark.sql("DROP TABLE IF EXISTS graft.accel.t")
@@ -86,11 +99,11 @@ class ConfigMatrixParitySpec extends AnyFunSuite {
       assert(aggOff.collect().head.getLong(0) == 600L)
       // packing: one task per region when off
       val dfOff = spark.table("graft.accel.t")
-      assert(scanOf(dfOff).inputPartitions.size == 6,
+      assert(partsOf(dfOff) == 6,
         "packing=false must plan one partition per region")
       // stats skip: non-key predicate stops pruning regions (all read)
       val skipOff = spark.table("graft.accel.t").where("day = 3")
-      assert(scanOf(skipOff).inputPartitions.size == 6)
+      assert(partsOf(skipOff) == 6)
       assert(skipOff.count() == 100L)
     }
     // accelerated run for contrast: fewer tasks, pruned regions.
@@ -99,13 +112,19 @@ class ConfigMatrixParitySpec extends AnyFunSuite {
     TestSpark.withConf("spark.sql.files.minPartitionNum" -> "1",
         TestSpark.SparkDefaultSplit) {
       val dfOn = spark.table("graft.accel.t")
-      assert(scanOf(dfOn).inputPartitions.size < 6,
+      assert(partsOf(dfOn) < 6,
         "packing should coalesce 6 tiny regions")
     }
     val skipOn = spark.table("graft.accel.t").where("day = 3")
-    assert(scanOf(skipOn).inputPartitions.size == 1,
+    assert(partsOf(skipOn) == 1,
       "stats skipping should isolate the day=3 region")
     assert(skipOn.count() == 100L)
+    // local read: that one small region is read on the driver when on,
+    // by a task when off
+    assert(readsLocally(skipOn))
+    allOff {
+      assert(!readsLocally(spark.table("graft.accel.t").where("day = 3")))
+    }
     spark.sql("DROP TABLE graft.accel.t")
   }
 }

@@ -73,19 +73,7 @@ class GraftClusterSpec extends AnyFunSuite {
       where: String): (Long, Long) = {
     val q = spark.sql(s"SELECT count(*) AS c FROM $fqn WHERE $where")
     q.collect()
-    val plan = q.queryExecution.executedPlan
-    def findScan(p: org.apache.spark.sql.execution.SparkPlan)
-        : Option[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
-      p match {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          Some(b)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          findScan(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          findScan(q.plan)
-        case other => other.children.view.flatMap(findScan).headOption
-      }
-    val scan = findScan(plan).get.scan.asInstanceOf[GraftScan]
+    val scan = TestSpark.graftScans(q.queryExecution.executedPlan).head
     val m = scan.reportDriverMetrics().map(t => t.name -> t.value).toMap
     (m("regionsScanned"), m("regionsTotal"))
   }

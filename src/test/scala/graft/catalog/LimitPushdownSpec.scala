@@ -15,19 +15,8 @@ class LimitPushdownSpec extends AnyFunSuite {
   private def regionStats(sql: String): (Long, Long) = {
     val q = spark.sql(sql)
     q.collect()
-    def findScan(p: org.apache.spark.sql.execution.SparkPlan)
-        : Option[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
-      p match {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          Some(b)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          findScan(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          findScan(s.plan)
-        case other => other.children.view.flatMap(findScan).headOption
-      }
-    val scan = findScan(spark.sql(sql).queryExecution.executedPlan)
-      .get.scan.asInstanceOf[GraftScan]
+    val scan = TestSpark.graftScans(spark.sql(sql).queryExecution.executedPlan)
+      .head
     val m = scan.reportDriverMetrics().map(t => t.name -> t.value).toMap
     (m("regionsScanned"), m("regionsTotal"))
   }

@@ -48,6 +48,17 @@ class ScanEstimateSpec extends AnyFunSuite {
     assert(real == 1)
   }
 
+  test("a one-region predicate reports one region with the local read " +
+      "on and off") {
+    fqn
+    val on = estimate("k = 15")
+    val off = TestSpark.withConf(GraftAccel.LocalRead -> "false") {
+      estimate("k = 15")
+    }
+    assert(on._2 == 1 && off._2 == 1, s"on=$on off=$off")
+    assert(on == off)
+  }
+
   test("no-match predicate estimates zero; unfiltered reads everything") {
     fqn
     val (_, scanned0, rows0, _) = estimate("k > 999999")

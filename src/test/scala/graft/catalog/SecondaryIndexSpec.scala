@@ -297,16 +297,7 @@ class SecondaryIndexSpec extends AnyFunSuite with graft.TempDirs {
     val rows = q.collect()
     assert(rows.length == 1000)
     assert(rows.map(_.getDouble(1)).sum == (3000 until 4000).sum.toDouble)
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[BatchScanExec] = p match {
-      case b: BatchScanExec => Seq(b)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(qs.plan)
-      case other => other.children.flatMap(scans)
-    }
-    val ss = scans(q.queryExecution.executedPlan)
+    val ss = TestSpark.graftScans(q.queryExecution.executedPlan)
     assert(ss.length == 1, s"expected index-only plan, got ${ss.length} scans")
     // grp = 3 is a leading-key point predicate on the index → pruned
     // to its region(s), not the whole 16-region index. The sorted
@@ -316,13 +307,13 @@ class SecondaryIndexSpec extends AnyFunSuite with graft.TempDirs {
     // regions, but a sampling-shortened region inside the run can add
     // another. Assert pruning (a small handful, not the 16-region
     // index) rather than a pseudo-exact boundary count.
-    assert(ss.head.inputRDD.getNumPartitions <= 5,
-      s"expected index point scan, got ${ss.head.inputRDD.getNumPartitions}")
+    val parts = ss.head.planInputPartitions().length
+    assert(parts <= 5, s"expected index point scan, got $parts")
     // an uncovered column falls back to the probe + base join (2 scans)
     val q2 = spark.sql(
       "SELECT k, tag FROM graft.idx.base WHERE grp = 3")
     assert(q2.collect().length == 1000)
-    assert(scans(q2.queryExecution.executedPlan).length == 2)
+    assert(TestSpark.graftScans(q2.queryExecution.executedPlan).length == 2)
     // refresh carries covered columns: append then refresh, covered
     // lookup sees the new rows with their payloads
     spark.sql(

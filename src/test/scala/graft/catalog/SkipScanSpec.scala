@@ -18,14 +18,18 @@ import graft.TestSpark
 class SkipScanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def scanOutputRows(df: org.apache.spark.sql.DataFrame): Long = {
-    df.collect()
-    val scans = df.queryExecution.executedPlan.collectLeaves().collect {
-      case b: BatchScanExec => b
+  /** Rows the task-side scan emits after row-group and page skipping;
+    * the local read is off, since it would read this one-region table
+    * on the driver. */
+  private def scanOutputRows(df: org.apache.spark.sql.DataFrame): Long =
+    TestSpark.withConf(GraftAccel.LocalRead -> "false") {
+      df.collect()
+      val scans = df.queryExecution.executedPlan.collectLeaves().collect {
+        case b: BatchScanExec => b
+      }
+      assert(scans.nonEmpty, df.queryExecution.executedPlan.toString)
+      scans.map(_.metrics("numOutputRows").value).sum
     }
-    assert(scans.nonEmpty, df.queryExecution.executedPlan.toString)
-    scans.map(_.metrics("numOutputRows").value).sum
-  }
 
   test("trailing-dim point predicate reads a fraction of a wide region") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.skip")

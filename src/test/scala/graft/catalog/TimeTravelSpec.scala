@@ -97,12 +97,9 @@ class TimeTravelSpec extends AnyFunSuite {
     val df = spark.sql(s"SELECT v FROM $fqn VERSION AS OF $v1 " +
       "WHERE k = 250")
     assert(df.collect().map(_.getDouble(0)).toSeq == Seq(250.0))
-    val scans = df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2
-        .BatchScanExec => b
-    }
+    val scans = TestSpark.graftScans(df.queryExecution.executedPlan)
     assert(scans.nonEmpty)
-    assert(scans.head.inputRDD.getNumPartitions == 1,
+    assert(scans.head.planInputPartitions().length == 1,
       "snapshot scan must prune to the single matching pinned region")
 
     // manifest-answered COUNT on the snapshot: the PINNED region set

@@ -20,17 +20,7 @@ class SourceLoaderSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sfDir
 
-  /** Spark jobs submitted by `body` on this thread. */
-  private def jobsIn(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try body finally sc.clearJobGroup()
-    // listenerBus is private[spark]: drain it so the status store has
-    // seen every job `body` started
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
+  import TestSpark.jobsIn
 
   test("a warm T call plans its DataFrame with no Spark job") {
     // the counter sees the inference job a bare read launches...
