@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session profile: every entry point (`Bench`, `Prof`, `Verify`,
-  * `Shell`, `ScaleBench`, the tests) builds its session from [[builder]].
+/** The one session profile: every entry point (`Bench`, `Verify`, `Shell`,
+  * `ScaleBench`, the tests) builds its session from [[builder]].
   * It sets only what differs from Spark's defaults; the defaults the code
   * relies on (AQE, its 1m coalesce floor, storage-partitioned joins with
   * partition-value pushdown) are pinned by `GraftSessionSpec`.

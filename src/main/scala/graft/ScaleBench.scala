@@ -19,7 +19,10 @@ import graft.operators.{T, TextOps}
   *
   * Usage: `runMain graft.ScaleBench [srcSfDir] [workDir] [factor]`
   * (defaults: /root/testdata/sf0.1, /tmp/graft_sf1, 10 — i.e. an
-  * sf≈1 equivalent). Prints one JSON line per measured scale.
+  * sf≈1 equivalent). Prints one JSON line per measured scale, with each
+  * query's seconds and [[Ledger]] row. `SPARK_GRAFT_ONLY` selects queries
+  * as in [[Bench]]; `SPARK_GRAFT_SCREEN_ONLY` runs the screen family
+  * alone.
   */
 object ScaleBench {
 
@@ -292,43 +295,26 @@ object ScaleBench {
           .dedupMinhashOnStoreFull(s, d)),
       "dedup_minhash_full" -> NearDup)
 
-  /** Local iteration aid (the driver never sets it): run only queries
-    * whose name contains one of the comma-separated substrings. */
-  private val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-    .map(_.split(',').toSeq)
-  /** Substring match, or exact match with a leading '=' (needed where
-    * one face's name is a substring of another's, e.g.
-    * `=dedup_minhash_full` without catalog_dedup_minhash_full). */
-  private def selected(name: String): Boolean =
-    only.forall(_.exists(f =>
-      if (f.startsWith("=")) name == f.drop(1) else name.contains(f)))
-
-  private def queriesFor(): Seq[(String, (SparkSession, String) => DataFrame)] =
-    Heavy.filter(selected).map(n => n -> SparkEntry.queries(n))
-
-  /** Warm once (builds catalog tables — ingest, not query time), then
-    * report the min of `timedRuns` timed passes per query (min is the
-    * contention-robust statistic on this box). */
-  def measure(s: SparkSession, d: String, timedRuns: Int = 2,
-      qs: Seq[(String, (SparkSession, String) => DataFrame)] = queriesFor())
-      : Seq[(String, Double)] = {
-    qs.foreach { case (_, fn) => fn(s, d).count() }
-    qs.map { case (name, fn) =>
-      val times = (0 until timedRuns).map { _ =>
-        val t0 = System.nanoTime()
-        fn(s, d).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> times.min
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.builder("graft-scalebench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val ledger = new Ledger(spark)
+    // times `qs` on `d` (min of `timed` passes) and prints one line with
+    // each query's seconds and ledger row
+    def emit(tag: String, d: String, timed: Int,
+        qs: Seq[(String, (SparkSession, String) => DataFrame)])
+        : Map[String, Double] = {
+      val r = ledger.measure(qs, d, timed)()
+      def obj(f: Pass => String) =
+        Ledger.jsonObject(r.map { case (k, p) => k -> f(p) })
+      if (r.nonEmpty)
+        println(s"""{"metric":"scale_$tag","queries":${obj(_.seconds.toString)},""" +
+          s""""dir":"$d","ledger":${obj(_.row.json)}}""")
+      r.map { case (k, p) => k -> p.seconds }.toMap
+    }
     // SPARK_GRAFT_SCREEN_ONLY: a dedicated screen/band-family capture
     // in a fresh JVM — base = the factor-1 renamed corpus so BOTH
     // sides share the 32-file layout (the source sf0.1 corpus is one
@@ -336,53 +322,23 @@ object ScaleBench {
     // and makes base-vs-scaled wall ratios meaningless), and nothing
     // else runs first (a long mixed-section run was observed to
     // degrade late-section times ~4x — heap/GC pollution, not data).
-    if (sys.env.contains("SPARK_GRAFT_SCREEN_ONLY")) {
-      val scrQ = Screen.filter(t => selected(t._1))
-      val baseDir = s"${workDir}_nd_x1"
-      val renamedDir = s"${workDir}_nd_x$factor"
-      generateRenamedDocs(spark, srcDir, baseDir, 1)
-      generateRenamedDocs(spark, srcDir, renamedDir, factor)
-      def emitScreen(tag: String, d: String): Map[String, Double] = {
-        val r = measure(spark, d, 1, scrQ)
-        val json = r.map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-        println(s"""{"metric":"scale_$tag","queries":$json,"dir":"$d"}""")
-        r.toMap
-      }
-      val b = emitScreen("screen_base", baseDir)
-      val s2 = emitScreen(s"screen_x$factor", renamedDir)
-      val ratios = scrQ.map(_._1).sorted.map { k =>
-        "\"" + k + "\":" + (if (b(k) > 0) s2(k) / b(k) else -1.0)
-      }.mkString("{", ",", "}")
-      println(
-        s"""{"metric":"scale_ratio","factor":$factor,"queries":$ratios}""")
-      spark.stop()
-      return
-    }
+    val screenOnly = sys.env.contains("SPARK_GRAFT_SCREEN_ONLY")
+    def picked(qs: Seq[(String, (SparkSession, String) => DataFrame)]) =
+      qs.filter(t => !screenOnly && Ledger.selected(t._1))
+    val heavy = picked(Heavy.map(n => n -> SparkEntry.queries(n)))
+    // winnow extraction on the amplified corpus (map-side; replica-safe)
+    val wQ = picked(Seq("text_winnow_full" -> WinnowFull))
     // the key-shifted amplification covers every table — skip it when
     // the filter selects none of its consumers (e.g. a screen-family
     // pass at factor 100 needs only the renamed documents corpus)
-    if (queriesFor().nonEmpty || Seq("text_winnow_full").exists(selected))
-      generate(spark, srcDir, workDir, factor)
-    def emit(tag: String, d: String, timedRuns: Int = 2,
-        qs: Seq[(String, (SparkSession, String) => DataFrame)] = queriesFor())
-        : Map[String, Double] = {
-      val r = measure(spark, d, timedRuns, qs)
-      val json = r.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"scale_$tag","queries":$json,"dir":"$d"}""")
-      r.toMap
-    }
-    val base = emit("base", srcDir)
-    val scaled = emit(s"x$factor", workDir)
-    // winnow extraction on the amplified corpus (map-side; replica-safe)
-    val wQ = Seq("text_winnow_full" -> WinnowFull)
-      .filter(t => selected(t._1))
+    if (heavy.nonEmpty || wQ.nonEmpty) generate(spark, srcDir, workDir, factor)
+    val base = emit("base", srcDir, 2, heavy)
+    val scaled = emit(s"x$factor", workDir, 2, heavy)
     val wBase = emit("winnow_base", srcDir, 2, wQ)
     val wBig = emit(s"winnow_x$factor", workDir, 2, wQ)
     // near-dup curve on driver corpora (see NearDup); one timed run —
     // the pipeline is tens of seconds, contention noise is <10% there
-    val ndQ = Seq("dedup_minhash_full" -> NearDup,
+    val ndQ = picked(Seq("dedup_minhash_full" -> NearDup,
       "dedup_substring_full" -> SubstringDedup,
       "dedup_winnow_full" -> WinnowPairs,
       // the dedup-at-ingest screen, both faces, at natural corpus
@@ -391,20 +347,21 @@ object ScaleBench {
       // scaling statistic (BASELINE.md carries it)
       "dedup_incoming" -> SparkEntry.queries("dedup_incoming"),
       "catalog_dedup_incoming" ->
-        SparkEntry.queries("catalog_dedup_incoming"))
-      .filter(t => selected(t._1))
+        SparkEntry.queries("catalog_dedup_incoming")))
     val smallDir = srcDir.replace("sf0.1", "sf0.01")
     val ndBase = emit("neardup_base", smallDir, 1, ndQ)
     val ndBig = emit("neardup_x10", srcDir, 1, ndQ)
     // screen/band family on the duplication-density-preserving
     // amplifier (token-bijection replicas, see generateRenamedDocs):
-    // base = the source corpus, scaled = factor× renamed replicas —
-    // true pair output grows exactly ×factor, so time/factor is the
-    // honest scaling statistic
-    val scrQ = Screen.filter(t => selected(t._1))
+    // base = the source corpus (or, screen-only, its factor-1 renaming),
+    // scaled = factor× renamed replicas — true pair output grows exactly
+    // ×factor, so time/factor is the honest scaling statistic
+    val scrQ = Screen.filter(t => Ledger.selected(t._1))
+    val scrDir = s"${workDir}_nd_x1"
+    if (screenOnly) generateRenamedDocs(spark, srcDir, scrDir, 1)
     val renamedDir = s"${workDir}_nd_x$factor"
     if (scrQ.nonEmpty) generateRenamedDocs(spark, srcDir, renamedDir, factor)
-    val scrBase = emit("screen_base", srcDir, 1, scrQ)
+    val scrBase = emit("screen_base", if (screenOnly) scrDir else srcDir, 1, scrQ)
     val scrBig = emit(s"screen_x$factor", renamedDir, 1, scrQ)
     val all = (base.keys.map(k =>
         k -> (base(k), scaled(k))) ++
@@ -412,10 +369,8 @@ object ScaleBench {
       scrQ.map { case (k, _) => s"amp_$k" -> (scrBase(k), scrBig(k)) } ++
       wQ.map { case (k, _) => k -> (wBase(k), wBig(k)) })
       .toMap
-    val ratios = all.keys.toSeq.sorted.map { k =>
-      val (b, s2) = all(k)
-      "\"" + k + "\":" + (if (b > 0) s2 / b else -1.0)
-    }.mkString("{", ",", "}")
+    val ratios = Ledger.jsonObject(all.toSeq.sortBy(_._1).map {
+      case (k, (b, s2)) => k -> (if (b > 0) s2 / b else -1.0).toString })
     println(s"""{"metric":"scale_ratio","factor":$factor,"queries":$ratios}""")
     spark.stop()
   }

@@ -185,19 +185,14 @@ object ColStats {
 
   // ------------------------------------------------------------ prune side
 
-  /** Keep the region iff every pushed conjunct may have a satisfying
-    * row, judging by the region's column stats. `types` maps lowercase
-    * non-key column names to their types; `stats` keys are lowercase
-    * (normalized at manifest load). One-shot convenience face of
-    * [[compile]]. */
-  def survives(filters: Seq[sources.Filter], stats: Map[String, ColStat],
-      types: Map[String, DataType]): Boolean =
-    compile(filters, types).survives(stats)
-
-  /** Compile the pushed filters once per scan: literal encodings are
-    * memoized across regions, so evaluating thousands of regions
-    * against a runtime `In` set of thousands of join keys encodes each
-    * literal once, not per region. */
+  /** The stats half of region pruning: [[Compiled.survives]] keeps a
+    * region iff every pushed conjunct may have a satisfying row, judging
+    * by its column stats. `types` maps lowercase non-key column names to
+    * their types; `stats` keys are lowercase (normalized at manifest
+    * load). Compile once per scan: literal encodings are memoized across
+    * regions, so evaluating thousands of regions against a runtime `In`
+    * set of thousands of join keys encodes each literal once, not per
+    * region. */
   def compile(filters: Seq[sources.Filter],
       types: Map[String, DataType]): Compiled =
     new Compiled(filters, types)
@@ -206,14 +201,154 @@ object ColStats {
       types: Map[String, DataType]) {
     private val memo =
       new java.util.HashMap[(DataType, Any), Option[Array[Byte]]]()
-    private val encM: (DataType, Any) => Option[Array[Byte]] =
-      (dt, v) => memo.computeIfAbsent((dt, v),
-        _ => ColStats.enc(dt, v))
+    private def encF(dt: DataType, v: Any): Option[Array[Byte]] =
+      memo.computeIfAbsent((dt, v), _ => ColStats.enc(dt, v))
     def survives(stats: Map[String, ColStat]): Boolean =
       // stat keys are lowercase from manifest load (TableMeta) — no
       // per-region map rebuild on manifest-scale region counts
-      stats.isEmpty || filters.forall(mayMatch(_, stats, types, encM))
+      stats.isEmpty || filters.forall(mayMatch(_, stats))
+
+    private def stat(st: Map[String, ColStat], c: String)
+        : Option[(ColStat, DataType)] = {
+      val lc = c.toLowerCase
+      for (s <- st.get(lc); dt <- types.get(lc)) yield (s, dt)
+    }
+    private def bounds(st: Map[String, ColStat], c: String)
+        : Option[(Array[Byte], Array[Byte], DataType)] =
+      stat(st, c).flatMap { case (s, dt) =>
+        for (mn <- s.min; mx <- s.max)
+          yield (KeyCodec.fromHex(mn), KeyCodec.fromHex(mx), dt)
+      }
+    // no non-null value: a value predicate is never TRUE (nor FALSE)
+    private def noValues(st: Map[String, ColStat], c: String): Boolean =
+      stat(st, c).exists { case (s, _) => !s.hasValues }
+    private def hasNull(st: Map[String, ColStat], c: String): Boolean =
+      stat(st, c).forall { case (s, _) => s.nulls > 0 }
+    private def hasNonNull(st: Map[String, ColStat], c: String): Boolean =
+      stat(st, c).forall { case (s, _) => s.hasValues }
+    /** ∃ non-null value in [min, max] related by `may` to the encoded
+      * literal `v`? Unknown → true. */
+    private def witness(st: Map[String, ColStat], c: String, v: Any)(
+        may: (Array[Byte], Array[Byte], Array[Byte]) => Boolean): Boolean =
+      if (noValues(st, c)) false
+      else bounds(st, c) match {
+        case Some((mn, mx, dt)) => encF(dt, v).forall(b => may(mn, mx, b))
+        case None => true
+      }
+    /** ∃ non-null value in [min, max] among `vs` (`neg`: outside `vs`)? */
+    private def inSet(st: Map[String, ColStat], c: String, vs: Array[Any],
+        neg: Boolean): Boolean =
+      if (noValues(st, c)) false
+      else bounds(st, c) match {
+        // ∃ non-null ∉ vs: disprovable only when bounds pin ONE value
+        // that is proven present in vs
+        case Some((mn, mx, dt)) if neg =>
+          !(KeyCodec.compare(mn, mx) == 0 && vs.exists(v =>
+            encF(dt, v).exists(KeyCodec.compare(_, mn) == 0)))
+        case Some((mn, mx, dt)) => vs.exists(v => encF(dt, v).forall(b =>
+          KeyCodec.compare(mn, b) <= 0 && KeyCodec.compare(mx, b) >= 0))
+        case None => true
+      }
+    /** ∃ non-null value in [min, max] starting with `p` (`neg`: not)? */
+    private def prefix(st: Map[String, ColStat], c: String, p: String,
+        neg: Boolean): Boolean =
+      if (noValues(st, c)) false
+      else bounds(st, c) match {
+        case Some((mn, mx, StringType)) =>
+          val lo = p.getBytes(StandardCharsets.UTF_8)
+          val hi = KeyCodec.successor(lo)
+          if (neg) // ∃ non-null outside [p, successor(p))
+            KeyCodec.compare(mn, lo) < 0 ||
+              (hi != null && KeyCodec.compare(mx, hi) >= 0)
+          else KeyCodec.compare(mx, lo) >= 0 &&
+            (hi == null || KeyCodec.compare(mn, hi) < 0)
+        case _ => true
+      }
+
+    /** May any row of the region satisfy f? Unknown → true (sound). */
+    private def mayMatch(f: sources.Filter, st: Map[String, ColStat])
+        : Boolean = f match {
+      case sources.And(l, r) => mayMatch(l, st) && mayMatch(r, st)
+      case sources.Or(l, r) => mayMatch(l, st) || mayMatch(r, st)
+      case sources.Not(g) => negMayMatch(g, st)
+      case sources.EqualTo(c, v) => witness(st, c, v)((mn, mx, b) =>
+        KeyCodec.compare(mn, b) <= 0 && KeyCodec.compare(mx, b) >= 0)
+      case sources.EqualNullSafe(c, null) => hasNull(st, c)
+      case sources.EqualNullSafe(c, v) => witness(st, c, v)((mn, mx, b) =>
+        KeyCodec.compare(mn, b) <= 0 && KeyCodec.compare(mx, b) >= 0)
+      case sources.GreaterThan(c, v) =>
+        witness(st, c, v)((_, mx, b) => KeyCodec.compare(mx, b) > 0)
+      case sources.GreaterThanOrEqual(c, v) =>
+        witness(st, c, v)((_, mx, b) => KeyCodec.compare(mx, b) >= 0)
+      case sources.LessThan(c, v) =>
+        witness(st, c, v)((mn, _, b) => KeyCodec.compare(mn, b) < 0)
+      case sources.LessThanOrEqual(c, v) =>
+        witness(st, c, v)((mn, _, b) => KeyCodec.compare(mn, b) <= 0)
+      case sources.In(c, vs) => inSet(st, c, vs, neg = false)
+      case sources.IsNull(c) => hasNull(st, c)
+      case sources.IsNotNull(c) => hasNonNull(st, c)
+      case sources.StringStartsWith(c, p) => prefix(st, c, p, neg = false)
+      case _ => true
+    }
+
+    /** May any row make g strictly FALSE (not null)? `Not(g)` only passes
+      * rows where g is FALSE — a null input gives NULL, which a filter
+      * rejects — so value cases require a non-null witness. Unknown →
+      * true (sound). */
+    private def negMayMatch(g: sources.Filter, st: Map[String, ColStat])
+        : Boolean = g match {
+      case sources.Not(h) => mayMatch(h, st)
+      case sources.And(l, r) => // ¬(l∧r) = ¬l ∨ ¬r
+        negMayMatch(l, st) || negMayMatch(r, st)
+      case sources.Or(l, r) => // ¬(l∨r) = ¬l ∧ ¬r
+        negMayMatch(l, st) && negMayMatch(r, st)
+      // ∃ non-null ≠ v: only disprovable when bounds are exact and
+      // pinned to v (truncated string bounds can never pin — min is a
+      // prefix, max a successor, so they differ and we stay sound)
+      case sources.EqualTo(c, v) => witness(st, c, v)((mn, mx, b) =>
+        !(KeyCodec.compare(mn, mx) == 0 && KeyCodec.compare(mn, b) == 0))
+      // ¬(c <=> NULL) ≡ c IS NOT NULL (null-safe is 2-valued)
+      case sources.EqualNullSafe(c, null) => hasNonNull(st, c)
+      // ¬(c <=> v) is TRUE for nulls too
+      case sources.EqualNullSafe(c, v) =>
+        hasNull(st, c) || witness(st, c, v)((mn, mx, b) =>
+          !(KeyCodec.compare(mn, mx) == 0 && KeyCodec.compare(mn, b) == 0))
+      case sources.GreaterThan(c, v) => // ∃ c ≤ v
+        witness(st, c, v)((mn, _, b) => KeyCodec.compare(mn, b) <= 0)
+      case sources.GreaterThanOrEqual(c, v) => // ∃ c < v
+        witness(st, c, v)((mn, _, b) => KeyCodec.compare(mn, b) < 0)
+      case sources.LessThan(c, v) => // ∃ c ≥ v
+        witness(st, c, v)((_, mx, b) => KeyCodec.compare(mx, b) >= 0)
+      case sources.LessThanOrEqual(c, v) => // ∃ c > v
+        witness(st, c, v)((_, mx, b) => KeyCodec.compare(mx, b) > 0)
+      case sources.In(c, vs) => inSet(st, c, vs, neg = true)
+      case sources.IsNull(c) => hasNonNull(st, c)
+      case sources.IsNotNull(c) => hasNull(st, c)
+      case sources.StringStartsWith(c, p) => prefix(st, c, p, neg = true)
+      case _ => true
+    }
   }
+
+  /** A stored bound (hex) back as a Catalyst value, the inverse of the
+    * trackers' encoding: decimal stats carry the unscaled long at the
+    * column's scale, strings are raw UTF-8, the rest the [[KeyCodec]]
+    * encoding (so a key bound decodes too). */
+  def decode(dt: DataType, hex: String): Any = {
+    val b = KeyCodec.fromHex(hex)
+    dt match {
+      case d: DecimalType => Decimal(
+        KeyCodec.decode(LongType, b, 0, b.length).asInstanceOf[Long],
+        d.precision, d.scale)
+      case StringType => UTF8String.fromBytes(b)
+      case _ => KeyCodec.decode(dt, b, 0, b.length)
+    }
+  }
+
+  /** The non-key columns that carry manifest stats. */
+  def statFields(schema: StructType, keyCols: Seq[String]): Seq[StructField] =
+    schema.fields.toSeq
+      .filterNot(f => keyCols.exists(_.equalsIgnoreCase(f.name)))
+      .filter(f => trackable(f.dataType))
 
   private def enc(dt: DataType, v: Any): Option[Array[Byte]] = dt match {
     // decimal literal → unscaled long at the column's scale, exactly;
@@ -239,155 +374,5 @@ object ColStats {
           case _ => KeyCodec.encode(dt, cv)
         }) catch { case _: Exception => None }
       }
-  }
-
-  /** May any row of the region satisfy f? Unknown → true (sound). */
-  private def mayMatch(f: sources.Filter, st: Map[String, ColStat],
-      types: Map[String, DataType],
-      encF: (DataType, Any) => Option[Array[Byte]]): Boolean = {
-    def stat(c: String): Option[(ColStat, DataType)] = {
-      val lc = c.toLowerCase
-      for (s <- st.get(lc); dt <- types.get(lc)) yield (s, dt)
-    }
-    def bounds(c: String): Option[(Array[Byte], Array[Byte], DataType)] =
-      stat(c).flatMap { case (s, dt) =>
-        for (mn <- s.min; mx <- s.max)
-          yield (KeyCodec.fromHex(mn), KeyCodec.fromHex(mx), dt)
-      }
-    // value predicate against an all-null region is never TRUE
-    def allNull(c: String): Boolean =
-      stat(c).exists { case (s, _) => !s.hasValues }
-    def cmpPred(c: String, v: Any)(
-        may: (Array[Byte], Array[Byte], Array[Byte]) => Boolean): Boolean =
-      if (allNull(c)) false
-      else bounds(c) match {
-        case Some((mn, mx, dt)) => encF(dt, v).forall(b => may(mn, mx, b))
-        case None => true
-      }
-    f match {
-      case sources.And(l, r) =>
-        mayMatch(l, st, types, encF) && mayMatch(r, st, types, encF)
-      case sources.Or(l, r) =>
-        mayMatch(l, st, types, encF) || mayMatch(r, st, types, encF)
-      case sources.Not(g) => negMayMatch(g, st, types, encF)
-      case sources.EqualTo(c, v) => cmpPred(c, v)((mn, mx, b) =>
-        KeyCodec.compare(mn, b) <= 0 && KeyCodec.compare(mx, b) >= 0)
-      case sources.EqualNullSafe(c, null) =>
-        stat(c).forall { case (s, _) => s.nulls > 0 }
-      case sources.EqualNullSafe(c, v) => cmpPred(c, v)((mn, mx, b) =>
-        KeyCodec.compare(mn, b) <= 0 && KeyCodec.compare(mx, b) >= 0)
-      case sources.GreaterThan(c, v) =>
-        cmpPred(c, v)((_, mx, b) => KeyCodec.compare(mx, b) > 0)
-      case sources.GreaterThanOrEqual(c, v) =>
-        cmpPred(c, v)((_, mx, b) => KeyCodec.compare(mx, b) >= 0)
-      case sources.LessThan(c, v) =>
-        cmpPred(c, v)((mn, _, b) => KeyCodec.compare(mn, b) < 0)
-      case sources.LessThanOrEqual(c, v) =>
-        cmpPred(c, v)((mn, _, b) => KeyCodec.compare(mn, b) <= 0)
-      case sources.In(c, vs) =>
-        if (allNull(c)) false
-        else bounds(c) match {
-          case Some((mn, mx, dt)) => vs.exists(v => encF(dt, v).forall(b =>
-            KeyCodec.compare(mn, b) <= 0 && KeyCodec.compare(mx, b) >= 0))
-          case None => true
-        }
-      case sources.IsNull(c) =>
-        stat(c).forall { case (s, _) => s.nulls > 0 }
-      case sources.IsNotNull(c) =>
-        stat(c).forall { case (s, _) => s.hasValues }
-      case sources.StringStartsWith(c, p) =>
-        if (allNull(c)) false
-        else bounds(c) match {
-          case Some((mn, mx, StringType)) =>
-            val lo = p.getBytes(StandardCharsets.UTF_8)
-            val hi = KeyCodec.successor(lo)
-            KeyCodec.compare(mx, lo) >= 0 &&
-              (hi == null || KeyCodec.compare(mn, hi) < 0)
-          case _ => true
-        }
-      case _ => true
-    }
-  }
-
-  /** May any row make g strictly FALSE (not null)? `Not(g)` only passes
-    * rows where g is FALSE — a null input gives NULL, which a filter
-    * rejects — so value cases require a non-null witness. Unknown →
-    * true (sound). */
-  private def negMayMatch(g: sources.Filter, st: Map[String, ColStat],
-      types: Map[String, DataType],
-      encF: (DataType, Any) => Option[Array[Byte]]): Boolean = {
-    def stat(c: String): Option[(ColStat, DataType)] = {
-      val lc = c.toLowerCase
-      for (s <- st.get(lc); dt <- types.get(lc)) yield (s, dt)
-    }
-    def bounds(c: String): Option[(Array[Byte], Array[Byte], DataType)] =
-      stat(c).flatMap { case (s, dt) =>
-        for (mn <- s.min; mx <- s.max)
-          yield (KeyCodec.fromHex(mn), KeyCodec.fromHex(mx), dt)
-      }
-    def noValues(c: String): Boolean =
-      stat(c).exists { case (s, _) => !s.hasValues }
-    def hasNull(c: String): Boolean =
-      stat(c).forall { case (s, _) => s.nulls > 0 }
-    def hasNonNull(c: String): Boolean =
-      stat(c).forall { case (s, _) => s.hasValues }
-    /** ∃ non-null value v' with cmp against the encoded literal. */
-    def witness(c: String, v: Any)(
-        may: (Array[Byte], Array[Byte], Array[Byte]) => Boolean): Boolean =
-      if (noValues(c)) false
-      else bounds(c) match {
-        case Some((mn, mx, dt)) => encF(dt, v).forall(b => may(mn, mx, b))
-        case None => true
-      }
-    g match {
-      case sources.Not(h) => mayMatch(h, st, types, encF)
-      case sources.And(l, r) => // ¬(l∧r) = ¬l ∨ ¬r
-        negMayMatch(l, st, types, encF) || negMayMatch(r, st, types, encF)
-      case sources.Or(l, r) => // ¬(l∨r) = ¬l ∧ ¬r
-        negMayMatch(l, st, types, encF) && negMayMatch(r, st, types, encF)
-      // ∃ non-null ≠ v: only disprovable when bounds are exact and
-      // pinned to v (truncated string bounds can never pin — min is a
-      // prefix, max a successor, so they differ and we stay sound)
-      case sources.EqualTo(c, v) => witness(c, v)((mn, mx, b) =>
-        !(KeyCodec.compare(mn, mx) == 0 && KeyCodec.compare(mn, b) == 0))
-      // ¬(c <=> NULL) ≡ c IS NOT NULL (null-safe is 2-valued)
-      case sources.EqualNullSafe(c, null) => hasNonNull(c)
-      // ¬(c <=> v) is TRUE for nulls too
-      case sources.EqualNullSafe(c, v) =>
-        hasNull(c) || witness(c, v)((mn, mx, b) =>
-          !(KeyCodec.compare(mn, mx) == 0 && KeyCodec.compare(mn, b) == 0))
-      case sources.GreaterThan(c, v) => // ∃ c ≤ v
-        witness(c, v)((mn, _, b) => KeyCodec.compare(mn, b) <= 0)
-      case sources.GreaterThanOrEqual(c, v) => // ∃ c < v
-        witness(c, v)((mn, _, b) => KeyCodec.compare(mn, b) < 0)
-      case sources.LessThan(c, v) => // ∃ c ≥ v
-        witness(c, v)((_, mx, b) => KeyCodec.compare(mx, b) >= 0)
-      case sources.LessThanOrEqual(c, v) => // ∃ c > v
-        witness(c, v)((_, mx, b) => KeyCodec.compare(mx, b) > 0)
-      // ∃ non-null ∉ vs: disprovable only when bounds pin ONE value
-      // that is proven present in vs
-      case sources.In(c, vs) =>
-        if (noValues(c)) false
-        else bounds(c) match {
-          case Some((mn, mx, dt)) =>
-            !(KeyCodec.compare(mn, mx) == 0 && vs.exists(v =>
-              encF(dt, v).exists(KeyCodec.compare(_, mn) == 0)))
-          case None => true
-        }
-      case sources.IsNull(c) => hasNonNull(c)
-      case sources.IsNotNull(c) => hasNull(c)
-      // ∃ non-null outside [p, successor(p))
-      case sources.StringStartsWith(c, p) =>
-        if (noValues(c)) false
-        else bounds(c) match {
-          case Some((mn, mx, StringType)) =>
-            val lo = p.getBytes(StandardCharsets.UTF_8)
-            val hi = KeyCodec.successor(lo)
-            KeyCodec.compare(mn, lo) < 0 ||
-              (hi != null && KeyCodec.compare(mx, hi) >= 0)
-          case _ => true
-        }
-      case _ => true
-    }
   }
 }

@@ -32,10 +32,7 @@ object GraftAnalyze {
     * second call finds nothing missing and commits nothing. */
   def analyze(spark: SparkSession, table: GraftTable): (Int, Int) = {
     val meta = table.meta
-    val keySet = meta.keyCols.map(_.toLowerCase).toSet
-    val statFields = meta.schema.fields.toSeq
-      .filterNot(f => keySet(f.name.toLowerCase))
-      .filter(f => ColStats.trackable(f.dataType))
+    val statFields = ColStats.statFields(meta.schema, meta.keyCols)
     if (statFields.isEmpty) return (0, 0)
 
     def missingOf(r: RegionMeta): Seq[String] = statFields

@@ -78,9 +78,7 @@ object GraftConvert {
     // RegionStats tracks exactly those non-key columns
     val keyFields = keys.map(k =>
       schema.fields.find(_.name.equalsIgnoreCase(k)).get)
-    val statFields = schema.fields.toSeq
-      .filterNot(f => keys.exists(_.equalsIgnoreCase(f.name)))
-      .filter(f => ColStats.trackable(f.dataType))
+    val statFields = ColStats.statFields(schema, keys)
     val requested = StructType(keyFields ++ statFields)
     val reqJson = requested.json
     val nKeys = keys.size

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.Scan
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import scala.util.control.NonFatal
 
 /** SQL-visible maintenance procedures for the graft catalog, on the
@@ -174,26 +174,16 @@ object GraftProcedures {
         override def call(input: InternalRow): java.util.Iterator[Scan] = {
           val gt = graftTable(catalogName, input.getUTF8String(0).toString)
           val keyTypes = gt.meta.keyTypes
-          def decodeKey(hexes: Seq[String]): String =
-            hexes.zip(keyTypes).map { case (h, dt) =>
-              val b = graft.codec.KeyCodec.fromHex(h)
-              String.valueOf(graft.codec.KeyCodec.decode(dt, b, 0, b.length))
-            }.mkString(",")
-          def decodeStat(col: String, hex: String): String = {
-            val dt = gt.meta.schema(col).dataType
-            val b = graft.codec.KeyCodec.fromHex(hex)
-            dt match {
-              case org.apache.spark.sql.types.StringType =>
-                new String(b, java.nio.charset.StandardCharsets.UTF_8)
-              case d: org.apache.spark.sql.types.DecimalType =>
-                java.math.BigDecimal.valueOf(
-                  graft.codec.KeyCodec.decode(
-                    org.apache.spark.sql.types.LongType, b, 0, b.length)
-                    .asInstanceOf[Long], d.scale).toPlainString
-              case _ => String.valueOf(
-                graft.codec.KeyCodec.decode(dt, b, 0, b.length))
+          def text(dt: DataType, hex: String): String =
+            ColStats.decode(dt, hex) match {
+              case d: org.apache.spark.sql.types.Decimal =>
+                d.toJavaBigDecimal.toPlainString
+              case v => String.valueOf(v)
             }
-          }
+          def decodeKey(hexes: Seq[String]): String =
+            hexes.zip(keyTypes).map { case (h, dt) => text(dt, h) }.mkString(",")
+          def decodeStat(col: String, hex: String): String =
+            text(gt.meta.schema(col).dataType, hex)
           val rows = TableMeta.loadRegions(gt.tableDir).map { r =>
             val stats = r.stats.toSeq.sortBy(_._1).map { case (c, st) =>
               s"$c:[${st.min.map(decodeStat(c, _)).getOrElse("")}.." +

@@ -240,6 +240,31 @@ object GraftFilters {
       dims: Map[String, (Int, DataType)]): Map[Int, IvSet] =
     filters.map(one(_, dims)).foldLeft(Map.empty[Int, IvSet])(merge)
 
+  /** Non-key columns with manifest stats, by lowercase name: they drive
+    * region skipping on non-key predicates ([[ColStats]]) — the
+    * manifest-level analogue of parquet row-group stats, one level up, so
+    * the driver never even schedules a task for a region the predicate
+    * provably misses. */
+  def statTypes(meta: TableMeta): Map[String, DataType] =
+    ColStats.statFields(meta.schema, meta.keyCols)
+      .map(f => f.name.toLowerCase -> f.dataType).toMap
+
+  /** The one region-survival predicate: may a region hold a row passing
+    * `filters`, judging by its key interval and (unless
+    * `GraftAccel.StatsSkip` is off) its manifest column stats? Build it
+    * once per scan: the intervals are derived and each literal encoded
+    * once, not per region. */
+  def regionSurvives(meta: TableMeta, filters: Seq[sources.Filter])
+      : RegionMeta => Boolean = {
+    val constraints = intervals(filters, meta.keyCols.zipWithIndex.map {
+      case (k, i) => k.toLowerCase -> (i, meta.schema(k).dataType) }.toMap)
+    val statsOn = GraftAccel.on(GraftAccel.StatsSkip)
+    val colPred = ColStats.compile(filters, statTypes(meta))
+    r => KeyRanges.survives(constraints,
+      r.mins.map(KeyCodec.fromHex), r.maxs.map(KeyCodec.fromHex)) &&
+      (!statsOn || colPred.survives(r.stats))
+  }
+
   /** Conservative translation of one pushed predicate on a
     * constant-per-region metadata column (`colName`) into a per-region
     * test. The value is CONSTANT per region, so this pruning is exact
@@ -847,21 +872,8 @@ final case class GraftAggReaderFactory() extends PartitionReaderFactory {
           } else if (p.cells(i) == null) {
             row.setNullAt(i) // min/max of an empty table
           } else {
-            val dt = DataType.fromJson(p.typeJsons(i))
-            val bytes = KeyCodec.fromHex(p.cells(i))
-            val v = dt match {
-              // decimal stats carry the unscaled long
-              case d: DecimalType =>
-                org.apache.spark.sql.types.Decimal(
-                  KeyCodec.decode(LongType, bytes, 0, bytes.length)
-                    .asInstanceOf[Long], d.precision, d.scale)
-              case _ => KeyCodec.decode(dt, bytes, 0, bytes.length)
-            }
-            row.update(i, v match {
-              case s: String =>
-                org.apache.spark.unsafe.types.UTF8String.fromString(s)
-              case other => other
-            })
+            row.update(i,
+              ColStats.decode(DataType.fromJson(p.typeJsons(i)), p.cells(i)))
           }
         }
         row
@@ -1140,22 +1152,7 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
     with SupportsReportOrdering with SupportsRuntimeFiltering
     with SupportsReportPartitioning {
 
-  private val dims: Map[String, (Int, DataType)] =
-    meta.keyCols.zipWithIndex.map { case (k, i) =>
-      k.toLowerCase -> (i, meta.schema(k).dataType)
-    }.toMap
-
-  /** Non-key columns with manifest stats: drive region skipping on
-    * non-key predicates ([[ColStats]]) — the manifest-level analogue of
-    * parquet row-group stats, one level up, so the driver never even
-    * schedules a task for a region the predicate provably misses. */
-  private val statTypes: Map[String, DataType] = {
-    val keySet = meta.keyCols.map(_.toLowerCase).toSet
-    meta.schema.fields.iterator
-      .filterNot(f => keySet(f.name.toLowerCase))
-      .filter(f => ColStats.trackable(f.dataType))
-      .map(f => f.name.toLowerCase -> f.dataType).toMap
-  }
+  private val statTypes = GraftFilters.statTypes(meta)
 
   /** Runtime (dynamic) filters Spark injects at execution time — e.g.
     * the build-side key set of a broadcast join. They prune regions
@@ -1196,16 +1193,11 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
     var c = selectedRegionsCache
     if (c == null) {
       val all = filters.toSeq ++ runtimeFilters
-      val constraints = GraftFilters.intervals(all, dims)
-      val statsOn = GraftAccel.on(GraftAccel.StatsSkip)
-      val colPred = ColStats.compile(all, statTypes) // literals enc'd once
+      val survives = GraftFilters.regionSurvives(meta, all)
       val idPreds = all.flatMap(GraftFilters.regionIdPred)
       val filePreds = all.flatMap(GraftFilters.regionFilePred)
       c = pinned.getOrElse(TableMeta.loadRegions(tableDir)).filter { r =>
-        idPreds.forall(_(r.id)) && filePreds.forall(_(r.file)) &&
-          KeyRanges.survives(constraints,
-            r.mins.map(KeyCodec.fromHex), r.maxs.map(KeyCodec.fromHex)) &&
-          (!statsOn || colPred.survives(r.stats))
+        idPreds.forall(_(r.id)) && filePreds.forall(_(r.file)) && survives(r)
       }
       selectedRegionsCache = c
     }
@@ -1460,19 +1452,17 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
         }
       val byteOrd = Ordering.fromLessThan((a: Array[Byte], b: Array[Byte]) =>
         KeyCodec.compare(a, b) < 0)
-      def decoded(dt: DataType, hex: String): Any = {
-        val b = KeyCodec.fromHex(hex)
-        KeyCodec.decode(dt, b, 0, b.length)
-      }
+      // the least / greatest of encoded bounds, decoded
+      def lo(dt: DataType, hexes: Seq[String]) =
+        ColStats.decode(dt, hexes.minBy(KeyCodec.fromHex)(byteOrd))
+      def hi(dt: DataType, hexes: Seq[String]) =
+        ColStats.decode(dt, hexes.maxBy(KeyCodec.fromHex)(byteOrd))
       meta.keyCols.zipWithIndex.foreach { case (k, d) =>
         val dt = meta.schema(k).dataType
         if (dt != StringType)
           out.put(connector.expressions.Expressions.column(k),
-            colStat(
-              Some(decoded(dt,
-                regions.map(_.mins(d)).minBy(KeyCodec.fromHex)(byteOrd))),
-              Some(decoded(dt,
-                regions.map(_.maxs(d)).maxBy(KeyCodec.fromHex)(byteOrd))),
+            colStat(Some(lo(dt, regions.map(_.mins(d)))),
+              Some(hi(dt, regions.map(_.maxs(d)))),
               0L)) // keys reject nulls at write time
       }
       statTypes.foreach { case (lc, dt) =>
@@ -1481,19 +1471,10 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
         if (perRegion.forall(_.isDefined)) { // else unknown: skip column
           val sts = perRegion.map(_.get)
           val nulls = sts.map(_.nulls).sum
-          val mns = sts.flatMap(_.min).map(KeyCodec.fromHex)
-          val mxs = sts.flatMap(_.max).map(KeyCodec.fromHex)
-          def dec(b: Array[Byte]): Any = dt match {
-            // decimal stats store the unscaled long; CBO wants the
-            // Catalyst Decimal
-            case d: DecimalType => org.apache.spark.sql.types.Decimal(
-              KeyCodec.decode(LongType, b, 0, b.length).asInstanceOf[Long],
-              d.precision, d.scale)
-            case _ => KeyCodec.decode(dt, b, 0, b.length)
-          }
+          val mns = sts.flatMap(_.min)
           val (mn, mx) =
             if (dt == StringType || mns.isEmpty) (None, None)
-            else (Some(dec(mns.min(byteOrd))), Some(dec(mxs.max(byteOrd))))
+            else (Some(lo(dt, mns)), Some(hi(dt, sts.flatMap(_.max))))
           val name = meta.schema.fields
             .find(_.name.toLowerCase == lc).get.name
           out.put(connector.expressions.Expressions.column(name),
@@ -1698,17 +1679,7 @@ final class GraftMicroBatchStream(tableDir: File, required: StructType,
   // batch-only today, so SQL-level stream filters stay above the scan;
   // the skip engages for filters handed to the stream directly and is
   // ready the day streaming pushdown lands.
-  private lazy val (dims, statTypes) = {
-    val meta = TableMeta.load(tableDir)
-    val keySet = meta.keyCols.map(_.toLowerCase).toSet
-    (meta.keyCols.zipWithIndex.map { case (k, i) =>
-      k.toLowerCase -> (i, meta.schema(k).dataType)
-    }.toMap,
-      meta.schema.fields.iterator
-        .filterNot(f => keySet(f.name.toLowerCase))
-        .filter(f => ColStats.trackable(f.dataType))
-        .map(f => f.name.toLowerCase -> f.dataType).toMap)
-  }
+  private lazy val meta = TableMeta.load(tableDir)
 
   override def initialOffset(): Offset = RegionCountOffset(generation, 0L)
   override def latestOffset(): Offset = {
@@ -1782,13 +1753,8 @@ final class GraftMicroBatchStream(tableDir: File, required: StructType,
           "regions it still needed have been aged out. Restart the " +
           "stream with a fresh checkpoint, or compact less often than " +
           "the stream checkpoints.")
-    val constraints = GraftFilters.intervals(filters.toSeq, dims)
-    val statsOn = GraftAccel.on(GraftAccel.StatsSkip)
-    val colPred = ColStats.compile(filters.toSeq, statTypes)
     picked.sortBy(_.id)
-      .filter(r => KeyRanges.survives(constraints,
-        r.mins.map(KeyCodec.fromHex), r.maxs.map(KeyCodec.fromHex)) &&
-        (!statsOn || colPred.survives(r.stats)))
+      .filter(GraftFilters.regionSurvives(meta, filters.toSeq))
       .map(r =>
         GraftInputPartition(Array(new File(tableDir, r.file).getPath),
           r.rows, GraftInputPartition.hosts(r), Array(r.id))

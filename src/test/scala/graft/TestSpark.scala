@@ -52,18 +52,12 @@ object TestSpark {
       .getOrElse(throw new AssertionError(s"no GraftScan node in:\n$p"))
   }
 
-  /** Spark jobs submitted by `body` on this thread, counted under a job
-    * group through `statusTracker`. */
-  def jobsIn(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try body finally sc.clearJobGroup()
-    // listenerBus is private[spark]: drain it so the status store has
-    // seen every job `body` started
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
+  /** Counts the jobs of test code: one ledger for the whole JVM. */
+  lazy val ledger = new Ledger(spark)
+
+  /** Spark jobs submitted by `body` on this thread (and the threads its
+    * queries hand their local properties to). */
+  def jobsIn(body: => Unit): Int = ledger.record(body).row.jobs
 
   /** Every `GraftScan` of a physical plan, in plan order, whether a
     * task reads it (`BatchScanExec`) or the driver does

@@ -15,7 +15,7 @@ import graft.codec.KeyCodec
   * manifest) and the region skipping they drive.
   *
   * Soundness is the invariant that must never break: a region pruned by
-  * [[ColStats.survives]] must contain NO row on which the predicate
+  * [[ColStats.Compiled.survives]] must contain NO row on which the predicate
   * evaluates TRUE — verified property-style against a brute-force
   * 3-valued evaluator over random nullable data (the key-path analogue
   * is PruneSoundnessSpec, whose rows are non-null and classical).
@@ -23,6 +23,10 @@ import graft.codec.KeyCodec
 class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
 
   private val rnd = new Random(20260812)
+
+  private def survives(fs: Seq[sources.Filter], st: Map[String, ColStat],
+      types: Map[String, DataType]): Boolean =
+    ColStats.compile(fs, types).survives(st)
 
   // ---- brute force: Kleene 3VL; a filter passes a row iff TRUE -------
 
@@ -133,7 +137,7 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
       val regions = rows.grouped(1 + rnd.nextInt(8)).toSeq
       val pred = randPred(3)
       regions.foreach { rg =>
-        if (!ColStats.survives(Seq(pred), statsOf(rg), types)) {
+        if (!survives(Seq(pred), statsOf(rg), types)) {
           val matching = rg.filter(eval3(pred, _).contains(true))
           assert(matching.isEmpty,
             s"scenario $i: pruned region $rg has TRUE rows $matching " +
@@ -152,13 +156,13 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
     assert(s.min.get.length / 2 <= ColStats.MaxStringStatBytes)
     assert(s.max.get.length / 2 <= ColStats.MaxStringStatBytes)
     // equality inside the truncated range must survive
-    assert(ColStats.survives(
+    assert(survives(
       Seq(sources.EqualTo("s", base + "mmm")), st, types))
     // far outside must prune
-    assert(!ColStats.survives(Seq(sources.EqualTo("s", "a")), st, types))
-    assert(!ColStats.survives(Seq(sources.EqualTo("s", "zzz")), st, types))
+    assert(!survives(Seq(sources.EqualTo("s", "a")), st, types))
+    assert(!survives(Seq(sources.EqualTo("s", "zzz")), st, types))
     // prefix of the shared run must survive
-    assert(ColStats.survives(
+    assert(survives(
       Seq(sources.StringStartsWith("s", "x" * 10)), st, types))
   }
 
@@ -169,10 +173,10 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
     val st = Map("d" -> t.stat)
     val ty = Map("d" -> (DoubleType: DataType))
     // Spark: NaN > x is TRUE, NaN < x is FALSE, NaN = NaN is TRUE
-    assert(ColStats.survives(Seq(sources.GreaterThan("d", 5.0)), st, ty))
-    assert(!ColStats.survives(Seq(sources.LessThan("d", 5.0)), st, ty))
-    assert(ColStats.survives(Seq(sources.EqualTo("d", Double.NaN)), st, ty))
-    assert(!ColStats.survives(Seq(sources.EqualTo("d", 5.0)), st, ty))
+    assert(survives(Seq(sources.GreaterThan("d", 5.0)), st, ty))
+    assert(!survives(Seq(sources.LessThan("d", 5.0)), st, ty))
+    assert(survives(Seq(sources.EqualTo("d", Double.NaN)), st, ty))
+    assert(!survives(Seq(sources.EqualTo("d", 5.0)), st, ty))
   }
 
   test("zero bounds cover both signed zeros") {
@@ -183,8 +187,8 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
     val st = Map("d" -> t.stat)
     val ty = Map("d" -> (DoubleType: DataType))
     // a region holding only -0.0 must survive "= 0.0" (SQL: -0.0 = 0.0)
-    assert(ColStats.survives(Seq(sources.EqualTo("d", 0.0)), st, ty))
-    assert(ColStats.survives(Seq(sources.EqualTo("d", -0.0)), st, ty))
+    assert(survives(Seq(sources.EqualTo("d", 0.0)), st, ty))
+    assert(survives(Seq(sources.EqualTo("d", -0.0)), st, ty))
   }
 
   // ---- catalog integration -------------------------------------------
@@ -259,13 +263,14 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.cstats")
     spark.sql("DROP TABLE IF EXISTS graft.cstats.cbo")
     spark.sql(
-      """CREATE TABLE graft.cstats.cbo (k BIGINT, d DATE, v DOUBLE, s STRING)
+      """CREATE TABLE graft.cstats.cbo (k BIGINT, d DATE, v DOUBLE, s STRING,
+        |  p DECIMAL(10,2))
         |TBLPROPERTIES('keyCols'='k', 'numRegions'='4')""".stripMargin)
     spark.sql(
       """INSERT INTO graft.cstats.cbo
         |SELECT id, date_add(DATE'2024-01-01', CAST(id AS INT)),
         |       CASE WHEN id % 10 = 0 THEN NULL ELSE id * 0.5 END,
-        |       concat('s', id)
+        |       concat('s', id), CAST(id - 200 AS DECIMAL(10,2)) / 4
         |FROM range(400)""".stripMargin)
     val df = spark.table("graft.cstats.cbo")
     df.collect()
@@ -285,6 +290,9 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
     // nullable double: null count summed across regions
     assert(byName("v").nullCount.getAsLong == 40L)
     assert(byName("v").min.get == 0.5 && byName("v").max.get == 199.5)
+    // decimal stats store the unscaled long; CBO gets the Catalyst Decimal
+    assert(byName("p").min.get == Decimal(BigDecimal("-50.00"), 10, 2))
+    assert(byName("p").max.get == Decimal(BigDecimal("49.75"), 10, 2))
     // strings: no min/max (possibly truncated bounds), nulls only
     assert(!byName("s").min.isPresent && byName("s").nullCount.getAsLong == 0L)
     spark.sql("DROP TABLE graft.cstats.cbo")
@@ -394,12 +402,14 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.cstats")
     spark.sql("DROP TABLE IF EXISTS graft.cstats.proc")
     spark.sql(
-      """CREATE TABLE graft.cstats.proc (k BIGINT, day INT, note STRING)
+      """CREATE TABLE graft.cstats.proc (k BIGINT, day INT, note STRING,
+        |  amt DECIMAL(10,2))
         |TBLPROPERTIES('keyCols'='k', 'numRegions'='2')""".stripMargin)
     spark.sql(
       """INSERT INTO graft.cstats.proc
         |SELECT id, CAST(id AS INT),
-        |       CASE WHEN id % 3 = 0 THEN NULL ELSE concat('n', id) END
+        |       CASE WHEN id % 3 = 0 THEN NULL ELSE concat('n', id) END,
+        |       CAST(id - 50 AS DECIMAL(10,2)) / 4
         |FROM range(100)""".stripMargin)
     val rows = spark.sql("CALL graft.sys.stats(table => 'cstats.proc')")
       .collect()
@@ -413,6 +423,9 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
     // non-key stats rendered with decoded bounds and null counts
     val stats = rows.map(_.getAs[String]("column_stats")).mkString(" | ")
     assert(stats.contains("day:[") && stats.contains("note:["))
+    // decimals render at the column's scale, in plain notation
+    assert(stats.contains("amt:[-12.50..") && stats.contains("..12.25]"),
+      stats)
     val totalNoteNulls = rows.map { r =>
       val s = r.getAs[String]("column_stats")
       val m = "note:\\[[^\\]]*\\] nulls=(\\d+)".r.findFirstMatchIn(s)

@@ -20,12 +20,10 @@ class LocalReadSpec extends AnyFunSuite {
 
   import TestSpark.jobsIn
 
-  private var groups = 0
   /** (jobs, sorted rows) of collecting the query `q` builds. */
   private def run(q: => DataFrame): (Int, Seq[String]) = {
-    groups += 1
     var rows = Seq.empty[String]
-    val jobs = jobsIn(s"local-read-$groups") {
+    val jobs = jobsIn {
       rows = q.collect().map(_.toSeq.mkString("|")).toSeq.sorted
     }
     (jobs, rows)
@@ -120,7 +118,7 @@ class LocalReadSpec extends AnyFunSuite {
     q.collect()
     var head: Array[org.apache.spark.sql.Row] = null
     var tail: Array[org.apache.spark.sql.Row] = null
-    assert(jobsIn("local-read-take") {
+    assert(jobsIn {
       head = q.take(3)
       tail = q.tail(2)
     } == 0)

@@ -24,12 +24,12 @@ class SourceLoaderSpec extends AnyFunSuite with TempDirs {
 
   test("a warm T call plans its DataFrame with no Spark job") {
     // the counter sees the inference job a bare read launches...
-    assert(jobsIn("loader-bare") {
+    assert(jobsIn {
       spark.read.parquet(s"$sf/orders.parquet").schema
     } >= 1)
     T(spark, sf, "orders")
     // ...and none once the schema is known
-    assert(jobsIn("loader-warm") { T(spark, sf, "orders").schema } == 0)
+    assert(jobsIn { T(spark, sf, "orders").schema } == 0)
     assert(T(spark, sf, "orders").schema ==
       spark.read.parquet(s"$sf/orders.parquet").schema)
   }
@@ -74,7 +74,7 @@ class SourceLoaderSpec extends AnyFunSuite with TempDirs {
     val face = graft.SparkEntry.queries("point_lookup")
     face(spark, sf).collect()
     var rows = 0
-    val jobs = jobsIn("loader-point-lookup") {
+    val jobs = jobsIn {
       rows = face(spark, sf).collect().length
     }
     assert(rows == 1)
