@@ -40,7 +40,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPreCBORule(session =>
       new graft.catalog.GraftMviewRewrite(session))
     // a scan pruned to at most one small region → read on the driver,
-    // no Spark job (a planner strategy: it needs the pushed-down scan)
+    // a small local-relation append → written on the driver; no Spark
+    // job either way (a planner strategy: it needs the pushed-down scan)
     ext.injectPlannerStrategy(_ => graft.catalog.GraftLocalRead)
     // stored graft views expand in the resolution fixed point (views
     // over views converge across iterations; cycles die at the

@@ -10,8 +10,9 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import graft.codec.KeyCodec
 
-/** Write path: every append is a range-partitioned, key-sorted bulk
-  * load.
+/** Write path: every append is a range-shuffled, key-sorted bulk load,
+  * except a small local-relation append (`INSERT … VALUES`), written on
+  * the driver by the same writer ([[GraftLocalWriteExec]]).
   *
   * The reference bulk-loads by shuffling rows with a custom range
   * partitioner over encoded row keys, sorting within partitions and
@@ -340,7 +341,8 @@ class GraftStreamingWrite(tableDir: File, meta: TableMeta, queryId: String)
 }
 
 /** Writes one region file per (task, region bucket). Input arrives
-  * key-sorted (RequiresDistributionAndOrdering), and the bucket is
+  * key-sorted (RequiresDistributionAndOrdering, or the driver-side sort
+  * of [[GraftLocalWriteExec]]), and the bucket is
   * monotone in the first key column, so files roll at most
   * `numBuckets` times per task and each file covers a single bucket. */
 final class GraftDataWriter(dir: String, schemaJson: String,
@@ -473,10 +475,9 @@ final class GraftDataWriter(dir: String, schemaJson: String,
     RegionCommits(closed.reverse)
   }
 
-  override def abort(): Unit = {
-    closeCurrent()
-    opened.foreach(f => new File(dir, f).delete())
-  }
+  override def abort(): Unit =
+    try closeCurrent()
+    finally opened.foreach(f => new File(dir, f).delete())
 
   override def close(): Unit = ()
 }
