@@ -501,8 +501,7 @@ case class GraftHistoryCommand(catalogName: String, table: String)
   import org.apache.spark.sql.catalyst.expressions.AttributeReference
   import org.apache.spark.sql.types.StringType
   override val output: Seq[AttributeReference] =
-    Seq("version", "committed_at", "operation", "regions_added",
-      "rows_added", "regions_removed")
+    GraftProcedures.cols("history")
       .map(n => AttributeReference(n, StringType, nullable = true)())
   override def run(session: SparkSession): Seq[Row] =
     session.sql(
@@ -536,14 +535,15 @@ case class GraftDetailCommand(catalogName: String, table: String)
 }
 
 /** `OPTIMIZE t ZORDER BY (cols)` → the cluster procedure at the
-  * table's current live region count (layout-count-preserving). */
+  * table's current live region count (layout-count-preserving), read
+  * from the manifest. */
 case class GraftOptimizeZorderCommand(catalogName: String, table: String,
     cols: String) extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {
-    val n = session.sql(
-      s"CALL `$catalogName`.sys.stats(table => '$table')").count()
+    val n = TableMeta.loadRegions(
+      GraftProcedures.graftTable(catalogName, table).tableDir).size
     session.sql(s"CALL `$catalogName`.sys.cluster(table => '$table', " +
-      s"cols => '$cols', target_regions => ${math.max(1L, n)})").collect()
+      s"cols => '$cols', target_regions => ${math.max(1, n)})").collect()
     Seq.empty
   }
 }

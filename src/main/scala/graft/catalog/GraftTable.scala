@@ -1277,21 +1277,6 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
         packedGroups.size)
     }
 
-  /** Spark's small-file packing applied to regions: a streaming-ingest
-    * table accumulates thousands of tiny regions between compactions,
-    * and one task per tiny region is a scheduler flood at scale. Pack
-    * greedily to the same target Spark's file source uses
-    * (min(maxPartitionBytes, max(openCost, total/defaultParallelism)))
-    * — large compacted regions stay one-per-task, tiny append regions
-    * coalesce. Key-grouped scans pack only within a bucket, so
-    * storage-partitioned plans survive packing. */
-  /** Cached: consulted by partitioning, ordering, and partition
-    * planning in one scan — each recomputation stats every region
-    * file. Invalidated together with the pruned-region cache. The pack
-    * target comes from the WHOLE scan's bytes (Spark's maxSplitBytes
-    * formula) and is shared across buckets — a per-bucket total would
-    * clamp the target to openCost on bucketed streaming-ingest tables
-    * and defeat packing exactly where it matters most. */
   /** Region truncation for a pushed LIMIT/TopN ([[GraftScan.LimitPush]]).
     * Engages ONLY on an unfiltered scan (no pushed predicates, no
     * runtime filters, not group mode): with any filter in play the
@@ -1352,6 +1337,23 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
   }
 
   @volatile private var packedGroupsCache: Seq[Seq[RegionMeta]] = _
+
+  /** Spark's small-file packing applied to regions: a streaming-ingest
+    * table accumulates thousands of tiny regions between compactions,
+    * and one task per tiny region is a scheduler flood at scale. Pack
+    * greedily to the same target Spark's file source uses
+    * (min(maxPartitionBytes, max(openCost, total/defaultParallelism)))
+    * — large compacted regions stay one-per-task, tiny append regions
+    * coalesce. Key-grouped scans pack only within a bucket, so
+    * storage-partitioned plans survive packing. The pack target comes
+    * from the WHOLE scan's bytes (Spark's maxSplitBytes formula) and is
+    * shared across buckets — a per-bucket total would clamp the target
+    * to openCost on bucketed streaming-ingest tables and defeat packing
+    * exactly where it matters most.
+    *
+    * Cached: consulted by partitioning, ordering, and partition
+    * planning in one scan. Invalidated together with the pruned-region
+    * cache. */
   private def packedGroups: Seq[Seq[RegionMeta]] = {
     var c = packedGroupsCache
     if (c == null) {
