@@ -13,9 +13,11 @@ import org.apache.spark.sql.connector.catalog.Identifier
   * HFiles, the region server compacts them); in graft every append
   * commits its own region files, so a table fed by many small inserts —
   * e.g. the streaming foreachBatch sink — accumulates overlapping
-  * little regions that weaken pruning. Compaction = one range-shuffled
+  * little regions that weaken pruning. Compaction = one shuffled,
   * sorted rewrite through the normal write path into a staging table,
-  * then a manifest swap under the table's manifest lock.
+  * then a manifest swap under the table's manifest lock. A table with
+  * fixed `regionSplits` is shuffled by region, so it compacts to at
+  * most one region per bucket whatever `numRegions` asks for.
   *
   * Concurrency: the rewrite reads exactly the region files present when
   * compaction started (the snapshot), and the final swap happens inside
@@ -62,7 +64,7 @@ object GraftCompact {
     // highest source region id per key. Provenance comes from a
     // broadcast (file basename -> region id) join — O(regions) driver
     // metadata, no giant literal in the plan — and the keep-latest is
-    // one row_number window keyed like the range shuffle that follows,
+    // one row_number window keyed like the write shuffle that follows,
     // so at 100 TB the fold costs one extra key-partitioned exchange,
     // the same order of work the reference's region server spends
     // folding HFile cells at its own compaction.

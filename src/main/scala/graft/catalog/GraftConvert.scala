@@ -20,8 +20,8 @@ import scala.util.control.NonFatal
   * writer collects inline, so every downstream consumer (range
   * pruning, stats skipping, manifest-answered aggregates, split/merge)
   * works on converted regions identically. Files that are NOT sorted
-  * on the key tuple are loaded through the normal range-shuffled
-  * sorted bulk write instead (correctness first: an unsorted region
+  * on the key tuple are loaded through the normal shuffled, sorted
+  * bulk write instead (correctness first: an unsorted region
   * would silently break parquet page skipping and the k-way merge
   * invariants).
   *
@@ -152,7 +152,7 @@ object GraftConvert {
         s.region.copy(file = name)
       }
       if (regions.nonEmpty) TableMeta.appendRegions(tgt.tableDir, regions)
-      // the stragglers take the normal range-shuffled sorted write
+      // the stragglers take the normal shuffled, sorted write
       if (unsorted.nonEmpty)
         spark.read.schema(schema).parquet(unsorted.map(_.path): _*)
           .writeTo(s"$catalogName.$target").append()

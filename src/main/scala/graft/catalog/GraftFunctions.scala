@@ -5,7 +5,6 @@ import java.security.MessageDigest
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import graft.codec.KeyCodec
 
 /** Fixed region split points on a graft table's first key column.
@@ -93,18 +92,14 @@ object RegionSplits {
     case other => throw new IllegalArgumentException(
       s"regionSplits unsupported for first-key type ${other.simpleString}")
   }
-
-  /** Catalyst internal value (UTF8String and friends) → codec value. */
-  private[catalog] def codecValue(dt: DataType, v: Any): Any = v match {
-    case u: UTF8String => u.toString
-    case other => other
-  }
 }
 
 /** V2 catalog function face of [[RegionSplits]] — resolvable through
   * [[GraftCatalog]] (a `FunctionCatalog`) so Spark's
   * `V2ScanPartitioningAndOrdering` can translate the scan-reported
-  * transform into a Catalyst `TransformExpression`. */
+  * transform into a Catalyst `TransformExpression`, and the write's
+  * clustered distribution ([[GraftWriteOrdering]]) into the expression
+  * its shuffle routes rows by. */
 final class GraftRegionFunction(splits: RegionSplits) extends UnboundFunction {
   override def name(): String = splits.functionName
   override def description(): String =
@@ -124,9 +119,11 @@ final class GraftRegionBound(splits: RegionSplits)
   override def name(): String = splits.functionName
   override def canonicalName(): String = s"graft.${splits.functionName}"
   override def isResultNullable: Boolean = false
-  override def produceResult(input: InternalRow): Integer = {
-    val raw = input.get(0, splits.keyType)
-    splits.bucketOf(KeyCodec.encode(splits.keyType,
-      RegionSplits.codecValue(splits.keyType, raw)))
-  }
+  /** Runs in the write's shuffle map, before the region writer sees the
+    * row: a null key goes to bucket 0 so that the writer, not this
+    * function, refuses it (`null value in key column`) and nothing is
+    * committed. The key is encoded exactly as the writer encodes it. */
+  override def produceResult(input: InternalRow): Integer =
+    if (input.isNullAt(0)) 0
+    else splits.bucketOf(KeyCodec.encodeAt(input, 0, splits.keyType))
 }

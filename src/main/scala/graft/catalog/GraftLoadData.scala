@@ -373,8 +373,9 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
 
 /** Runs the intercepted statement through [[GraftBulkLoad.loadCsv]] —
   * identical semantics to `CALL graft.sys.load_csv(table, path)`:
-  * typed CSV read, permissive null backfill of short lines, range
-  * shuffle into key-sorted regions, manifest commit. `LOCAL` is
+  * typed CSV read, permissive null backfill of short lines, the
+  * table's write shuffle (by region for a fixed-split table, by sampled
+  * key range otherwise) into key-sorted regions, manifest commit. `LOCAL` is
   * accepted and means the same thing here (paths resolve through the
   * same Hadoop filesystem either way). */
 case class GraftLoadDataCommand(catalogName: String, namespace: String,
@@ -394,8 +395,8 @@ case class GraftLoadDataCommand(catalogName: String, namespace: String,
   * single manifest segment ([[TableMeta.commitCopy]]), so the rows
   * and the file-identity memory are atomic — a crashed, replayed, or
   * concurrently racing COPY INTO can never double-load. All new files
-  * load in ONE Spark job (one range-shuffled sorted region write),
-  * not a per-file loop: at ingest scale the statement cost is one
+  * load in ONE write (one shuffled, sorted region write), not a
+  * per-file loop: at ingest scale the statement cost is one
   * bulk load plus an O(ledger) pre-filter. File-identity memory rides
   * the epoch ledger's compaction aging window
   * (`graft.epochRetainGenerations`, default 64 compaction cycles) —

@@ -23,7 +23,7 @@ import scala.util.control.NonFatal
   * `LOAD DATA [LOCAL] INPATH '<path>' INTO TABLE t` surface
   * (/root/reference `HBaseBulkLoadIntoTableSuite.scala:35-66`,
   * `HBaseSQLParser` LOAD grammar): same CSV → typed rows with null
-  * backfill of short lines → range-shuffled sorted region load.
+  * backfill of short lines → shuffled, key-sorted region load.
   * Spark's own `LOAD DATA` statement is reserved for Hive-format v1
   * tables, so the sanctioned v2 route is a procedure rather than a
   * parser fork — one name, same semantics, plus it composes with

@@ -19,8 +19,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    pushed predicates and the runtime group filter on `_graft_file`
   *    prune REGIONS, but every row of a surviving region is produced —
   *    a rewritten group must carry its unmatched rows forward;
-  *  - the standard range-shuffled sorted region write
-  *    ([[GraftWrite]]'s distribution/ordering), so rewritten regions
+  *  - the standard shuffled, sorted region write
+  *    ([[GraftWrite]]'s distribution/ordering: by region function on a
+  *    fixed-split table, by key range otherwise), so rewritten regions
   *    are as key-sorted and bucket-stamped as bulk-loaded ones and the
   *    table's key-grouped plans survive any number of UPDATEs;
   *  - a commit that atomically swaps exactly the scanned regions for

@@ -10,18 +10,25 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import graft.codec.KeyCodec
 
-/** Write path: every append is a range-shuffled, key-sorted bulk load,
+/** Write path: every append is a shuffled, key-sorted bulk load,
   * except a small local-relation append (`INSERT … VALUES`), written on
   * the driver by the same writer ([[GraftLocalWriteExec]]).
   *
-  * The reference bulk-loads by shuffling rows with a custom range
-  * partitioner over encoded row keys, sorting within partitions and
-  * writing HFiles (/root/reference `HBaseCatalog.loadTable:507-663`,
-  * `HBasePartitioner.scala`). The Spark-4-native equivalent is
-  * [[RequiresDistributionAndOrdering]]: the write declares an ordered
-  * distribution on the key columns and Spark plans the range shuffle +
-  * sort itself (AQE sizes the partitions), so every task receives a
-  * disjoint, sorted key range and writes exactly one region file.
+  * The reference bulk-loads by shuffling rows with a custom partitioner
+  * over the table's region start keys, sorting within partitions and
+  * writing one HFile per region (the reference's
+  * `HBaseCatalog.loadTable:507-663`, `HBasePartitioner.scala`). The
+  * Spark-4-native equivalent is [[RequiresDistributionAndOrdering]]:
+  * the write declares a distribution ([[GraftWriteOrdering]]) plus a
+  * key sort, and Spark plans the shuffle and sort itself.
+  *  - A table with fixed `regionSplits` is clustered by its region
+  *    function, the `HBasePartitioner` analogue: no sampling pass, and
+  *    each bucket goes to exactly one task, which writes it as one
+  *    region file.
+  *  - Any other table is range-shuffled on the key columns: Spark
+  *    samples the input for the range bounds (AQE sizes the
+  *    partitions), and every task writes its disjoint, sorted key range
+  *    as one region file.
   * The commit message carries per-dimension min/max encoded keys; the
   * driver appends them to the region manifest atomically on commit.
   *
@@ -85,15 +92,26 @@ object GraftWrite {
 class GraftCopyConflictException(msg: String)
     extends RuntimeException(msg)
 
-/** The ONE definition of the write-side key ordering: bulk loads and
-  * row-level rewrites ([[GraftReplaceWrite]]) must sort identically or
-  * rewritten regions would lose the key-grouped plan guarantees. */
+/** The ONE definition of the write-side distribution and key ordering:
+  * bulk loads, `COPY INTO`, the streaming sink, compaction staging and
+  * row-level rewrites ([[GraftReplaceWrite]]) must shuffle and sort
+  * identically or rewritten regions would lose the key-grouped plan
+  * guarantees. */
 private[catalog] object GraftWriteOrdering {
   def sortOrders(meta: TableMeta): Array[SortOrder] =
     meta.keyCols.map(k =>
       Expressions.sort(Expressions.column(k), SortDirection.ASCENDING)).toArray
-  def distribution(meta: TableMeta): Distribution =
-    Distributions.ordered(sortOrders(meta))
+
+  /** A fixed-split table clusters by its region function, the same
+    * transform its scan reports as `KeyGroupedPartitioning` (Spark
+    * resolves it through [[GraftCatalog.loadFunction]]), so every bucket
+    * lands whole in one task and no sampling job runs. Any other table
+    * range-partitions on the key columns. */
+  def distribution(meta: TableMeta): Distribution = meta.splits match {
+    case Some(sp) => Distributions.clustered(Array(Expressions.apply(
+      sp.functionName, Expressions.column(meta.keyCols.head))))
+    case None => Distributions.ordered(sortOrders(meta))
+  }
 }
 
 class GraftWrite(tableDir: File, meta: TableMeta, queryId: String,
@@ -118,7 +136,7 @@ class GraftWrite(tableDir: File, meta: TableMeta, queryId: String,
     }
 
   /** Native streaming sink (`df.writeStream.toTable("graft.ns.t")`):
-    * each micro-batch runs the same range-shuffled sorted region write,
+    * each micro-batch runs the same shuffled, sorted region write,
     * and the epoch commit is deduplicated through the manifest's
     * per-query epoch ledger, so a replayed micro-batch after a failure
     * commits nothing twice (effectively exactly-once). This supersedes
@@ -165,8 +183,7 @@ private[catalog] object GraftCommits {
   def factory(tableDir: File, meta: TableMeta,
       enforceChecks: Boolean = true): GraftWriterFactory =
     GraftWriterFactory(tableDir.getPath, meta.schema.json,
-      meta.keyCols.toArray,
-      meta.splits.map(_.points.map(KeyCodec.toHex)).getOrElse(Array.empty),
+      meta.keyCols.toArray, meta.splits,
       RegionWriter.pageRowLimit(meta),
       TableMeta.bloomCols(meta.properties).toArray,
       if (enforceChecks) GraftChecks.bound(meta) else Nil,
@@ -294,7 +311,7 @@ class GraftCopyBatchWrite(tableDir: File, meta: TableMeta,
 }
 
 final case class GraftWriterFactory(dir: String, schemaJson: String,
-    keyCols: Array[String], splitsHex: Array[String],
+    keyCols: Array[String], splits: Option[RegionSplits],
     pageRowLimit: Int, bloomCols: Array[String] = Array.empty,
     checks: Seq[(String,
       org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
@@ -306,7 +323,7 @@ final case class GraftWriterFactory(dir: String, schemaJson: String,
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new GraftDataWriter(dir, schemaJson, keyCols, splitsHex, partitionId,
+    new GraftDataWriter(dir, schemaJson, keyCols, splits, partitionId,
       taskId, pageRowLimit, bloomCols, checks, generated, identity)
   // streaming face: same sorted region writer per micro-batch task
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
@@ -344,9 +361,12 @@ class GraftStreamingWrite(tableDir: File, meta: TableMeta, queryId: String)
   * key-sorted (RequiresDistributionAndOrdering, or the driver-side sort
   * of [[GraftLocalWriteExec]]), and the bucket is
   * monotone in the first key column, so files roll at most
-  * `numBuckets` times per task and each file covers a single bucket. */
+  * `numBuckets` times per task and each file covers a single bucket.
+  * The bucket is the `splits` function the write's shuffle routed the
+  * row by, so a job-path task receives whole buckets and writes one
+  * file for each. */
 final class GraftDataWriter(dir: String, schemaJson: String,
-    keyCols: Array[String], splitsHex: Array[String], partitionId: Int,
+    keyCols: Array[String], splits: Option[RegionSplits], partitionId: Int,
     taskId: Long, pageRowLimit: Int = 0,
     bloomCols: Array[String] = Array.empty,
     checks: Seq[(String,
@@ -408,7 +428,6 @@ final class GraftDataWriter(dir: String, schemaJson: String,
   }.toArray
   private val keyIdx = keyCols.map(schema.fieldIndex)
   private val keyTypes = keyIdx.map(schema.fields(_).dataType)
-  private val splits: Array[Array[Byte]] = splitsHex.map(KeyCodec.fromHex)
 
   private var current: RegionWriter = _
   private var closed = List.empty[RegionMeta]
@@ -417,17 +436,6 @@ final class GraftDataWriter(dir: String, schemaJson: String,
   private def closeCurrent(): Unit = if (current != null) {
     closed = current.close().toList ::: closed
     current = null
-  }
-
-  private def bucketOf(encFirstKey: Array[Byte]): Int = {
-    var lo = 0
-    var hi = splits.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (KeyCodec.compare(splits(mid), encFirstKey) <= 0) lo = mid + 1
-      else hi = mid
-    }
-    lo
   }
 
   override def write(row0: InternalRow): Unit = {
@@ -459,7 +467,10 @@ final class GraftDataWriter(dir: String, schemaJson: String,
       encs(d) = KeyCodec.encodeAt(row, keyIdx(d), keyTypes(d))
       d += 1
     }
-    val bucket = if (splits.isEmpty) -1 else bucketOf(encs(0))
+    val bucket = splits match {
+      case Some(sp) => sp.bucketOf(encs(0))
+      case None => -1
+    }
     if (current == null || bucket != current.bucket) {
       closeCurrent()
       current = new RegionWriter(dir,

@@ -116,7 +116,7 @@ object EventStreams {
   }
 
   /** Streaming ingest into a graft catalog table: each micro-batch runs
-    * the table's range-shuffled sorted bulk append (foreachBatch → V2
+    * the table's shuffled, sorted bulk append (foreachBatch → V2
     * write), i.e. continuous bulk load into the key-sorted store. */
   def streamIntoTable(spark: SparkSession, events: DataFrame,
       tableFqn: String): Unit = {
