@@ -29,12 +29,12 @@ import graft.functions.ZOrderOps
   * Mechanics mirror [[GraftCompact]]: snapshot the live regions,
   * rewrite outside the lock (z-range partitioning + key sort within
   * each region through the SAME region writer the append path uses, so
-  * stats/blooms/page limits all apply), then swap under the commit
-  * protocol with the snapshot re-validated — a racing compaction or
-  * DELETE aborts the clustering cleanly, concurrent appends are
-  * carried forward untouched. The rewrite carries no new data
-  * (`srcMaxId` coverage like compaction), so a tailing stream skips
-  * it instead of re-reading.
+  * stats/blooms/page limits all apply), then swap through
+  * [[TableMeta.replaceRegions]] with the snapshot re-validated — a
+  * racing compaction or DELETE aborts the clustering cleanly,
+  * concurrent appends are carried forward untouched. The rewrite
+  * carries no new data (`srcMaxId` coverage like compaction), so a
+  * tailing stream skips it instead of re-reading.
   *
   * Refused loudly: tables with fixed `regionSplits` (their bucket
   * contract IS the layout — the two layouts are mutually exclusive)
@@ -78,7 +78,6 @@ object GraftCluster {
 
     val snapshot = TableMeta.loadRegions(t.tableDir)
     if (snapshot.isEmpty) return
-    val snapFiles = snapshot.map(_.file).toSet
 
     // rewrite OUTSIDE the lock, reading exactly the snapshot files:
     // z-range shuffle assigns each region a bounding box in every
@@ -135,45 +134,15 @@ object GraftCluster {
       GraftCommits.commits(messages.map(_.asInstanceOf[
         org.apache.spark.sql.connector.write.WriterCommitMessage])))
 
-    // Some(previousRetired) on success (their files age out now, like
-    // compaction's cycle), None when the snapshot changed under us
-    val swapped: Option[Seq[RegionMeta]] =
-        TableMeta.withManifestLock(t.tableDir) {
-      val (state, viewSeq) = TableMeta.commitView(t.tableDir)
-      val tail = state.regions.filterNot(r => snapFiles.contains(r.file))
-      val snapLive = state.regions.filter(r => snapFiles.contains(r.file))
-      if (snapLive.size != snapFiles.size) None
-      else {
-        // same coverage rule as compaction: the rewrite holds exactly
-        // the original data of every region id <= srcMax, so tailing
-        // streams checkpointed past them skip the rewrite
-        val srcMax = snapLive
-          .map(r => if (r.srcMaxId >= 0) r.srcMaxId else r.id).max
-        var next = state.nextId
-        val outputs = newRegions.map { r =>
-          val o = r.copy(id = next, srcMaxId = srcMax); next += 1; o
-        }
-        // tagged versions' files stay on the retired list (same pin
-        // rule as compaction's age-out — see GraftCompact)
-        val pinned = TableMeta.pinnedFiles(t.tableDir)
-        val (kept, aged) = state.retired.partition(r => pinned(r.file))
-        TableMeta.saveStateAt(t.tableDir, viewSeq, TableMeta.ManifestState(
-          state.gen + 1, outputs ++ tail, state.epochs, snapLive ++ kept,
-          next), op = "cluster")
-        Some(aged)
-      }
-    }
-    swapped match {
-      case None =>
-        // the snapshot changed under us (racing compaction/DELETE):
-        // abandon the rewrite, deleting its files
-        newRegions.foreach(r => new File(t.tableDir, r.file).delete())
-        throw new IllegalStateException(
-          s"cluster of $namespace.$table lost a race with a concurrent " +
-            "compaction or delete; retry")
-      case Some(aged) =>
-        aged.foreach(r => new File(t.tableDir, r.file).delete())
-    }
+    // same swap as compaction: the rewrite holds exactly the original
+    // data of every snapshot region (srcMaxId coverage), so tailing
+    // streams checkpointed past them skip it; a snapshot region
+    // replaced meanwhile (racing compaction/DELETE) abandons the
+    // rewrite, deleting its files
+    val srcMax = snapshot.map(_.covers).max
+    TableMeta.replaceRegions(t.tableDir, "cluster",
+      newRegions.map(_.copy(srcMaxId = srcMax)), newCycle = true)(
+      TableMeta.stillLive(s"cluster of $namespace.$table", snapshot))
     // record the layout in the table properties (outside the manifest
     // lock — save takes it itself): operators can see how a table is
     // clustered, and fixture builders can distinguish a clustered

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import java.io.File
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.Identifier
@@ -20,20 +20,32 @@ import org.apache.spark.sql.connector.catalog.Identifier
   * most one region per bucket whatever `numRegions` asks for.
   *
   * Concurrency: the rewrite reads exactly the region files present when
-  * compaction started (the snapshot), and the final swap happens inside
-  * [[TableMeta.withManifestLock]], carrying forward any regions other
+  * compaction started (the snapshot) and commits through
+  * [[TableMeta.replaceRegions]], carrying forward any regions other
   * writers committed after the snapshot. A concurrent INSERT or
-  * streaming sink therefore never loses its commit. The snapshot moves
-  * to the manifest's retired list (files retained for one compaction
-  * cycle), so a stream resumed from a pre-compaction checkpoint keeps
-  * reading the original regions it had not yet consumed — offsets
-  * reference stable region ids, not list positions. Only checkpoints
-  * more than one compaction cycle behind fail loudly.
+  * streaming sink therefore never loses its commit; a snapshot region
+  * replaced meanwhile (a racing compaction, merge, split or DELETE)
+  * fails the compaction loudly as a lost race, and so does, on a
+  * `graft.dedupKeys` table, an append overlapping the snapshot (the
+  * rewrite's fresh ids would outrank its newer rows). The snapshot
+  * moves to the manifest's retired list (files retained for one
+  * compaction cycle), so a stream resumed from a pre-compaction
+  * checkpoint keeps reading the original regions it had not yet
+  * consumed — offsets reference stable region ids, not list
+  * positions. Only checkpoints more than one compaction cycle behind
+  * fail loudly.
   */
 object GraftCompact {
 
   /** Epoch-ledger entries untouched for this many manifest generations
-    * (= compaction cycles) are dropped at compaction. */
+    * are dropped when a rewrite opens a new retention cycle (compaction,
+    * cluster, INSERT OVERWRITE — [[TableMeta.replaceRegions]]). Every
+    * rewrite bumps the generation, not only those: DELETE, UPDATE /
+    * MERGE INTO, merge and split count too. Default 64. The window
+    * trades ledger size against idle sinks: a query that commits (or
+    * even replays) within the window stays; one idle across the whole
+    * window loses replay dedup for its next restart. Size it to cover
+    * the longest plausible idle stretch of a live sink. */
   val EpochRetainProp = "graft.epochRetainGenerations"
 
   def compact(spark: SparkSession, catalogName: String, namespace: String,
@@ -45,19 +57,45 @@ object GraftCompact {
 
     val snapshot = TableMeta.loadRegions(t.tableDir)
     if (snapshot.isEmpty) return
-    val snapFiles = snapshot.map(_.file).toSet
 
+    // a name already taken (a user table, or a crashed run's leftover)
+    // fails the create loudly; only the staging table this call
+    // created is dropped, in the finally below
     val stagingName = s"${table}__compacting"
     val stagingIdent = Identifier.of(Array(namespace), stagingName)
-    cat.dropTable(stagingIdent) // stale staging from a failed run
     val props = new java.util.HashMap[String, String]()
     t.meta.properties.foreach { case (k, v) => props.put(k, v) }
     props.put(TableMeta.NumRegionsProp, numRegions.toString)
     cat.createTable(stagingIdent, t.meta.schema,
       Array.empty, props)
-    // read exactly the snapshot files (not the live table) so rows
-    // committed mid-compaction are rewritten by nobody and carried
-    // forward as-is below; files lacking later-ALTERed columns read null
+    try {
+      rewrite(spark, t, snapshot)
+        .writeTo(s"$catalogName.$namespace.$stagingName").append()
+
+      // move the rewrite into the table dir, then swap it in for the
+      // snapshot: regions committed after the snapshot are carried
+      // forward (lost-update-free vs concurrent INSERT / streaming sink),
+      // and a snapshot region that was replaced meanwhile fails the
+      // compaction as a lost race. The rewrite covers exactly the
+      // original data of every region id <= the snapshot's max coverage.
+      val staging = cat.loadTable(stagingIdent).asInstanceOf[GraftTable]
+      val staged = TableMeta.loadRegions(staging.tableDir)
+      staged.foreach(r => Files.move(new File(staging.tableDir, r.file).toPath,
+        new File(t.tableDir, r.file).toPath))
+      val srcMax = snapshot.map(_.covers).max
+      TableMeta.replaceRegions(t.tableDir, "compact",
+        staged.map(_.copy(srcMaxId = srcMax)), newCycle = true)(
+        TableMeta.stillLive(s"compaction of $namespace.$table", snapshot))
+    } finally cat.dropTable(stagingIdent)
+    cat.invalidateTable(ident)
+  }
+
+  /** The rewrite of exactly the `snapshot` files (not the live table),
+    * so rows committed mid-compaction are rewritten by nobody and
+    * carried forward as-is; files lacking later-ALTERed columns read
+    * null. */
+  private def rewrite(spark: SparkSession, t: GraftTable,
+      snapshot: Seq[RegionMeta]): org.apache.spark.sql.DataFrame = {
     val snapDf = spark.read.schema(t.meta.schema)
       .parquet(snapshot.map(r => new File(t.tableDir, r.file).getPath): _*)
     // upsert fold ([[TableMeta.DedupKeysProp]]): keep the row from the
@@ -68,7 +106,7 @@ object GraftCompact {
     // so at 100 TB the fold costs one extra key-partitioned exchange,
     // the same order of work the reference's region server spends
     // folding HFile cells at its own compaction.
-    val folded = if (!TableMeta.dedupKeys(t.meta.properties)) snapDf else {
+    if (!TableMeta.dedupKeys(t.meta.properties)) snapDf else {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       val ids = snapshot.map(r => (r.file, r.id))
@@ -85,75 +123,5 @@ object GraftCompact {
         .filter(col("_graft_rn") === 1)
         .drop("_graft_file", "_graft_src", "_graft_rn")
     }
-    folded.writeTo(s"$catalogName.$namespace.$stagingName").append()
-
-    val staging = cat.loadTable(stagingIdent).asInstanceOf[GraftTable]
-    val newRegions = TableMeta.loadRegions(staging.tableDir)
-    // swap under the manifest lock: keep regions committed after the
-    // snapshot (lost-update-free vs concurrent INSERT / streaming sink)
-    val agedOut = TableMeta.withManifestLock(t.tableDir) {
-      val (state, viewSeq) = TableMeta.commitView(t.tableDir)
-      val tail = state.regions.filterNot(r => snapFiles.contains(r.file))
-      val snapLive = state.regions.filter(r => snapFiles.contains(r.file))
-      if (snapLive.size != snapFiles.size) {
-        // the snapshot changed under us — a racing compactor rewrote it
-        // (all gone) or a concurrent DELETE dropped part of it; swapping
-        // the rewrite in would resurrect deleted rows. Abandon cleanly
-        // before touching the live table dir (staging outputs are
-        // dropped with the staging table below).
-        None
-      } else {
-        newRegions.foreach { r =>
-          // idempotent: under the lock-free `cas` store a lost commit
-          // race re-runs this whole body, and a prior attempt may have
-          // moved the file already
-          val src = new File(staging.tableDir, r.file)
-          if (src.exists())
-            Files.move(src.toPath,
-              new File(t.tableDir, r.file).toPath,
-              StandardCopyOption.REPLACE_EXISTING)
-        }
-        // the rewrite covers exactly the original data of every region
-        // id ≤ srcMax: included rewrites contribute their own coverage,
-        // originals their id (tail ids are all higher — the id counter
-        // is monotonic and tail regions committed after the snapshot)
-        val srcMax = snapLive
-          .map(r => if (r.srcMaxId >= 0) r.srcMaxId else r.id).max
-        var next = state.nextId
-        val outputs = newRegions.map { r =>
-          val o = r.copy(id = next, srcMaxId = srcMax); next += 1; o
-        }
-        val newGen = state.gen + 1
-        // epochs carried forward so streaming-sink replay dedup survives
-        // compaction; entries untouched for epochRetainGenerations
-        // compaction cycles are aged out so the ledger cannot grow
-        // without bound. The window trades ledger size against idle
-        // sinks: a query that commits (or even replays) within the
-        // window stays; one idle across the whole window loses replay
-        // dedup for its next restart. Size it to cover the longest
-        // plausible idle stretch of a live sink.
-        val retain = t.meta.properties
-          .get(GraftCompact.EpochRetainProp).map(_.toLong).getOrElse(64L)
-        val keptEpochs = state.epochs.filter { case (_, e) =>
-          e.touchedGen >= newGen - retain }
-        // the snapshot becomes the retired set (files kept one cycle for
-        // tailing streams); the previous retired set ages out now —
-        // EXCEPT files a tagged version still references
-        // ([[TableMeta.pinnedFiles]]): those stay on the retired list
-        // so `VERSION AS OF '<tag>'` outlives any number of compaction
-        // cycles. A SWAP segment CAS'd at the view's seq: a commit that
-        // landed since the view surfaces as a lost race (retried under
-        // `cas`) instead of being clobbered.
-        val pinned = TableMeta.pinnedFiles(t.tableDir)
-        val (kept, aged) = state.retired.partition(r => pinned(r.file))
-        TableMeta.saveStateAt(t.tableDir, viewSeq, TableMeta.ManifestState(
-          newGen, outputs ++ tail, keptEpochs, snapLive ++ kept, next),
-          op = "compact")
-        Some(aged)
-      }
-    }
-    agedOut.foreach(_.foreach(r => new File(t.tableDir, r.file).delete()))
-    cat.dropTable(stagingIdent)
-    cat.invalidateTable(ident)
   }
 }

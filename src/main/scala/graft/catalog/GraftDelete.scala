@@ -150,105 +150,55 @@ object GraftDelete {
         s"graft DELETE requires a predicate exactly expressible as " +
           s"${meta.keyCols.head} intervals; got " +
           filters.mkString(", ")))
-    // a boundary rewrite re-stamps its KEPT rows with a fresh (higher)
-    // region id; on a dedupKeys table that would lift a kept stale
-    // version above a newer overlapping append (latest-wins orders by
+    // phase 1: classify the snapshot's regions. A boundary rewrite
+    // re-stamps its KEPT rows with a fresh (higher) region id; on a
+    // dedupKeys table that would lift a kept stale version above a
+    // newer overlapping append (latest-wins orders by
     // _graft_region_id). Refuse exactly the unsafe rewrites — aligned
     // metadata deletes and rewrites of the newest overlapping region
     // stay available ([[GraftSplit.precedenceSafe]]).
-    def guardDedupRewrite(strad: Seq[RegionMeta],
-        all: Seq[RegionMeta], cleanup: () => Unit = () => ()): Unit =
-      if (TableMeta.dedupKeys(meta.properties) &&
-        strad.exists(r => !GraftSplit.precedenceSafe(Seq(r), all))) {
-        cleanup()
-        throw new UnsupportedOperationException(
-          "graft DELETE on a 'graft.dedupKeys' table: the boundary " +
-            "rewrite would re-stamp kept rows above newer versions of " +
-            "the same keys (latest-wins orders by _graft_region_id). " +
-            "Align the interval to region boundaries, or run " +
-            "CALL graft.sys.compact first to fold versions.")
-      }
-    // phase 1 (under the lock): classify regions; if nothing straddles,
-    // the whole delete is a metadata swap and we finish here
-    val straddlers: Seq[RegionMeta] = TableMeta.withManifestLock(tableDir) {
-      val (state, viewSeq) = TableMeta.commitView(tableDir)
-      val (in, out) = partitionRegions(state.regions, ivs)
-      val strad = straddlersOf(out, ivs)
-      guardDedupRewrite(strad, state.regions)
-      if (strad.isEmpty) {
-        if (in.nonEmpty)
-          // deleted regions retire (files kept one compaction cycle
-          // for in-flight readers); generation bump invalidates
-          // pre-upgrade position-based stream checkpoints. O(deleted)
-          // delta segment, CAS'd at the view's seq.
-          TableMeta.writeDelta(tableDir, viewSeq,
-            removeIds = in.map(_.id).toSet,
-            retiredAdd = in,
-            gen = state.gen + 1,
-            op = "delete")
-        return
-      }
-      strad
-    }
+    val snapshot = TableMeta.loadRegions(tableDir)
+    val (in, out) = partitionRegions(snapshot, ivs)
+    val straddlers = straddlersOf(out, ivs)
+    if (TableMeta.dedupKeys(meta.properties) &&
+        straddlers.exists(r => !GraftSplit.precedenceSafe(Seq(r), snapshot)))
+      throw new UnsupportedOperationException(
+        "graft DELETE on a 'graft.dedupKeys' table: the boundary " +
+          "rewrite would re-stamp kept rows above newer versions of " +
+          "the same keys (latest-wins orders by _graft_region_id). " +
+          "Align the interval to region boundaries, or run " +
+          "CALL graft.sys.compact first to fold versions.")
+    if (in.isEmpty && straddlers.isEmpty) return
     // phase 2 (no lock): rewrite the boundary regions, dropping rows
     // inside the interval set. Straddlers of a contiguous range are
     // the <=2 boundary regions REGARDLESS of table size, so a
     // row-at-a-time local rewrite is the right cost model — the same
-    // region-local work the reference's region server would do.
-    val rewritten: Seq[(RegionMeta, RegionMeta)] = straddlers.flatMap(r =>
-      rewriteRegion(tableDir, meta, r, ivs).map(r -> _))
-    // phase 3 (under the lock): re-classify against the CURRENT state
-    // (concurrent appends are carried forward untouched) and swap.
-    TableMeta.withManifestLock(tableDir) {
-      val (state, viewSeq) = TableMeta.commitView(tableDir)
-      val present = state.regions.map(_.file).toSet
-      if (!straddlers.forall(r => present.contains(r.file))) {
-        // a concurrent compaction/delete replaced a region we rewrote —
-        // our rewrite is stale; give up loudly rather than guess
-        rewritten.foreach { case (_, rw) =>
-          new File(tableDir, rw.file).delete() }
-        throw new IllegalStateException(
-          "graft DELETE lost a race with a concurrent compaction or " +
-            "delete on the same regions; retry the DELETE")
-      }
-      val (in, out) = partitionRegions(state.regions, ivs)
-      val stradNow = straddlersOf(out, ivs)
-      guardDedupRewrite(stradNow, state.regions, () =>
-        rewritten.foreach { case (_, rw) =>
-          new File(tableDir, rw.file).delete() })
+    // region-local work the reference's region server would do. Each
+    // rewrite's lineage is its source's id (srcMaxId, like compaction
+    // rewrites): a tailing stream that already consumed the original
+    // skips the rewrite instead of re-reading the kept rows as new data.
+    val rewritten = straddlers.flatMap(r =>
+      rewriteRegion(tableDir, meta, r, ivs).map(_.copy(srcMaxId = r.id)))
+    // phase 3: re-classify against the CURRENT state (concurrent
+    // appends outside the range are carried forward untouched) and
+    // swap; with no straddlers the whole delete is a metadata edit.
+    // Deleted regions retire (files kept one compaction cycle for
+    // in-flight readers).
+    TableMeta.replaceRegions(tableDir, "delete", rewritten) { state =>
+      TableMeta.stillLive("graft DELETE", straddlers)(state)
+      val (inNow, outNow) = partitionRegions(state.regions, ivs)
+      val stradNow = straddlersOf(outNow, ivs)
       // a region appended BETWEEN our phases may straddle the delete
       // range; we hold no rewrite for it, and retiring it unrewritten
       // would lose its kept rows — fail loudly instead. (A concurrent
       // append fully INSIDE the range is safe to drop: all its rows
       // match the predicate, the delete just ordered after the insert.)
       val processed = straddlers.map(_.file).toSet
-      if (stradNow.exists(r => !processed.contains(r.file))) {
-        rewritten.foreach { case (_, rw) =>
-          new File(tableDir, rw.file).delete() }
+      if (stradNow.exists(r => !processed(r.file)))
         throw new IllegalStateException(
           "graft DELETE lost a race with a concurrent append into the " +
             "deleted key range; retry the DELETE")
-      }
-      val strad = stradNow.map(_.file).toSet
-      val dropped = in ++ out.filter(r => strad.contains(r.file))
-      // stamp fresh stable ids and mark each rewrite with its source id
-      // (srcMaxId, like compaction rewrites): a tailing stream that
-      // already consumed the original skips the rewrite instead of
-      // re-reading the kept rows as new data, and the id counter stays
-      // collision-free (an id-0 region would collide through the
-      // legacy position-based id synthesis on the next manifest load)
-      var next = state.nextId
-      val outs = rewritten.map { case (src, rw) =>
-        val o = rw.copy(id = next, srcMaxId = src.id); next += 1; o
-      }
-      // O(touched) delta segment, CAS'd at the view's seq: removes the
-      // contained + straddling originals, adds the boundary rewrites
-      TableMeta.writeDelta(tableDir, viewSeq,
-        regions = outs,
-        removeIds = dropped.map(_.id).toSet,
-        retiredAdd = dropped,
-        gen = state.gen + 1,
-        op = "delete")
+      inNow ++ stradNow
     }
   }
 

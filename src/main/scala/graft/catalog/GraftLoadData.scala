@@ -398,8 +398,8 @@ case class GraftLoadDataCommand(catalogName: String, namespace: String,
   * load in ONE write (one shuffled, sorted region write), not a
   * per-file loop: at ingest scale the statement cost is one
   * bulk load plus an O(ledger) pre-filter. File-identity memory rides
-  * the epoch ledger's compaction aging window
-  * (`graft.epochRetainGenerations`, default 64 compaction cycles) —
+  * the epoch ledger's aging window (`graft.epochRetainGenerations`,
+  * default 64 manifest generations; every rewrite bumps one) —
   * bounded like Delta's COPY INTO retention, not eternal. */
 case class GraftCopyIntoCommand(catalogName: String, table: String,
     path: String, format: String, pattern: Option[String])

@@ -38,10 +38,12 @@ import graft.codec.KeyCodec
   * newest data and passes.
   *
   * Commit protocol identical to [[GraftSplit]]: rewrite without the
-  * lock (one Spark task per group), swap under the manifest lock with
-  * an O(touched) delta; sources retire one compaction cycle with
-  * `srcMaxId` lineage so tailing streams skip the merged data; races
-  * with concurrent compaction/delete/cluster abandon cleanly.
+  * lock (one Spark task per group), swap through
+  * [[TableMeta.replaceRegions]] with an O(touched) delta; sources
+  * retire one compaction cycle with `srcMaxId` lineage so tailing
+  * streams skip the merged data; races with concurrent
+  * compaction/delete/cluster abandon cleanly, and on a `dedupKeys`
+  * table so does a newer overlapping append that landed mid-merge.
   */
 object GraftMerge {
 
@@ -103,30 +105,11 @@ object GraftMerge {
       .map(g => g -> mergeGroup(dirPath, meta, g, fold))
       .collect().toSeq
 
-    // phase 3 (under the lock): verify the snapshot still stands, swap
-    TableMeta.withManifestLock(t.tableDir) {
-      val (state, viewSeq) = TableMeta.commitView(t.tableDir)
-      val present = state.regions.map(_.file).toSet
-      if (!results.forall(_._1.forall(r => present.contains(r.file)))) {
-        results.foreach { case (_, m) =>
-          new File(t.tableDir, m.file).delete() }
-        throw new IllegalStateException(
-          "graft merge lost a race with a concurrent compaction, " +
-            "cluster, or delete on the same regions; retry the CALL")
-      }
-      var next = state.nextId
-      val outs = results.map { case (g, m) =>
-        val srcMax = g.map(r => if (r.srcMaxId >= 0) r.srcMaxId else r.id).max
-        val o = m.copy(id = next, srcMaxId = srcMax); next += 1; o
-      }
-      val sources = results.flatMap(_._1)
-      TableMeta.writeDelta(t.tableDir, viewSeq,
-        regions = outs,
-        removeIds = sources.map(_.id).toSet,
-        retiredAdd = sources,
-        gen = state.gen + 1,
-        op = "merge")
-    }
+    // phase 3: swap the merged files in for their sources, which
+    // must all still be live; each output covers its group's data
+    TableMeta.replaceRegions(t.tableDir, "merge",
+      results.map { case (g, m) => m.copy(srcMaxId = g.map(_.covers).max) })(
+      TableMeta.stillLive("graft merge", results.flatMap(_._1)))
     cat.invalidateTable(ident)
     (results.size, results.map(_._1.size).sum)
   }

@@ -100,8 +100,9 @@ object GraftProcedures {
   val All: Seq[Proc] = Seq(
 
     Proc("load_csv",
-      "bulk-load a delimited text file into a graft table " +
-        "(range-shuffled sorted region load; short lines null-backfill)",
+      "bulk-load a delimited text file into a graft table (sorted " +
+        "region load, shuffled by region on a regionSplits table and by " +
+        "sampled key range otherwise; short lines null-backfill)",
       Seq(tableParam, param("path", StringType, "CSV file or directory"),
         param("delimiter", StringType, default = "','"))) {
       (catalogName, input) =>
@@ -115,7 +116,8 @@ object GraftProcedures {
 
     Proc("compact",
       "rewrite a graft table's regions into target_regions key-sorted " +
-        "files and bump the manifest generation",
+        "files (at most one region per bucket on a regionSplits table) " +
+        "and bump the manifest generation",
       Seq(tableParam, param("target_regions", IntegerType))) {
       (catalogName, input) =>
         val (ns, t) = splitNsTable(input.getUTF8String(0).toString)

@@ -25,9 +25,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    are as key-sorted and bucket-stamped as bulk-loaded ones and the
   *    table's key-grouped plans survive any number of UPDATEs;
   *  - a commit that atomically swaps exactly the scanned regions for
-  *    the rewritten files under the manifest lock, retiring originals
-  *    one compaction cycle (same protocol as DELETE/compaction) and
-  *    bumping the generation.
+  *    the rewritten files through [[TableMeta.replaceRegions]] (the
+  *    one commit DELETE and compaction use too), retiring originals
+  *    one compaction cycle and bumping the generation.
   *
   * The reference reaches update semantics only through Put-upsert on
   * whole rows (`HBaseRelation.scala:659-723`); expression-level UPDATE
@@ -124,46 +124,18 @@ class GraftReplaceWrite(tableDir: File, meta: TableMeta,
     override def createBatchWriterFactory(info: PhysicalWriteInfo)
         : DataWriterFactory = GraftCommits.factory(tableDir, meta)
 
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val newRegions = GraftCommits.withBlockHosts(tableDir,
-        GraftCommits.commits(messages))
-      // the regions the (runtime-filtered) scan actually read — the
-      // rewrite's output is exactly their replacement
-      val replaced = op.scan.selectedRegions.map(_.file).toSet
-      // nothing scanned, nothing written: a no-match operation leaves
-      // the manifest (and generation) untouched
-      if (replaced.isEmpty && newRegions.isEmpty) return
-      TableMeta.withManifestLock(tableDir) {
-        val (state, viewSeq) = TableMeta.commitView(tableDir)
-        val present = state.regions.map(_.file).toSet
-        if (!replaced.forall(present.contains)) {
-          // a concurrent compaction/DELETE replaced a region we
-          // rewrote; swapping ours in would resurrect or lose rows
-          GraftCommits.deleteFiles(tableDir, messages)
-          throw new IllegalStateException(
-            "graft row-level operation lost a race with a concurrent " +
-              "compaction or delete on the same regions; retry")
-        }
-        val dropped = state.regions.filter(r => replaced.contains(r.file))
-        var next = state.nextId
-        // srcMaxId stays -1: unlike a compaction rewrite these files
-        // carry CHANGED data — a tailing stream should see them
-        val outs = newRegions.map { r =>
-          val o = r.copy(id = next); next += 1; o
-        }
-        // an O(touched-regions) delta segment, CAS'd at the view's
-        // seq: a 2-region UPDATE on a 100k-region table logs 2
-        // regions, and a racer since the view surfaces as a lost race
-        // (re-validated on retry under `cas`) instead of being built
-        // over
-        TableMeta.writeDelta(tableDir, viewSeq,
-          regions = outs,
-          removeIds = dropped.map(_.id).toSet,
-          retiredAdd = dropped,
-          gen = state.gen + 1,
-          op = "rowlevel") // a rewrite, like DELETE/compaction
-      }
-    }
+    // swap the regions the (runtime-filtered) scan actually read for
+    // the rewrite — an O(touched) delta, so a 2-region UPDATE on a
+    // 100k-region table logs 2 regions; one replaced meanwhile by a
+    // concurrent compaction/DELETE fails the commit as a lost race.
+    // srcMaxId stays -1: unlike a compaction rewrite these files carry
+    // CHANGED data — a tailing stream should see them. A no-match
+    // operation (nothing scanned, nothing written) commits nothing.
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      TableMeta.replaceRegions(tableDir, "rowlevel",
+        GraftCommits.withBlockHosts(tableDir, GraftCommits.commits(messages)))(
+        TableMeta.stillLive("graft row-level operation",
+          op.scan.selectedRegions))
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
       GraftCommits.deleteFiles(tableDir, messages)

@@ -28,14 +28,16 @@ import graft.codec.KeyCodec
   * Three phases like [[GraftDelete.deleteWhere]]: snapshot candidates,
   * rewrite WITHOUT the lock (one Spark task per oversized region —
   * region files live on storage every scan task can read, so the
-  * rewrite parallelizes across executors), then swap under the
-  * manifest lock with an O(touched) delta. Sources retire (files kept
-  * one compaction cycle for tailing streams) and the parts carry
-  * `srcMaxId` lineage exactly like delete's boundary rewrites, so a
-  * stream that already consumed the original never re-reads its rows
-  * as new data. A race with a concurrent compaction/delete/cluster
-  * that replaced a candidate abandons cleanly (outputs deleted, loud
-  * retry), and concurrent appends are carried forward untouched.
+  * rewrite parallelizes across executors), then swap through
+  * [[TableMeta.replaceRegions]] with an O(touched) delta. Sources
+  * retire (files kept one compaction cycle for tailing streams) and the
+  * parts carry `srcMaxId` lineage exactly like delete's boundary
+  * rewrites, so a stream that already consumed the original never
+  * re-reads its rows as new data. A race with a concurrent
+  * compaction/delete/cluster that replaced a candidate abandons
+  * cleanly (outputs deleted, loud retry), and concurrent appends are
+  * carried forward untouched (on a `dedupKeys` table, a newer one
+  * overlapping a candidate abandons the split the same way).
   *
   * Fixed-bucket tables split too: parts inherit the source's bucket
   * id, and the scan already groups multiple regions per bucket (the
@@ -136,31 +138,12 @@ object GraftSplit {
       parts.foreach(p => new File(tableDir, p.file).delete()) }
     if (split.isEmpty) return (0, 0)
 
-    // phase 3 (under the lock): verify the snapshot still stands, swap
-    TableMeta.withManifestLock(tableDir) {
-      val (state, viewSeq) = TableMeta.commitView(tableDir)
-      val present = state.regions.map(_.file).toSet
-      if (!split.forall { case (src, _) => present.contains(src.file) }) {
-        split.foreach { case (_, parts) =>
-          parts.foreach(p => new File(tableDir, p.file).delete()) }
-        throw new IllegalStateException(
-          "graft split lost a race with a concurrent compaction, " +
-            "cluster, or delete on the same regions; retry the CALL")
-      }
-      var next = state.nextId
-      val outs = split.flatMap { case (src, parts) =>
-        parts.map { p =>
-          val o = p.copy(id = next, srcMaxId = src.id); next += 1; o
-        }
-      }
-      val sources = split.map(_._1)
-      TableMeta.writeDelta(tableDir, viewSeq,
-        regions = outs,
-        removeIds = sources.map(_.id).toSet,
-        retiredAdd = sources,
-        gen = state.gen + 1,
-        op = "split")
-    }
+    // phase 3: swap the parts in for their sources, which must all
+    // still be live; each part's lineage is its source's id
+    TableMeta.replaceRegions(tableDir, "split",
+      split.flatMap { case (src, parts) =>
+        parts.map(_.copy(srcMaxId = src.id)) })(
+      TableMeta.stillLive("graft split", split.map(_._1)))
     (split.size, split.map(_._2.size).sum)
   }
 

@@ -3,9 +3,13 @@ package graft.catalog
 import java.io.File
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.codec.KeyCodec
 
 /** Catalog metadata for one graft table, persisted as JSON files inside
   * the table directory.
@@ -51,7 +55,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final case class RegionMeta(file: String, rows: Long,
     mins: Seq[String], maxs: Seq[String], bucket: Int = -1,
     host: String = "", id: Long = 0L, srcMaxId: Long = -1L,
-    stats: Map[String, ColStat] = Map.empty)
+    stats: Map[String, ColStat] = Map.empty) {
+
+  /** The highest original region id whose data this region holds: its
+    * `srcMaxId` when it is a rewrite, else its own id. A rewrite of a
+    * set of regions carries the max of their `covers` as its
+    * `srcMaxId`. */
+  def covers: Long = if (srcMaxId >= 0) srcMaxId else id
+}
 
 final case class TableMeta(schema: StructType, keyCols: Seq[String],
     properties: Map[String, String]) {
@@ -445,10 +456,10 @@ object TableMeta {
     stateCache.remove(new File(tableDir, RegionsFile).getCanonicalPath)
   }
 
-  /** Manifest generation: bumped by compaction (which rewrites the
-    * region set), preserved by appends. Streaming offsets carry it so a
-    * checkpoint taken before a compaction fails loudly instead of
-    * re-reading or mis-slicing rewritten regions. */
+  /** Manifest generation: bumped by every rewrite of the region set
+    * ([[replaceRegions]]), preserved by appends. Streaming offsets
+    * carry it so a checkpoint taken before a rewrite fails loudly
+    * instead of re-reading or mis-slicing rewritten regions. */
   def loadGeneration(tableDir: File): Long =
     loadState(tableDir).gen // cache hit on repeated polls
 
@@ -473,11 +484,12 @@ object TableMeta {
   /** Full manifest state. `epochs` = per-streaming-query last committed
     * epoch, the dedup ledger that makes the native streaming sink
     * effectively exactly-once (a replayed epoch after a restart is
-    * recognized and skipped). `retired` = regions rewritten by the most
-    * recent compaction, files retained on disk for one compaction cycle
-    * so a tailing stream checkpointed before the compaction can still
-    * read the original data it had not yet consumed. `nextId` = the
-    * next stable region id to assign. */
+    * recognized and skipped). `retired` = regions replaced since the
+    * last compaction, cluster or INSERT OVERWRITE (a new-cycle
+    * [[replaceRegions]]), files retained on disk until the next one or
+    * a vacuum so a tailing stream checkpointed before the rewrite can
+    * still read the original data it had not yet consumed. `nextId` =
+    * the next stable region id to assign. */
   final case class ManifestState(gen: Long, regions: Seq[RegionMeta],
       epochs: Map[String, EpochEntry],
       retired: Seq[RegionMeta] = Nil, nextId: Long = 1L)
@@ -969,7 +981,7 @@ object TableMeta {
     * nothing commits and the caller re-plans against the refreshed
     * ledger (the conflicting files are exactly the ones someone else
     * just loaded). Rides the same epoch-ledger machinery as the
-    * streaming sink, including its compaction aging window
+    * streaming sink, including its aging window
     * ([[GraftCompact.EpochRetainProp]]) — file-identity memory is
     * bounded, like Delta's COPY INTO retention, not eternal. */
   def commitCopy(tableDir: File, added: Seq[RegionMeta],
@@ -994,25 +1006,131 @@ object TableMeta {
     loadLoaded(tableDir).state.epochs.keySet
 
   /** INSERT OVERWRITE's commit: atomically replace the entire live
-    * region set with `added`. Mirrors compaction's swap discipline —
-    * the displaced regions RETIRE (files kept one cycle for in-flight
-    * readers and vacuum), the previous retired set ages out, the
-    * generation bumps so tailing streams fail loudly instead of
-    * mis-slicing, and the epoch ledger + id counter carry forward
-    * (old ids are never re-served — a batch CDC range across the
-    * overwrite therefore delivers exactly the NEW rows as appends,
-    * the displaced rows being a delete CDC never delivers, consistent
-    * with the DELETE contract). One swap segment
-    * CAS'd at the view's seq: a commit that landed since the view
-    * surfaces as a lost race, not a clobber. */
+    * region set with `added` — a new-cycle [[replaceRegions]] of every
+    * live region. The displaced regions RETIRE (files kept one cycle
+    * for in-flight readers), the previous retired set ages out (its
+    * files deleted, tag-pinned ones kept), the generation bumps so
+    * tailing streams fail loudly instead of mis-slicing, and the id
+    * counter carries forward (old ids are never re-served — a batch
+    * CDC range across the overwrite therefore delivers exactly the NEW
+    * rows as appends, the displaced rows being a delete CDC never
+    * delivers, consistent with the DELETE contract). */
   def overwriteRegions(tableDir: File, added: Seq[RegionMeta]): Unit =
-    withManifestLock(tableDir) {
+    replaceRegions(tableDir, "overwrite", added, newCycle = true)(_.regions)
+
+  /** The one region-replace commit every rewrite goes through:
+    * compaction, cluster, merge, split, DELETE, UPDATE / MERGE INTO and
+    * INSERT OVERWRITE (in the reference, HBase's region server owns
+    * this lifecycle and the SQL layer never swaps a region itself).
+    * Under one manifest lock and one commit view:
+    *
+    *  - `pick` chooses the live regions that `outputs` replace, against
+    *    the current view, and throws when the caller's snapshot no
+    *    longer stands ([[stillLive]] is the common check);
+    *  - on a `graft.dedupKeys` table latest-wins precedence is
+    *    re-checked against the regions left live ([[latestWinsHolds]]),
+    *    so a newer overlapping commit that landed mid-rewrite is never
+    *    outranked by the rewrite's fresh ids;
+    *  - `outputs` get fresh ids (their `srcMaxId` lineage is set by the
+    *    caller), the replaced regions retire, the generation bumps;
+    *  - the commit is an O(touched) delta segment, or with `newCycle`
+    *    (compaction, cluster, INSERT OVERWRITE) a full-state SWAP that
+    *    opens a new retention cycle: the previous retired set ages out
+    *    except files a tag pins ([[pinnedFiles]]), epoch-ledger entries
+    *    untouched for [[GraftCompact.EpochRetainProp]] generations
+    *    drop, and the aged files are deleted after the commit.
+    *
+    * Any failure before the commit point (a lost race, a refused
+    * precedence check, a lost CAS) deletes the files of `outputs`, so
+    * an abandoned rewrite leaves nothing behind. Replacing nothing
+    * with nothing commits nothing. */
+  private[catalog] def replaceRegions(tableDir: File, op: String,
+      outputs: Seq[RegionMeta], newCycle: Boolean = false)(
+      pick: ManifestState => Seq[RegionMeta]): Unit = {
+    var committed = false
+    val aged = try withManifestLock(tableDir) {
       val (cur, viewSeq) = commitView(tableDir)
-      val (rs, next) = stamped(added.map(_.copy(id = 0L)), cur.nextId)
-      saveStateAt(tableDir, viewSeq, ManifestState(
-        cur.gen + 1, rs, cur.epochs, cur.regions, next),
-        op = "overwrite")
-      evictManifestCache(tableDir)
+      val replaced = pick(cur)
+      if (replaced.isEmpty && outputs.isEmpty) Nil
+      else {
+        val gone = replaced.map(_.id).toSet
+        val untouched = cur.regions.filterNot(r => gone(r.id))
+        val props = load(tableDir).properties
+        if (dedupKeys(props) &&
+            !latestWinsHolds(replaced, outputs, untouched))
+          throw new IllegalStateException(
+            s"$op of ${tableDir.getName} lost a race with a newer " +
+              "overlapping commit: its rewrite would outrank that " +
+              "commit's rows under latest-wins; retry")
+        val (outs, next) = stamped(outputs.map(_.copy(id = 0L)), cur.nextId)
+        val gen = cur.gen + 1
+        if (newCycle) {
+          val pinned = pinnedFiles(tableDir)
+          val (pin, age) = cur.retired.partition(r => pinned(r.file))
+          val retain = props.get(GraftCompact.EpochRetainProp)
+            .map(_.toLong).getOrElse(64L)
+          val epochs = cur.epochs.filter(_._2.touchedGen >= gen - retain)
+          writeSegment(tableDir, viewSeq + 1L, SegmentDelta(Nil, Map.empty,
+            swap = Some(ManifestState(gen, outs ++ untouched, epochs,
+              replaced ++ pin, next)), op = op))
+          committed = true
+          writeCheckpoint(tableDir)
+          age
+        } else {
+          writeSegment(tableDir, viewSeq + 1L, SegmentDelta(outs, Map.empty,
+            gone, replaced, gen = gen, op = op))
+          committed = true
+          maybeCheckpoint(tableDir)
+          Nil
+        }
+      }
+    } catch {
+      case NonFatal(e) if !committed =>
+        outputs.foreach(r => new File(tableDir, r.file).delete())
+        throw e
+    }
+    aged.foreach(r => new File(tableDir, r.file).delete())
+  }
+
+  /** The common `pick`: the live copies of the caller's `snapshot`
+    * regions, or a lost-race [[IllegalStateException]] when any of them
+    * was replaced since (a concurrent compaction, cluster, merge, split
+    * or delete) — swapping in a rewrite of a region that is gone would
+    * resurrect deleted rows or duplicate rewritten ones. */
+  private[catalog] def stillLive(what: String, snapshot: Seq[RegionMeta])(
+      state: ManifestState): Seq[RegionMeta] = {
+    val want = snapshot.map(_.file).toSet
+    val live = state.regions.filter(r => want(r.file))
+    if (live.size != want.size) throw new IllegalStateException(
+      s"$what lost a race with a concurrent compaction, cluster, merge, " +
+        "split or delete on the same regions; retry")
+    live
+  }
+
+  /** Latest-wins survives replacing `replaced` by `outputs` (which take
+    * the highest ids) iff no region left live is newer than a replaced
+    * region it overlaps while also overlapping an output: that region's
+    * version of a shared key won before the rewrite and would lose to
+    * the output's fresh id after it. Leading-key bounds, like
+    * [[GraftSplit.precedenceSafe]], which callers use to choose safe
+    * targets from their snapshot; this re-check at commit catches the
+    * commits that landed since. */
+  private def latestWinsHolds(replaced: Seq[RegionMeta],
+      outputs: Seq[RegionMeta], untouched: Seq[RegionMeta]): Boolean =
+    replaced.isEmpty || outputs.isEmpty || {
+      def bounds(r: RegionMeta) =
+        (KeyCodec.fromHex(r.mins.head), KeyCodec.fromHex(r.maxs.head))
+      def overlap(a: (Array[Byte], Array[Byte]),
+          b: (Array[Byte], Array[Byte])): Boolean =
+        KeyCodec.compare(a._1, b._2) <= 0 && KeyCodec.compare(b._1, a._2) <= 0
+      val minId = replaced.map(_.id).min
+      val srcs = replaced.map(r => (r.id, bounds(r)))
+      val outs = outputs.map(bounds)
+      untouched.iterator.filter(_.id > minId).forall { r =>
+        val b = bounds(r)
+        !(outs.exists(overlap(_, b)) &&
+          srcs.exists { case (id, s) => id < r.id && overlap(s, b) })
+      }
     }
 
   // ------------------------------------------------------- time travel

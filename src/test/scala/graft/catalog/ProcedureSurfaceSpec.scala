@@ -28,11 +28,13 @@ class ProcedureSurfaceSpec extends AnyFunSuite {
   /** name → (description, parameters), in registry order. */
   private val Expected: Seq[(String, String, Seq[P])] = Seq(
     ("load_csv", "bulk-load a delimited text file into a graft table " +
-      "(range-shuffled sorted region load; short lines null-backfill)",
+      "(sorted region load, shuffled by region on a regionSplits table " +
+      "and by sampled key range otherwise; short lines null-backfill)",
       Seq(tbl(), str("path", "CSV file or directory"),
         P("delimiter", StringType, None, Some("','")))),
     ("compact", "rewrite a graft table's regions into target_regions " +
-      "key-sorted files and bump the manifest generation",
+      "key-sorted files (at most one region per bucket on a regionSplits " +
+      "table) and bump the manifest generation",
       Seq(tbl(), P("target_regions", IntegerType))),
     ("cluster", "rewrite a graft table's regions z-ordered by the given " +
       "columns (multi-dimensional clustering for non-key stat pruning)",
