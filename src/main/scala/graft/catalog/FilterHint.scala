@@ -30,15 +30,15 @@ object FilterHint {
   val OptionKey = "graft.filterHint"
 
   /** Parse the hint into V1 filters; unconvertible conjuncts drop.
-    * With a schema, provably-safe integral-widening casts are first
-    * narrowed away (see [[narrowWideningCasts]]) so hints like
+    * With a schema, integral literals first take their integral
+    * column's type ([[alignIntegralLiterals]]), so hints like
     * `CAST(day AS BIGINT) = 20240101` still skip. */
   def parse(hint: String, schema: Option[StructType] = None)
       : Array[sources.Filter] = {
     val expr = SparkSession.active.sessionState.sqlParser
       .parseExpression(hint)
     splitConjuncts(expr)
-      .map(c => schema.fold(c)(narrowWideningCasts(c, _)))
+      .map(c => schema.fold(c)(alignIntegralLiterals(c, _)))
       .flatMap(toSource).toArray
   }
 
@@ -60,13 +60,15 @@ object FilterHint {
     case _ => Literal(v, LongType)
   }
 
-  /** Rewrite `CAST(c AS wider-integral) cmp lit` to `c cmp lit'` when
-    * the cast is a pure integral widening (order- AND
-    * equality-preserving, unlike the narrowing casts [[Col]] refuses)
-    * and the literal converts to the column's type exactly. A literal
-    * outside the narrow type's range leaves the conjunct untranslated
-    * (dropped — sound, merely less skipping). */
-  private def narrowWideningCasts(e: Expression, schema: StructType)
+  /** Rewrite `c cmp lit` and `CAST(c AS wider-integral) cmp lit` on an
+    * integral column `c` to `c cmp lit'`, `lit'` being the literal in
+    * `c`'s own type: the parser types `3` as INT, and Spark's parquet
+    * filter converter pushes nothing for a value of another type than
+    * the column's. The cast must be a pure integral widening (order-
+    * AND equality-preserving, unlike the narrowing casts [[Col]]
+    * refuses). A literal outside `c`'s type leaves the conjunct as it
+    * was (a cast form then drops — sound, merely less skipping). */
+  private def alignIntegralLiterals(e: Expression, schema: StructType)
       : Expression = {
     def colType(a: Attribute): Option[DataType] =
       schema.fields.collectFirst {
@@ -77,39 +79,35 @@ object FilterHint {
         case (Some(a), Some(b)) => a <= b
         case _ => false
       }
-    def litLong(l: Expression): Option[Long] =
+    // a bare integral column, or one under a pure integral widening
+    // cast, with the column's type
+    object IntCol {
+      def unapply(e: Expression): Option[(Attribute, DataType)] = e match {
+        case a: Attribute => colType(a).filter(intRank.contains).map(a -> _)
+        case Cast(a: Attribute, wide, _, _) =>
+          colType(a).filter(widens(_, wide)).map(a -> _)
+        case _ => None
+      }
+    }
+    def typedLit(l: Expression, dt: DataType): Option[Literal] =
       if (!l.foldable) None
-      else l.eval(null) match {
+      else (l.eval(null) match {
         case b: Byte => Some(b.toLong)
         case s: Short => Some(s.toLong)
         case i: Int => Some(i.toLong)
         case v: Long => Some(v)
         case _ => None
-      }
+      }).filter(fits(_, dt)).map(narrowLit(_, dt))
     e transform {
-      case cmp @ BinaryComparison(Cast(a: Attribute, wide, _, _), rhs) =>
-        (colType(a), litLong(rhs)) match {
-          case (Some(narrow), Some(v))
-              if widens(narrow, wide) && fits(v, narrow) =>
-            cmp.withNewChildren(Seq(a, narrowLit(v, narrow)))
-          case _ => cmp
-        }
-      case cmp @ BinaryComparison(lhs, Cast(a: Attribute, wide, _, _)) =>
-        (colType(a), litLong(lhs)) match {
-          case (Some(narrow), Some(v))
-              if widens(narrow, wide) && fits(v, narrow) =>
-            cmp.withNewChildren(Seq(narrowLit(v, narrow), a))
-          case _ => cmp
-        }
-      case in @ In(Cast(a: Attribute, wide, _, _), list) =>
-        colType(a) match {
-          case Some(narrow) if widens(narrow, wide) =>
-            val vs = list.map(litLong)
-            if (vs.forall(_.exists(fits(_, narrow))))
-              In(a, vs.map(v => narrowLit(v.get, narrow)))
-            else in
-          case _ => in
-        }
+      case cmp @ BinaryComparison(IntCol(a, dt), rhs)
+          if typedLit(rhs, dt).isDefined =>
+        cmp.withNewChildren(Seq(a, typedLit(rhs, dt).get))
+      case cmp @ BinaryComparison(lhs, IntCol(a, dt))
+          if typedLit(lhs, dt).isDefined =>
+        cmp.withNewChildren(Seq(typedLit(lhs, dt).get, a))
+      case in @ In(IntCol(a, dt), list) =>
+        val vs = list.map(typedLit(_, dt))
+        if (vs.forall(_.isDefined)) In(a, vs.flatten) else in
     }
   }
 

@@ -29,8 +29,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * [[DataSourceV2Relation]]s — the normal V2 pushdown then turns the
   * index probe into a key-pruned point scan (c leads the index key),
   * and the runtime-filter machinery hands the probe's key set to the
-  * base scan (region pruning + reader-level page-skip envelope, see
-  * SecondaryIndexSpec). The residual filter on top keeps answers exact
+  * base scan (region pruning + reader-level page skipping through
+  * parquet's `in` predicate, see SecondaryIndexSpec). The residual filter on top keeps answers exact
   * under every edge (duplicate base keys, index entries for sibling
   * rows), so the rewrite is safe whenever it fires; the freshness gate
   * makes firing complete (no false negatives: every matching row has

@@ -465,7 +465,7 @@ object GraftProcedures {
       * — the probe is a key-pruned point scan on the index (1 region),
       * and the broadcast join hands the matching primary keys to the base
       * scan as a runtime IN filter: regions prune by key interval, and
-      * inside surviving regions the IN envelope drives row-group/page
+      * inside surviving regions the IN predicate drives row-group/page
       * skipping. At 100 TB that is index-probe + point-gets, never a
       * base scan. The index records the base's commit version
       * ([[TableMeta.IndexedVersionProp]]) as its freshness watermark;

@@ -1405,8 +1405,8 @@ class GraftScan(tableDir: File, meta: TableMeta, required: StructType,
     // Runtime (DPP) filters join the reader predicate too: they are
     // sound row filters (Spark still executes the actual join above),
     // and on a key column they turn a broadcast-probe join into
-    // page-level point gets inside the surviving regions — large IN
-    // sets become a [min,max] envelope in toParquetFilter.
+    // page-level point gets inside the surviving regions — a large IN
+    // set becomes parquet's native `in` predicate (ParquetRowIO.fileFilter).
     GraftReaderFactory(required.json,
       if (!groupMode && GraftAccel.on(GraftAccel.ParquetFilters))
         filters ++ runtimeFilters

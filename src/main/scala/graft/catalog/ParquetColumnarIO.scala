@@ -24,14 +24,16 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * Spark-native bar is higher — Spark's own parquet source decodes
   * whole column pages into `ColumnarBatch`es that feed whole-stage
   * codegen through a single `ColumnarToRow` boundary. Region files are
-  * plain parquet (written by [[ParquetRowIO.RowWriter]], always
-  * modern-calendar MICROS timestamps), so we reuse Spark's
+  * plain parquet (written by Spark's own `ParquetWriteSupport` through
+  * [[ParquetRowIO.RowWriter]], always modern-calendar MICROS
+  * timestamps), so we reuse Spark's
   * `VectorizedParquetRecordReader` directly: dictionary-aware decoding,
   * lazy materialization, and Spark's contract for columns absent from
   * an older file (ALTER TABLE ADD COLUMN): null, or the column's
   * EXISTS_DEFAULT. Row-at-a-time consumers iterate `rows()`.
   *
-  * Pushed filters become parquet `FilterPredicate`s for row-group and
+  * Pushed filters become parquet `FilterPredicate`s (Spark's
+  * `ParquetFilters`, [[ParquetRowIO.fileFilter]]) for row-group and
   * page (column-index) skipping only — the vectorized reader never
   * filters record-at-a-time, and Spark re-applies every pushed filter
   * above the scan, so skipping stays best-effort and exactness never
@@ -103,14 +105,13 @@ object ParquetColumnarIO {
     try {
       val footer = ParquetFileReader.readFooter(in,
         HadoopReadOptions.builder(conf, path).build(), stream)
-      // pushed predicate rebuilt per file against the columns the file
+      // pushed predicate built per file against the columns the file
       // actually has (ALTER-added columns are absent from older
-      // regions; see ParquetRowIO.toFileFilter); set before the reader
-      // takes its read options from the conf
-      if (filters.nonEmpty)
-        ParquetRowIO.toFileFilter(filters, required,
-          footer.getFileMetaData.getSchema)
-          .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
+      // regions); set before the reader takes its read options from
+      // the conf
+      ParquetRowIO.fileFilter(filters, footer.getFileMetaData.getSchema,
+        caseSensitive)
+        .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
       reader.initialize(
         new FileSplit(path, 0, in.getLength, Array.empty[String]),
         new TaskAttemptContextImpl(conf, new TaskAttemptID()),

@@ -57,8 +57,9 @@ final class RegionStats(schema: StructType, keyIdx: Array[Int]) {
 }
 
 /** Writes one region file and accounts its manifest entry: a
-  * [[ParquetRowIO.RowWriter]] plus [[RegionStats]]. Rows must arrive in
-  * key order; `write` takes the row's encoded key dimensions. */
+  * [[ParquetRowIO.RowWriter]] (Spark's `ParquetWriteSupport`, the one
+  * region codec) plus [[RegionStats]]. Rows must arrive in key order;
+  * `write` takes the row's encoded key dimensions. */
 final class RegionWriter(dir: String, val fileName: String,
     schema: StructType, keyIdx: Array[Int], pageRowLimit: Int,
     bloomCols: Seq[String], val bucket: Int) {

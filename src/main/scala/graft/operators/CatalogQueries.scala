@@ -2340,8 +2340,8 @@ object CatalogQueries {
     * index table instead of a base scan. The probe is a key-pruned
     * point scan on the index (o_custkey leads its key), and the
     * broadcast join hands the matching o_orderkeys to the base scan
-    * as a runtime IN filter — region pruning by key interval plus a
-    * page-skip envelope inside surviving regions (SecondaryIndexSpec
+    * as a runtime IN filter — region pruning by key interval plus
+    * page skipping inside surviving regions (SecondaryIndexSpec
     * asserts both). At 100 TB: index-probe + point-gets, never a
     * base scan — the access path the reference's HBase lineage lacks
     * for non-rowkey predicates. Oracle: the plain filter. */

@@ -1,9 +1,15 @@
 package graft.catalog
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Embedding (ARRAY<FLOAT>) and media-payload (BINARY) columns stored
   * IN graft tables — the SURVEY §1.5 extension goal: the LLM pipeline's
@@ -11,7 +17,7 @@ import graft.TestSpark
   * sidecars. Key columns stay atomic (KeyCodec orders atomic encodings
   * only); the new types are non-key cells.
   */
-class CatalogVectorSpec extends AnyFunSuite {
+class CatalogVectorSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def ns(): Unit =
@@ -301,5 +307,61 @@ class CatalogVectorSpec extends AnyFunSuite {
         new String(r.get(2).asInstanceOf[Array[Byte]]))).sortBy(_._1)
     assert(after.toSeq == before.toSeq)
     spark.sql("DROP TABLE graft.vec.c")
+  }
+
+  test("region files ignore the session's parquet write settings") {
+    ns()
+    spark.sql("DROP TABLE IF EXISTS graft.vec.cal")
+    spark.sql(
+      """CREATE TABLE graft.vec.cal (
+        |  id BIGINT, d DATE, ts TIMESTAMP, dec DECIMAL(30,5), arr ARRAY<INT>)
+        |TBLPROPERTIES('keyCols'='id')""".stripMargin)
+    val row = (id: Int, arr: String) =>
+      s"""($id, DATE'1500-01-01', TIMESTAMP'1500-01-01 00:00:00',
+         |  CAST(-1234567890123456789012.34567 AS DECIMAL(30,5)), $arr)"""
+        .stripMargin
+    // the shuffled write job's input: a parquet file, written before the
+    // legacy settings are on
+    val src = s"${tempDir("graft-vec-cal").getPath}/src"
+    spark.sql(s"SELECT * FROM VALUES ${row(3, "array(1, NULL)")}, " +
+        s"${row(4, "array()")} AS v(id, d, ts, dec, arr)")
+      .write.parquet(src)
+    TestSpark.withConf(
+        "spark.sql.parquet.datetimeRebaseModeInWrite" -> "LEGACY",
+        "spark.sql.parquet.int96RebaseModeInWrite" -> "LEGACY",
+        "spark.sql.parquet.outputTimestampType" -> "INT96") {
+      // driver-side local write, then the task-side write job
+      spark.sql(s"INSERT INTO graft.vec.cal VALUES ${row(1, "array(1, NULL)")}, " +
+        row(2, "array()"))
+      spark.sql(s"INSERT INTO graft.vec.cal SELECT * FROM parquet.`$src`")
+    }
+    val got = spark.sql(
+      """SELECT id, CAST(d AS STRING), CAST(ts AS STRING),
+        |  CAST(dec AS STRING), arr FROM graft.vec.cal""".stripMargin)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getSeq[Any](4).toList)).sortBy(_._1)
+    val day = ("1500-01-01", "1500-01-01 00:00:00",
+      "-1234567890123456789012.34567")
+    assert(got.toSeq == Seq(
+      (1L, day._1, day._2, day._3, List(1, null)),
+      (2L, day._1, day._2, day._3, Nil),
+      (3L, day._1, day._2, day._3, List(1, null)),
+      (4L, day._1, day._2, day._3, Nil)))
+
+    val dir = new java.io.File(s"${TestSpark.warehouse}/vec/cal")
+    val files = TableMeta.loadRegions(dir).map(r => new java.io.File(dir, r.file))
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(f.getPath), new Configuration()))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      assert(!meta.getKeyValueMetaData.containsKey(
+        "org.apache.spark.legacyDateTime"), f)
+      val ts = meta.getSchema.getColumnDescription(Array("ts")).getPrimitiveType
+      assert(ts.getPrimitiveTypeName == PrimitiveTypeName.INT64, f)
+      assert(ts.getLogicalTypeAnnotation == LogicalTypeAnnotation
+        .timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS), f)
+    }
+    spark.sql("DROP TABLE graft.vec.cal")
   }
 }

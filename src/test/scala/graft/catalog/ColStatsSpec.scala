@@ -542,6 +542,22 @@ class ColStatsSpec extends AnyFunSuite with graft.TempDirs {
     })
     // upper(tag) = 'X' has no translation → dropped, not mis-translated
     assert(fs.length == 5)
+    // with the schema, an INT literal on a BIGINT column carries a Long,
+    // the column's own value type that parquet pushdown needs (== alone
+    // cannot tell: Scala compares boxed 3 and 3L equal)
+    val day = StructType(Seq(StructField("day", LongType)))
+    val typed = FilterHint.parse("day = 3 AND 4 > day AND day IN (1, 2)",
+      Some(day))
+    assert(typed.toSeq == Seq(sources.EqualTo("day", 3L),
+      sources.LessThan("day", 4L), sources.In("day", Array[Any](1L, 2L))))
+    val values = typed.toSeq.flatMap {
+      case sources.EqualTo(_, v) => Seq(v)
+      case sources.LessThan(_, v) => Seq(v)
+      case sources.In(_, vs) => vs.toSeq
+      case other => fail(s"unexpected $other")
+    }
+    assert(values.length == 4 &&
+      values.forall(_.isInstanceOf[java.lang.Long]), values)
   }
 
   test("filter-hint refuses narrowing translations (casts, escaped LIKE)") {

@@ -164,8 +164,15 @@ class GraftSplitSpec extends AnyFunSuite {
     spark.sql("INSERT INTO graft.spl.dedup " +
       "SELECT id, 2.0 FROM range(1000, 1100)")
     val dir = tableDir("dedup")
+    // the target sits between the two file sizes: the base is a split
+    // candidate by size, the 100-row overlay (whose footer carries
+    // Spark's ~1 KB schema metadata) is not
+    val target = 4096L
+    val sizes = TableMeta.loadRegions(dir).map(r =>
+      r.rows -> new java.io.File(dir, r.file).length()).toMap
+    assert(sizes(3000L) > target && sizes(100L) <= target, sizes)
     val r = spark.sql("CALL graft.sys.split(table => 'spl.dedup', " +
-      "target_bytes => 1024L)").head()
+      s"target_bytes => ${target}L)").head()
     val regions = TableMeta.loadRegions(dir)
     // the big base region is still whole; only the small overlay was a
     // candidate (and is under target, so nothing split at all)

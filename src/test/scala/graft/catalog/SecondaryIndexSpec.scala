@@ -15,8 +15,8 @@ import graft.TestSpark
   * (a) answer exactly like a direct filter, and (b) actually prune the
   * base side: the broadcast hands the matching keys to the base scan
   * as a runtime IN filter, which prunes regions by key interval and
-  * (since round 9) reaches the parquet readers as a [min,max] envelope
-  * for page-level skipping. That is the access path the reference's
+  * reaches the parquet readers as parquet's `in` predicate for
+  * row-group and page-level skipping. That is the access path the reference's
   * HBase lineage lacks for non-rowkey predicates (a non-rowkey filter
   * scans every region there).
   */
@@ -111,18 +111,22 @@ class SecondaryIndexSpec extends AnyFunSuite with graft.TempDirs {
     assert(parts <= 2, s"expected runtime key pruning to <=2 regions, got $parts")
   }
 
-  test("large IN sets convert to a [min,max] envelope for the readers") {
-    val schema = StructType(Seq(StructField("k", LongType)))
+  test("large IN sets push to the readers as parquet's in predicate") {
+    val fileSchema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { optional int64 k; }")
+    def push(f: sources.Filter) =
+      ParquetRowIO.fileFilter(Seq(f), fileSchema, caseSensitive = false)
     val in = sources.In("k", (100L to 160L).map(Long.box).toArray[Any])
-    assert(ParquetRowIO.toParquetFilter(Seq(in), schema).isDefined,
-      "IN with >20 values should produce a range-envelope predicate")
-    // nulls never match IN — dropped from the envelope, still sound
+    assert(push(in).isDefined,
+      "IN with >10 values should produce parquet's in predicate")
+    // nulls never match IN; a null among the values still pushes
     val withNull = sources.In("k",
       ((100L to 160L).map(Long.box) :+ null).toArray[Any])
-    assert(ParquetRowIO.toParquetFilter(Seq(withNull), schema).isDefined)
-    // all-null set: no envelope (and the filter matches nothing anyway)
+    assert(push(withNull).isDefined)
+    // all-null set: nothing pushed, and no throw (the filter matches
+    // nothing anyway)
     val allNull = sources.In("k", Array.fill[Any](25)(null))
-    assert(ParquetRowIO.toParquetFilter(Seq(allNull), schema).isEmpty)
+    assert(push(allNull).isEmpty)
   }
 
   test("indexing a key column or unknown column is refused") {
