@@ -17,11 +17,12 @@ import graft.TestSpark
   *    no hash Exchange at all; the bench face's extra cost is its
   *    live recall GATE (brute-force exact top-k — a verification
   *    artifact by design, not the production query).
-  *  - `agg_percentile_exact` is the two-aggregation bracket-sketch
-  *    algorithm: NO global sort / range partitioning anywhere — at
-  *    100 TB it is two scans, not a terabyte sort. Since r12 the
-  *    rank pass also collects the contract-bounded bracket slices,
-  *    so its bench time is TWO driver-sequenced jobs, pure floor.
+  *  - `agg_percentile_exact` is the bracket-sketch algorithm as two
+  *    scan loops (sketch, then exact ranks): NO global sort / range
+  *    partitioning anywhere — at 100 TB it is two scans, not a
+  *    terabyte sort. The rank loop also collects the contract-bounded
+  *    bracket slices, so the face is TWO driver-sequenced one-stage
+  *    jobs with no exchange, pure floor.
   *  - `catalog_tpch_q15` (r12 shape) attaches the max as an
   *    unpartitioned window over the per-supplier revenue — ONE fact
   *    aggregation (the scalar-subquery form re-scanned and
@@ -81,11 +82,19 @@ class StageFloorSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("agg_percentile_exact: no global sort, no range partitioning — " +
-      "the exact answer comes from aggregations only") {
-    val df = Quantiles.exactPercentiles(
-      spark.read.parquet(s"$sf/lineitem.parquet"), "l_extendedprice",
-      Seq(0.25, 0.5, 0.75, 0.95))
+  test("agg_percentile_exact: 2 jobs, no shuffle, no global sort") {
+    val face = Extended.queries("agg_percentile_exact")
+    face(spark, sf).collect() // warm: the source's schema is memoized
+    var df: DataFrame = null
+    val pass = TestSpark.ledger.record({
+      df = face(spark, sf); df.collect()
+    })
+    // the sketch loop and the rank loop, one stage each; the fused
+    // resolve answers from a local relation (the distributed refine
+    // would add a window job with an exchange)
+    assert(pass.row.jobs == 2, s"jobs: ${pass.row}")
+    assert(pass.row.stages == 2, s"stages: ${pass.row}")
+    assert(pass.row.shuffleMb == 0.0, s"shuffle: ${pass.row}")
     val plan = executed(df)
     assert(!plan.contains("rangepartitioning"),
       s"range partitioning (global sort) in the percentile plan:\n$plan")
